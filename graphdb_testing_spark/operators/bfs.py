@@ -9,12 +9,15 @@ model (``tests/sqlite/test.c:210-233``)::
       FROM edges JOIN distance ON edges.src = distance.vtx
       WHERE distance.dist = d       -- until 0 rows inserted
 
-Spark-first design: the frontier is a small DataFrame joined against
-the (pre-partitioned, cached) edge table; visited-set subtraction is a
-``left_anti`` join; the per-level ``count()`` doubles as both the
-convergence test and the frontier materialization.  Frontier sizes
-printed by the reference per level (``test.c:226-227``) are returned
-for parity checks.
+Spark-first design: with a broadcast state, a semi-naive level loop
+over the reached vertices ``(id, dist, active)``, ``active`` marking
+the last level's frontier: a round keeps the self-loop rows of
+``edges ∪ self-loops`` and rows from active senders, and takes
+``min(own dist, sender dist + 1)`` — the ``WHERE distance.dist = d``
+frontier, with the visited-set subtraction folded into the min.  Above
+the broadcast threshold the frontier loop joins each new frontier
+against the edges and subtracts the visited set with a ``left_anti``
+join.  Per-level sizes (``test.c:226-227``) come from :func:`bfs_levels`.
 """
 
 from __future__ import annotations
@@ -22,7 +25,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .util import iter_partitions, local_input, record_fast_path, state_hint
+from .util import (
+    broadcasts,
+    checkpoint_active,
+    iter_partitions,
+    local_input,
+    min_round,
+    record_fast_path,
+    self_loop_relation,
+    state_hint,
+    vertex_ids,
+)
 
 #: edge-row bound for the single-task fast path (~16 B/row ⇒ ≤128 MB
 #: in one task); past it the level-synchronous DataFrame loop runs
@@ -319,54 +332,64 @@ def bfs(
 ) -> DataFrame:
     """``(id, dist)`` hop distances from ``source`` over a symmetric
     edge table; unreachable vertices are absent (reference leaves them
-    at "infinity", i.e. not in the ``distance`` table)."""
-    spark = edges.sparkSession
-    # narrow coalesce (no shuffle, no copy of the cached table): level
-    # cost on small graphs is task scheduling, so right-size to ~250k
-    # edge rows per task
-    e = edges.select("src", "dst")
+    at "infinity", i.e. not in the ``distance`` table).  With a
+    broadcast state the distributed loop runs ``checkpoint_every``
+    semi-naive levels per chunk until a chunk reaches no new vertex;
+    above the threshold it runs :func:`_frontier_bfs`."""
     ne = edges.count()
     record_fast_path("bfs", ne <= LOCAL_NE_MAX)
     if ne <= LOCAL_NE_MAX:
         # guarded single-task fast path (round-10): per-level cost at
         # sf0.1 is scheduling + broadcast latency, not compute — see
         # _local_bfs; identical integer levels, cluster-scale graphs
-        # take the frontier loop below
-        return _local_bfs(e, source, max_depth)
-    # narrow-id loop (round-11, guide §2.3 "narrower types"): each
-    # level joins the full edge relation against the frontier — above
-    # the broadcast threshold that is one edge-table exchange per
-    # level.  When every id provably fits int32 (min/max over src — a
-    # symmetric table's src covers every vertex), run the loop on int
-    # ids and cast the final output back: identical integer levels,
-    # half the shuffled key bytes.  64-bit hash ids keep the long loop.
+        # take the loops below
+        return _local_bfs(edges.select("src", "dst"), source, max_depth)
     id_type = edges.schema["src"].dataType.simpleString()
-    narrow = False
-    if id_type == "bigint":
-        r = e.agg(F.min("src").alias("lo"), F.max("src").alias("hi")).collect()[0]
-        narrow = (
-            r["lo"] is not None
-            and int(r["lo"]) >= -(2**31)
-            and int(r["hi"]) <= 2**31 - 1
-        )
-    if narrow:
-        e = e.select(
-            F.col("src").cast("int").alias("src"),
-            F.col("dst").cast("int").alias("dst"),
-        )
-    e = e.coalesce(iter_partitions(ne))
-    dist = spark.createDataFrame(
-        [(source, 0)], f"id {'int' if narrow else 'long'}, dist int"
-    ).localCheckpoint()
+    # the int32 check covers the source too
+    ids, nv, key = vertex_ids(edges, source)
+    dist = edges.sparkSession.range(1).select(
+        F.lit(source).cast(key).alias("id"), F.lit(0).alias("dist")
+    )
+    if not broadcasts(nv):
+        e = edges.select(F.col("src").cast(key).alias("src"), F.col("dst").cast(key).alias("dst"))
+        dist = _frontier_bfs(e.coalesce(iter_partitions(ne)), dist, max_depth, checkpoint_every)
+    else:
+        # the source's own self-loop keeps its (source, 0) row when it
+        # has no edges
+        rel = self_loop_relation(edges, ids, key, ne, nv, source=source)
+        dist = dist.withColumn("active", F.lit(True))
+        depth = 0
+        while depth < max_depth:
+            k = min(checkpoint_every, max_depth - depth)
+            chunk_start = dist
+            for _ in range(k):
+                dist = min_round(rel, dist, nv, "dist", 1)
+            dist, active = checkpoint_active(dist)
+            chunk_start.unpersist()
+            depth += k
+            if active == 0:
+                break
+        rel.unpersist()
+    ids.unpersist()
+    return dist.select(F.col("id").cast(id_type).alias("id"), "dist")
+
+
+def _frontier_bfs(
+    e: DataFrame, dist: DataFrame, max_depth: int, checkpoint_every: int
+) -> DataFrame:
+    """The frontier loop, kept for a shuffled state (``nv`` above the
+    broadcast threshold), where the semi-naive rounds are not measured:
+    each level joins the edges against the last frontier, subtracts the
+    visited set with a ``left_anti`` join, and its ``count()`` is both
+    the convergence test and the frontier's materialization."""
     frontier = dist
     depth = 0
     reached = 1
     while depth < max_depth:
         depth += 1
-        # one job per level: the frontier count doubles as the
-        # convergence test and the materialization of the expansion.
-        # frontier and visited-set are O(nv) — broadcast both so the
-        # edge table never moves (shuffle fallback above the threshold)
+        # frontier and visited set are broadcast while they are small,
+        # so the edge table stays put (shuffle fallback past the
+        # threshold)
         nxt = (
             e.join(state_hint(frontier, reached), e.src == frontier.id)
             .select(F.col("dst").alias("id"))
@@ -386,8 +409,6 @@ def bfs(
         if depth % checkpoint_every == 0:
             dist = dist.localCheckpoint()
         frontier = nxt
-    if narrow:
-        dist = dist.select(F.col("id").cast(id_type).alias("id"), "dist")
     return dist
 
 

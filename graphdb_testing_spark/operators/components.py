@@ -10,21 +10,26 @@ number of distinct labels.  (Reference
 
 Spark-first design
 ------------------
-* One round = ``edges ⋈ labels`` on ``dst`` → ``groupBy(src).min`` —
-  a single shuffle of the small O(nv) label side when edges are
-  pre-partitioned on ``src`` (see :meth:`Graph.canonical`); Catalyst
-  broadcast-joins the label side automatically when it fits.
-* Pointer-jumping (labels self-join) halves the round count on
-  high-diameter graphs, same as the reference's jump step.
-* Convergence is detected by the monotone decrease of
-  ``SUM(label)`` (labels only ever decrease, so an unchanged sum ⇔
-  fixpoint) — one scalar aggregate per round instead of a
-  change-count join, mirroring the convergence-scalar pattern of
-  ``tests/sqlite/test.c:180``.  The sum is aggregated as
-  ``DECIMAL(38,0)`` so it cannot overflow even at 2^63-scale ids.
-* ``localCheckpoint`` every ``checkpoint_every`` rounds truncates
-  lineage (the Spark analog of Pegasus's per-stage HDFS
-  materialization, ``tests/pegasus/sssp/SSSP.java:302-310``).
+* One round = ``relation ⋈ labels`` on ``dst`` → ``groupBy(src).min``
+  over the constant relation ``edges ∪ self-loops``; the self-loop row
+  carries a vertex's own label, so the label state is referenced once
+  per round (:func:`~graphdb_testing_spark.operators.util.min_round`).
+  When the labels are broadcast, the relation is hash-partitioned on
+  ``src`` and persisted once, so a round is one narrow stage with no
+  exchange (:func:`~graphdb_testing_spark.operators.util.round_layout`).
+* Semi-naive (broadcast labels): the state carries an ``active`` flag
+  (label dropped in the last round), a round keeps only self-loop rows
+  and rows from active senders — the same integer fixpoint from fewer
+  joined rows — and the loop stops when a chunk plus its jump leaves
+  no vertex active, counted in the chunk's ``localCheckpoint`` job.
+* Shuffled labels (above the broadcast threshold) and the
+  ``dst_partitioned`` layout keep the naive rounds and stop when a
+  chunk leaves ``SUM(label)`` unchanged.
+* Pointer-jumping (labels self-join) once per chunk halves the round
+  count on high-diameter graphs, same as the reference's jump step.
+* ``localCheckpoint`` every ``unroll`` rounds truncates lineage (the
+  Spark analog of Pegasus's per-stage HDFS materialization,
+  ``tests/pegasus/sssp/SSSP.java:302-310``).
 """
 
 from __future__ import annotations
@@ -32,7 +37,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .util import iter_partitions, local_input, record_fast_path, state_hint
+from .util import (
+    broadcasts,
+    checkpoint_active,
+    local_input,
+    min_round,
+    record_fast_path,
+    self_loop_relation,
+    state_hint,
+    vertex_ids,
+)
 
 #: edge-row bound for the single-task fast path (~16 B/row ⇒ ≤128 MB
 #: in one task); past it the unrolled DataFrame loop runs
@@ -108,7 +122,9 @@ def connected_components(
     round is a single ``join + groupBy.min`` with no merge-back join.
     One self-reference per round ⇒ the unrolled lazy plan grows
     **linearly** in ``unroll`` (a state-referenced-twice formulation
-    grows 2^k and stalls Catalyst beyond a handful of rounds).
+    grows 2^k and stalls Catalyst beyond a handful of rounds).  With
+    broadcast labels only vertices whose label dropped in the previous
+    round send messages.
 
     Pointer jumping (``label[v] := label[label[v]]``,
     ``static_components.c:30-37``) runs once per chunk on the
@@ -116,18 +132,12 @@ def connected_components(
     it collapses chains on high-diameter graphs without paying the
     exponential in-chunk plan tax.
 
-    Convergence: labels only ever decrease, so an unchanged
-    ``SUM(label)`` ⇔ fixpoint — one scalar per chunk, aggregated as
-    ``DECIMAL(38,0)`` so it cannot overflow at 2^63-scale ids
-    (convergence-scalar pattern of ``tests/sqlite/test.c:180``).
+    Convergence: with broadcast labels the loop stops after the first
+    chunk (plus jump) that leaves no vertex active — labels only ever
+    decrease, so no active vertex ⇔ fixpoint; otherwise see
+    :func:`_sum_test_loop`.  Ids that all fit int32 run the loop on int
+    keys; the output is cast back to the input type.
     """
-    # constant relation: edges + self-loops (min over it ⇒ least(own,
-    # nbrs)), right-sized so each iteration task owns ~250k edge rows.
-    # The union stays LAZY: both inputs are already materialized (the
-    # ids table is checkpointed here, the edge table by the caller),
-    # so each round re-reads them through a narrow union instead of
-    # paying an up-front materialization of a second full edge copy
-    # (measured 52.8s -> 36.9s for CC on the 16M-edge medium graph).
     ne = edges.count()
     record_fast_path("components", not dst_partitioned and ne <= LOCAL_NE_MAX)
     if not dst_partitioned and ne <= LOCAL_NE_MAX:
@@ -140,115 +150,91 @@ def connected_components(
         # guard).  Parity-tested in tests/test_components_local.py;
         # cluster-scale graphs take the unrolled loop below.
         return _local_components(edges.select("src", "dst"))
-    ids = (
-        edges.select(F.col("src").alias("id")).distinct().localCheckpoint()
-    )
-    # narrow-id loop (round-11, guide §2.3 "narrower types"): every
-    # per-round exchange of this loop carries vertex ids — the 280 M
-    # join-input rows AND the partial-min aggregates.  When every id
-    # provably fits int32 (one tiny min/max over the materialized ids
-    # table), run the whole loop on int keys and cast the final labels
-    # back to the input type: the min-label fixpoint is identical
-    # integers either way, so results are bit-identical while the
-    # shuffled key bytes halve.  Ids past int32 (e.g. 64-bit hash ids
-    # at 100 TB) keep the long loop — the check IS the scale path's
-    # guard, not a local tweak.
-    from .util import ids_fit_int32
-
     id_type = edges.schema["src"].dataType.simpleString()
-    ids_ck = ids  # checkpointed handle (unpersisted at the end)
-    narrow = id_type == "bigint" and ids_fit_int32(ids)
-    if narrow:
-        ids = ids.select(F.col("id").cast("int").alias("id"))
-        e_rel = edges.select(
-            F.col("src").cast("int").alias("src"),
-            F.col("dst").cast("int").alias("dst"),
-        )
-    else:
-        e_rel = edges.select("src", "dst")
-    e_self = e_rel.unionAll(
-        ids.select(F.col("id").alias("src"), F.col("id").alias("dst"))
+    ids, nv, key = vertex_ids(edges)
+    rel = self_loop_relation(edges, ids, key, ne, nv, dst_partitioned=dst_partitioned)
+    labels = ids.select(
+        F.col("id").cast(key).alias("id"), F.col("id").cast(key).alias("label")
     )
-    if dst_partitioned:
-        # bucketed-layout variant: materialize the constant relation
-        # hash-partitioned on the per-round join key.  persist() (not
-        # localCheckpoint — LogicalRDD drops outputPartitioning to
-        # Unknown, measured) keeps the HashPartitioning visible to
-        # EnsureRequirements, so every round's join reads the edge
-        # side with NO Exchange (the in-session equivalent of a
-        # dst-bucketed store, ``sources/bucketed.py``) and only the
-        # O(nv) label side shuffles.  The trade: the layout freezes the
-        # power-law dst skew that AQE would otherwise split per round,
-        # and the union materializes a second full edge copy up front —
-        # measured A/B at SCALE (see BENCHMARKS.md) decides, not theory.
-        e_self = e_self.repartition(iter_partitions(ne), "dst").persist()
-        e_self.count()
+    if dst_partitioned or not broadcasts(nv):
+        labels = _sum_test_loop(rel, labels, nv, max_iter, unroll, pointer_jump)
     else:
-        e_self = e_self.coalesce(iter_partitions(ne))
-    labels = ids.withColumn("label", F.col("id")).localCheckpoint()
-    nv = labels.count()
-    prev_sum = labels.agg(
-        F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-    ).collect()[0]["s"]
+        labels = labels.withColumn("active", F.lit(True))
+        done = 0
+        while done < max_iter:
+            k = min(unroll, max_iter - done)
+            chunk_start = labels
+            for _ in range(k):
+                labels = min_round(rel, labels, nv, "label", 0)
+            if pointer_jump:
+                labels = _pointer_jump(labels.localCheckpoint(), nv)
+            labels, active = checkpoint_active(labels)
+            chunk_start.unpersist()
+            done += k
+            if active == 0:
+                break
+    ids.unpersist()
+    rel.unpersist()
+    return labels.select(
+        F.col("id").cast(id_type).alias("id"),
+        F.col("label").cast(id_type).alias("label"),
+    )
 
-    # opt-in chunk profile (SPARK_GRAFT_CC_PROFILE=1): one stderr line
-    # per unrolled chunk with its wall seconds — the discriminator
-    # between "every round got slower" (ambient/platform) and "extra
-    # or pathological rounds appeared" (plan/convergence), at zero
-    # cost when off
-    import os as _os
-    import sys as _sys
-    import time as _time
 
-    _prof = _os.environ.get("SPARK_GRAFT_CC_PROFILE") == "1"
+def _pointer_jump(labels: DataFrame, nv: int) -> DataFrame:
+    """``label[v] := label[label[v]]`` on materialized labels (O(1) plan
+    size here); with an ``active`` column, a vertex whose label drops
+    becomes active."""
+    parents = labels.select(F.col("id").alias("p_id"), F.col("label").alias("p_label"))
+    cols = ["id", F.coalesce("p_label", "label").alias("label")]
+    if "active" in labels.columns:
+        jumped = F.coalesce(F.col("p_label") < F.col("label"), F.lit(False))
+        cols.append((F.col("active") | jumped).alias("active"))
+    return labels.join(
+        state_hint(parents, nv), labels.label == parents.p_id, "left"
+    ).select(*cols)
 
+
+def _sum_test_loop(
+    rel: DataFrame,
+    labels: DataFrame,
+    nv: int,
+    max_iter: int,
+    unroll: int,
+    pointer_jump: bool,
+) -> DataFrame:
+    """The naive loop, kept for a shuffled label state (``nv`` above the
+    broadcast threshold) and for the ``dst_partitioned`` layout, where
+    the semi-naive rounds are not measured: every round joins the whole
+    relation, and the loop stops when a chunk leaves ``SUM(label)``
+    unchanged (labels only decrease, so an unchanged sum ⇔ fixpoint;
+    aggregated as ``DECIMAL(38,0)`` so 2^63-scale ids cannot overflow —
+    the convergence scalar of ``tests/sqlite/test.c:180``)."""
+
+    def label_sum(df: DataFrame):
+        s = df.agg(F.sum(F.col("label").cast("decimal(38,0)")).alias("s"))
+        return s.collect()[0]["s"]
+
+    prev_sum = label_sum(labels)
     done = 0
     while done < max_iter:
-        _t0 = _time.time()
         k = min(unroll, max_iter - done)
         chunk_start = labels
         for _ in range(k):
             labels = (
-                e_self.join(state_hint(labels, nv), e_self.dst == labels.id)
+                rel.join(state_hint(labels, nv), rel.dst == labels.id)
                 .groupBy(F.col("src").alias("id"))
                 .agg(F.min("label").alias("label"))
             )
         labels = labels.localCheckpoint()
         if pointer_jump:
-            # one cheap jump on materialized labels: O(1) plan size here
-            parents = labels.select(
-                F.col("id").alias("p_id"), F.col("label").alias("p_label")
-            )
-            labels = (
-                labels.join(
-                    state_hint(parents, nv), labels.label == parents.p_id, "left"
-                )
-                .select("id", F.coalesce("p_label", "label").alias("label"))
-                .localCheckpoint()
-            )
+            labels = _pointer_jump(labels, nv).localCheckpoint()
         done += k
-        cur_sum = labels.agg(
-            F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
+        cur_sum = label_sum(labels)
         chunk_start.unpersist()
-        if _prof:
-            print(
-                f"[cc-profile] chunk rounds {done - k + 1}..{done} "
-                f"(+jump): {_time.time() - _t0:.1f}s "
-                f"converged={cur_sum == prev_sum}",
-                file=_sys.stderr,
-            )
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
-    ids_ck.unpersist()
-    if dst_partitioned:
-        e_self.unpersist()
-    if narrow:
-        labels = labels.select(
-            F.col("id").cast(id_type).alias("id"),
-            F.col("label").cast(id_type).alias("label"),
-        )
     return labels
 
 

@@ -22,16 +22,20 @@ Spark-first design
   ``prd`` directly — no merge-back join against old state or the
   degree table.  One state reference per round ⇒ the unrolled lazy
   plan grows **linearly** in the unroll factor; one join per round ⇒
-  one broadcast + one narrow shuffle per round, the measured floor
-  on local mode (the dropped second join halved round latency).
+  one state broadcast per round (the dropped second join halved
+  round latency).
 * No left join is needed to re-instate message-less vertices: the
   edge table is symmetric, so every vertex with degree ≥ 1 receives
   at least one message, and degree-0 vertices don't exist in the
   canonical edge relation.
-* The edge relation is coalesced to ``iter_partitions(ne)`` tasks
-  (~250k edge rows each) — per-round cost on small graphs is task
-  scheduling, not compute, and the same sizing formula yields
-  thousands of tasks at 100 TB.
+* The edge relation is laid out by
+  :func:`~graphdb_testing_spark.operators.util.round_layout` in
+  ``iter_partitions(ne)`` tasks (~250k edge rows each): with a
+  broadcast state it is hash-partitioned on ``src`` and persisted, so
+  the ``groupBy(src)`` needs no exchange and a round is one narrow
+  stage; above the threshold it is a uniform coalesce.  Per-round cost
+  on small graphs is task scheduling, not compute, and the same sizing
+  formula yields thousands of tasks at 100 TB.
 * ``unroll`` rounds compose into one lazy plan materialized by a
   single eager ``localCheckpoint`` (truncates lineage; driver job
   scheduling is the per-round floor, so fewer/bigger jobs win).
@@ -49,7 +53,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .util import iter_partitions, local_input, record_fast_path, state_hint
+from .util import (
+    INT32_MAX,
+    INT32_MIN,
+    iter_partitions,
+    local_input,
+    record_fast_path,
+    round_layout,
+    state_hint,
+    vertex_summary,
+)
 
 
 #: edge-row bound for the single-task PageRank fast path: the edge
@@ -183,7 +196,7 @@ def pagerank(
     tol: float = 1e-8,
     max_iter: int = 100,
     num_iter: int | None = None,
-    unroll: int = 10,  # one broadcast + one shuffle per round; chunk
+    unroll: int = 10,  # one state broadcast per round; chunk
     # cost is ~linear in unroll, so 10 mainly amortizes delta checks
     init_ranks: DataFrame | None = None,
     dst_partitioned: bool = False,
@@ -229,74 +242,46 @@ def pagerank(
         return _local_pagerank(
             e, damping, tol, max_iter, num_iter, unroll, init_ranks
         )
-    deg = (
-        e.groupBy(F.col("src").alias("id"))
-        .agg(F.count("*").alias("degree"))
-        .localCheckpoint()
+    # narrow-id loop (round-11, guide §2.3 "narrower types"): when ids
+    # AND degrees fit int32 (checked in the job that materializes the
+    # degree table), the loop's (id, dst, deg_src) bytes halve; rank
+    # arithmetic is unchanged and the output id is cast back.  64-bit
+    # hash ids at 100 TB keep the long loop — the check IS the guard.
+    deg, nv, narrow = vertex_summary(
+        e.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("degree")),
+        "id",
+        "degree",
     )
-    nv = deg.count()
     base = (1.0 - damping) / nv
-    # narrow-id loop (round-11, guide §2.3 "narrower types"): every
-    # per-round exchange carries (id, dst, deg_src) — when ids AND
-    # degrees provably fit int32 (one tiny aggregate over the already
-    # materialized degree table), the loop's shuffled key/metadata
-    # bytes halve; rank state stays double and the update arithmetic
-    # is unchanged.  The final output casts id back to the input type.
-    # Ids past int32 (64-bit hash ids at 100 TB) keep the long loop —
-    # the range check IS the guard, so this is the scale path, not a
-    # local-mode tweak.
     id_type = edges.schema["src"].dataType.simpleString()
-    narrow = False
-    if id_type == "bigint":
-        r = deg.agg(
-            F.min("id").alias("lo"),
-            F.max("id").alias("hi"),
-            F.max("degree").alias("dm"),
-        ).collect()[0]
-        narrow = (
-            r["lo"] is not None
-            and int(r["lo"]) >= -(2**31)
-            and int(r["hi"]) <= 2**31 - 1
-            and int(r["dm"]) <= 2**31 - 1
-        )
     if narrow:
-        deg = deg.select(
-            F.col("id").cast("int").alias("id"),
-            F.col("degree").cast("int").alias("degree"),
-        )
-        e = e.select(
-            F.col("src").cast("int").alias("src"),
-            F.col("dst").cast("int").alias("dst"),
-        )
+        as_int = lambda *cs: [F.col(c).cast("int").alias(c) for c in cs]  # noqa: E731
+        deg = deg.select(*as_int("id", "degree"))
+        e = e.select(*as_int("src", "dst"))
+        if init_ranks is not None:
+            # warm ids outside int32 match no vertex of a narrow graph;
+            # drop them before the cast, which would fail or wrap
+            init_ranks = init_ranks.where(
+                F.col("id").between(INT32_MIN, INT32_MAX)
+            ).select(*as_int("id"), "pr")
     deg_b = state_hint(deg, nv)
 
-    # constant relation: edges + degree-of-source, right-sized so each
-    # task owns ~250k edge rows.  Measured alternative (R-MAT scale
-    # 18, 4M edges, 40 iters): pre-hash-partitioning this table on
-    # ``dst`` in a cache so the per-round join needs no edge-side
-    # exchange ran 22.4s vs 17.9s for this uniform coalesce — the
-    # power-law dst distribution makes hash-by-dst partitions
-    # straggler-skewed, and AQE's skew splitting on the per-round
-    # exchange beats a skew-frozen layout.  Uniform slices win.
-    e2 = (
-        e.join(deg_b.withColumnRenamed("id", "src"), "src")
-        .select("src", "dst", F.col("degree").alias("deg_src"))
+    # constant relation: edges + degree-of-source (round_layout; a
+    # coalesce above the broadcast threshold is checkpointed once).
+    # Measured there (R-MAT scale 18, 4M edges, 40 iters): the
+    # ``dst_partitioned`` layout ran 22.4s vs 17.9s for the uniform
+    # coalesce — power-law dst skew freezes into its partitions, while
+    # AQE splits it per round.  SCALE-24 A/Bs re-measure the variant.
+    e2 = round_layout(
+        e.join(deg_b.withColumnRenamed("id", "src"), "src").select(
+            "src", "dst", F.col("degree").alias("deg_src")
+        ),
+        ne,
+        nv,
+        dst_partitioned,
     )
-    if dst_partitioned:
-        # bucketed-layout variant (same trade as in
-        # ``connected_components``): hash-partition the constant
-        # relation on the per-round join key and persist() it — cache,
-        # not localCheckpoint, because LogicalRDD drops
-        # outputPartitioning to Unknown (measured) while
-        # InMemoryRelation carries it — so the per-round join
-        # exchanges only the state side.  The scale-18 A/B in the
-        # comment above rejected this (skew-frozen layout vs AQE
-        # splitting); the SCALE-24 A/B re-measures where the effect
-        # is resolvable.
-        e2 = e2.repartition(iter_partitions(ne), "dst").persist()
-        e2.count()
-    else:
-        e2 = e2.coalesce(iter_partitions(ne)).localCheckpoint()
+    if not e2.is_cached:
+        e2 = e2.localCheckpoint()
 
     # state: (id, prd, degree) with prd = pr / degree; degree rides
     # along (constant per vertex, re-emitted by each round's agg) so
@@ -319,7 +304,7 @@ def pagerank(
     else:
         state = deg.select(
             "id", (F.lit(1.0 / nv) / F.col("degree")).alias("prd"), "degree"
-        ).localCheckpoint()
+        )
         check_every = 2
 
     total = num_iter if num_iter is not None else max_iter
@@ -331,9 +316,8 @@ def pagerank(
         checking = num_iter is None and (chunks + 1) % check_every == 0
         for i in range(k):
             # broadcast the O(nv) state so the big edge side never
-            # moves; the groupBy shuffles only partial aggregates and
-            # emits the next prd directly (deg_src is constant per
-            # group, so first() is exact)
+            # moves; the groupBy emits the next prd directly (deg_src
+            # is constant per group, so first() is exact)
             rnd = (
                 e2.join(state_hint(state, nv), e2.dst == state.id)
                 .select(
@@ -398,7 +382,7 @@ def pagerank(
         else:
             chunk_start.unpersist()
     out = state.select(
-        F.col("id").cast(id_type).alias("id") if narrow else F.col("id"),
+        F.col("id").cast(id_type).alias("id"),
         (F.col("prd") * F.col("degree")).alias("pr"),
     )
     e2.unpersist()

@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 #: Vertex-state DataFrames at or below this row count are broadcast in
@@ -24,9 +24,15 @@ def state_hint(df: DataFrame, nv: int | None) -> DataFrame:
     no Catalyst stats, so AQE cannot make this call on its own)."""
     if nv is None:
         return df  # size unknown and stats available — AQE decides
-    if nv <= BROADCAST_STATE_MAX_ROWS:
+    if broadcasts(nv):
         return F.broadcast(df)
     return df.hint("shuffle_hash")
+
+
+def broadcasts(nv: int) -> bool:
+    """True when an ``nv``-row vertex state is broadcast (the regime in
+    which the semi-naive one-stage rounds of CC and BFS run)."""
+    return nv <= BROADCAST_STATE_MAX_ROWS
 
 
 #: int32 value range — the narrow-id loop optimization (guide §2.3
@@ -35,21 +41,36 @@ INT32_MIN = -(2**31)
 INT32_MAX = 2**31 - 1
 
 
-def ids_fit_int32(ids_df: DataFrame, col: str = "id") -> bool:
-    """True when every value of ``col`` fits int32 — the provably-safe
-    precondition for running an iterative integer kernel's per-round
-    exchanges on int ids instead of long (halves the shuffled key
-    bytes, guide §2.3).  One tiny min/max aggregate over the (already
-    materialized) vertex relation; the caller casts the final output
-    back to long, so results are bit-identical."""
-    r = ids_df.agg(
-        F.min(col).alias("lo"), F.max(col).alias("hi")
-    ).collect()[0]
-    return (
-        r["lo"] is not None
-        and int(r["lo"]) >= INT32_MIN
-        and int(r["hi"]) <= INT32_MAX
+def observed_checkpoint(df: DataFrame, *metrics) -> tuple[DataFrame, dict]:
+    """``localCheckpoint`` ``df`` and read aggregate ``metrics`` over its
+    rows from the same Spark job (observed metrics, not a second
+    aggregate job — in a latency-bound loop every job counts)."""
+    obs = Observation()
+    df = df.observe(obs, *metrics).localCheckpoint()
+    return df, obs.get
+
+
+def vertex_summary(
+    df: DataFrame, *cols: str, also: tuple[int, ...] = ()
+) -> tuple[DataFrame, int, bool]:
+    """Checkpoint a vertex relation ``df`` (column ``id``) and return it
+    with ``nv`` (its row count) and ``narrow``: its ids are long but
+    every value of ``cols`` (and of ``also``) fits int32 — the safe
+    precondition for running an integer kernel's loop on int ids (half
+    the key bytes); callers cast the output back."""
+    df, r = observed_checkpoint(
+        df,
+        F.count(F.lit(1)).alias("nv"),
+        *[F.min(c).alias(f"lo_{c}") for c in cols],
+        *[F.max(c).alias(f"hi_{c}") for c in cols],
     )
+    nv = int(r.pop("nv"))
+    narrow = (
+        nv > 0
+        and df.schema["id"].dataType.simpleString() == "bigint"
+        and all(INT32_MIN <= int(v) <= INT32_MAX for v in (*r.values(), *also))
+    )
+    return df, nv, narrow
 
 
 #: Target edge rows per task for iterative kernels.  Iteration cost on
@@ -66,6 +87,115 @@ def iter_partitions(ne: int, cap: int = 2048) -> int:
     """Partition count for an ``ne``-row edge relation in an
     iterative kernel: one task per ~250k edge rows."""
     return max(1, min(cap, (ne + EDGE_ROWS_PER_PARTITION - 1) // EDGE_ROWS_PER_PARTITION))
+
+
+def round_layout(
+    rel: DataFrame, ne: int, nv: int, dst_partitioned: bool = False
+) -> DataFrame:
+    """Lay out the constant relation of an iterative kernel whose round
+    is ``rel ⋈ state ON rel.dst = state.id → groupBy(src)``.
+
+    With a broadcast state (``nv ≤ BROADCAST_STATE_MAX_ROWS``) the
+    relation is hash-partitioned on ``src`` and ``persist()``-ed once
+    (a localCheckpoint's LogicalRDD drops the partitioning, a cache
+    keeps it), so the ``groupBy(src)`` needs no Exchange: a round is
+    one narrow stage plus the state broadcast, one Spark job.  Above
+    the threshold the state shuffles anyway and the relation stays a
+    lazy ``coalesce`` to ~250k rows per task.  ``dst_partitioned`` is
+    the bucketed-layout A/B variant (hash on the join key instead).
+    Callers ``unpersist()`` the result."""
+    n = iter_partitions(ne)
+    if dst_partitioned:
+        rel = rel.repartition(n, "dst").persist()
+    elif broadcasts(nv):
+        # ≥ 2 partitions: a one-partition repartition plans as
+        # SinglePartition, which a cached scan reports as Unknown
+        rel = rel.repartition(max(2, n), "src").persist()
+    else:
+        # lazy: rounds re-read the materialized inputs through a narrow
+        # union instead of paying an up-front second edge copy (measured
+        # 52.8 s -> 36.9 s for CC on a 16M-edge graph)
+        return rel.coalesce(n)
+    # eager: a cache not yet built reports Unknown partitioning to the
+    # rounds planned on top of it, which would put the exchange back
+    rel.write.format("noop").mode("overwrite").save()
+    return rel
+
+
+def vertex_ids(edges: DataFrame, source: int | None = None) -> tuple[DataFrame, int, str]:
+    """``(ids, nv, key_type)`` of a symmetric edge table: ``ids`` is its
+    checkpointed distinct ``src`` as ``id`` (a symmetric table's src
+    covers every vertex), and the checkpoint job itself also gives
+    ``nv`` and the int32 check (``source`` included): ``key_type`` is
+    ``int`` when the loop can run on narrow ids."""
+    ids, nv, narrow = vertex_summary(
+        edges.select(F.col("src").alias("id")).distinct(),
+        "id",
+        also=() if source is None else (source,),
+    )
+    return ids, nv, "int" if narrow else ids.schema["id"].dataType.simpleString()
+
+
+def self_loop_relation(
+    edges: DataFrame,
+    ids: DataFrame,
+    key: str,
+    ne: int,
+    nv: int,
+    source: int | None = None,
+    dst_partitioned: bool = False,
+) -> DataFrame:
+    """The constant relation of the min-fixpoint loops (CC, BFS): the
+    edges plus one self-loop per vertex of ``ids`` and one for
+    ``source`` (so a source without edges keeps its row), keyed by
+    ``key`` (see :func:`vertex_ids`) and laid out by
+    :func:`round_layout`."""
+    loops = ids.select(F.col("id").cast(key).alias("src"))
+    if source is not None:
+        loops = loops.unionAll(
+            ids.sparkSession.range(1).select(F.lit(source).cast(key).alias("src"))
+        )
+    rel = edges.select(
+        F.col("src").cast(key).alias("src"), F.col("dst").cast(key).alias("dst")
+    ).unionAll(loops.select("src", F.col("src").alias("dst")))
+    return round_layout(rel, ne, nv, dst_partitioned)
+
+
+def min_round(rel: DataFrame, state: DataFrame, nv: int, col: str, step: int) -> DataFrame:
+    """One semi-naive min-propagation round over ``state (id, col,
+    active)``: of :func:`self_loop_relation` keep the self-loop rows and
+    rows from active senders (``dst``), then per ``src`` take ``min(own,
+    sender + step)``, active when it dropped (or first appeared).  The
+    own value rides in on the self-loop row, so the state is referenced
+    ONCE per round and an unrolled chunk's plan grows linearly.  Sending
+    only from changed vertices (Pregelix, VLDB 2014; GraphX, OSDI 2014)
+    reaches the same integer fixpoint: each value a vertex held was sent
+    the round after it was set, and values only decrease."""
+    loop = F.col("src") == F.col("dst")
+    val = F.col(col)
+    return (
+        rel.join(state_hint(state, nv), rel.dst == state.id)
+        .where(loop | F.col("active"))
+        .groupBy("src")
+        .agg(
+            F.min(F.when(loop, val).otherwise(val + step)).alias(col),
+            F.min(F.when(loop, val)).alias("own"),
+        )
+        .select(
+            F.col("src").alias("id"),
+            col,
+            (F.col("own").isNull() | (F.col(col) < F.col("own"))).alias("active"),
+        )
+    )
+
+
+def checkpoint_active(state: DataFrame) -> tuple[DataFrame, int]:
+    """``localCheckpoint`` a loop state carrying an ``active`` flag and
+    count its active rows in the same job."""
+    state, r = observed_checkpoint(
+        state, F.count(F.when(F.col("active"), 1)).alias("n")
+    )
+    return state, int(r["n"])
 
 
 #: Last guard decision per kernel family — observability ONLY.  The

@@ -250,3 +250,35 @@ def test_dst_partitioned_layout_parity_and_plan(spark, bridged_cliques):
         assert any("Exchange" in l for l in lines[si:]), tree  # state side
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+def test_broadcast_regime_round_has_no_exchange(spark, bridged_cliques):
+    """With a broadcast state, the semi-naive round relation is
+    hash-partitioned on ``src`` and persisted, so an unrolled chunk of
+    rounds plans no Exchange besides the state broadcasts (the
+    relation's own REPARTITION_BY_NUM exchange lives inside its cached
+    plan and runs once)."""
+    from pyspark.sql import functions as F
+
+    from graphdb_testing_spark.operators.util import (
+        min_round,
+        self_loop_relation,
+        vertex_ids,
+    )
+
+    ids, nv, key = vertex_ids(bridged_cliques)
+    rel = self_loop_relation(bridged_cliques, ids, key, bridged_cliques.count(), nv)
+    assert rel.is_cached and key == "int"
+    state = ids.select(
+        F.col("id").cast(key).alias("id"),
+        F.col("id").cast(key).alias("label"),
+        F.lit(True).alias("active"),
+    )
+    for _ in range(3):  # vertex 7 is 3 hops from 0
+        state = min_round(rel, state, nv, "label", 0)
+    plan = state._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" in plan and "BroadcastExchange" in plan, plan
+    assert "ENSURE_REQUIREMENTS" not in plan, plan
+    assert {(r.id, r.label) for r in state.collect()} == {(v, 0) for v in range(8)}
+    rel.unpersist()
+    ids.unpersist()

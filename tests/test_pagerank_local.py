@@ -30,7 +30,7 @@ def _r6(df):
     return {r["id"]: round(r["pr"], 6) for r in df.collect()}
 
 
-@pytest.mark.parametrize("num_iter", [3, None])
+@pytest.mark.parametrize("num_iter", [3, 5, None])
 def test_local_matches_dataframe_path(spark, sym_edges, num_iter, monkeypatch):
     fast = _r6(prmod.pagerank(sym_edges, num_iter=num_iter))
     monkeypatch.setattr(prmod, "LOCAL_NE_MAX", 0)
@@ -44,6 +44,41 @@ def test_local_warm_start_matches(spark, sym_edges, monkeypatch):
     monkeypatch.setattr(prmod, "LOCAL_NE_MAX", 0)
     slow = _r6(prmod.pagerank(sym_edges, init_ranks=seed, num_iter=3))
     assert fast == slow
+
+
+def test_narrow_warm_start_joins_on_int_ids(spark, sym_edges, monkeypatch):
+    """On the narrow-id path the warm ranks join the int degree table on
+    int keys: the join condition casts neither side's id."""
+    seed = prmod.pagerank(sym_edges, num_iter=4)
+    cls = type(sym_edges)
+    real = cls.localCheckpoint
+    joins = []
+
+    def spy(self, *a, **k):
+        plan = self._jdf.queryExecution().optimizedPlan().toString()
+        joins.extend(l for l in plan.splitlines() if "Join LeftOuter" in l)
+        return real(self, *a, **k)
+
+    monkeypatch.setattr(prmod, "LOCAL_NE_MAX", 0)
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    out = prmod.pagerank(sym_edges, init_ranks=seed, num_iter=3)
+    assert out.schema["id"].dataType.simpleString() == "bigint"
+    assert joins and not any("cast(" in l for l in joins), joins
+    monkeypatch.undo()
+    want = _r6(prmod.pagerank(sym_edges, init_ranks=seed, num_iter=3))
+    assert _r6(out) == want
+
+
+@pytest.mark.parametrize("stale_id", [2**31 + 5, 2**32 + 5])
+def test_narrow_warm_start_skips_ids_past_int32(spark, sym_edges, stale_id, monkeypatch):
+    """A warm rank for an id past int32 (a vertex deleted since) matches
+    no vertex of a narrow graph: the int cast must neither fail nor wrap
+    it onto a real vertex (2**32 + 5 wraps to vertex 5)."""
+    seed = prmod.pagerank(sym_edges, num_iter=4)
+    stale = seed.unionAll(spark.createDataFrame([(stale_id, 0.5)], seed.schema))
+    monkeypatch.setattr(prmod, "LOCAL_NE_MAX", 0)
+    want = _r6(prmod.pagerank(sym_edges, init_ranks=seed, num_iter=3))
+    assert _r6(prmod.pagerank(sym_edges, init_ranks=stale, num_iter=3)) == want
 
 
 def test_local_is_deterministic_across_layouts(spark, sym_edges):
