@@ -49,10 +49,7 @@ from graphdb_testing_spark import queries_temporal  # noqa: E402,F401 (registers
 from graphdb_testing_spark.queries import all_queries  # noqa: E402
 from graphdb_testing_spark.session import get_spark  # noqa: E402
 from graphdb_testing_spark.operators import util as oputil  # noqa: E402
-from graphdb_testing_spark.operators import bfs as _bfs_mod  # noqa: E402
-from graphdb_testing_spark.operators import components as _cc_mod  # noqa: E402
 from graphdb_testing_spark.operators import densegraph as _dense_mod  # noqa: E402
-from graphdb_testing_spark.operators import pagerank as _pr_mod  # noqa: E402
 
 
 #: fixed calibration work: rows hashed PER PARTITION per calibration
@@ -325,11 +322,8 @@ def run_suite(spark, sf_dir: str) -> tuple[dict[str, float], dict[str, int]]:
         "curation": None,
     }
     meta["guards"] = {
-        "LOCAL_NE_MAX": {
-            "components": _cc_mod.LOCAL_NE_MAX,
-            "bfs": _bfs_mod.LOCAL_NE_MAX,
-            "pagerank": _pr_mod.LOCAL_NE_MAX,
-        },
+        "LOCAL_NE_MAX": oputil.LOCAL_NE_MAX,
+        "LOCAL_STATE_MAX": oputil.LOCAL_STATE_MAX,
         "DENSE_NV_MAX": _dense_mod.DENSE_NV_MAX,
     }
     return timings, meta

@@ -79,10 +79,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 # ---------------------------------------------------------------------------
 # derived graphs (FIXTURES.md §2)
 # ---------------------------------------------------------------------------

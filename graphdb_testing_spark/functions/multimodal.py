@@ -205,16 +205,6 @@ def _png_chunk(tag: bytes, body: bytes) -> bytes:
     )
 
 
-def _paeth(a: int, b: int, c: int) -> int:
-    """Paeth predictor (PNG spec §9.4): pick left/up/up-left with the
-    smallest distance to the linear estimate a+b-c, ties a > b > c."""
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    return b if pb <= pc else c
-
-
 def encode_png(pixels) -> bytes:
     """Encode an ``(h, w, 3)`` uint8 RGB array as an 8-bit truecolor
     PNG (RFC 2083 layout: IHDR / IDAT / IEND, zlib-DEFLATE body) —

@@ -20,16 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .bfs import _np_edges
-from .util import local_input, state_hint
-
-#: edge-row bound for the single-task fast path (~16 B/row ⇒ ≤128 MB
-#: in one task); past it the all-roots DataFrame sweep runs
-LOCAL_NE_MAX = 8_000_000
-
-#: bound on |roots| × |V| state rows for the fast path (same bound as
-#: the multi-source BFS kernel)
-LOCAL_STATE_MAX = 64_000_000
+from .util import iter_partitions, map_single_task, np_edges, single_task, state_hint
 
 
 def _local_brandes(
@@ -60,7 +51,7 @@ def _local_brandes(
         import pandas as pd
         from decimal import ROUND_HALF_UP, Decimal
 
-        ids, si, di = _np_edges(batches)
+        ids, si, di = np_edges(batches)
         n = ids.size
         order = np.lexsort((di, si))
         si_, di_ = si[order], di[order]
@@ -141,7 +132,7 @@ def _local_brandes(
             ).astype({"id": "int64", "bc": "float64"})
 
     schema = "u long, v long, bc double" if edge_mode else "id long, bc double"
-    return local_input(e).coalesce(1).mapInPandas(run, schema)
+    return map_single_task(e, run, schema)
 
 
 def betweenness(
@@ -156,14 +147,12 @@ def betweenness(
     (the reference treats the symmetric edge relation as a directed
     graph both ways, as we do).
     """
-    from .util import iter_partitions
-
     spark = edges.sparkSession
     e = edges.select("src", "dst")
     # constant relation, re-read every level of both sweeps:
     # right-size (~250k edge rows/task) and materialize once
     ne = e.count()
-    if ne <= LOCAL_NE_MAX and len(roots) * ne <= LOCAL_STATE_MAX:
+    if single_task("betweenness", ne, state_rows=len(roots) * ne):
         # guarded single-task fast path (round-11): per-level cost at
         # sf0.1 is scheduling for both sweeps (~2·diameter jobs);
         # sigma is integer-exact and the delta fold order is fixed —
@@ -275,12 +264,10 @@ def edge_betweenness(
     identical; the backward sweep emits its per-edge terms *before*
     the vertex aggregation instead of after, so the extra cost over
     vertex BC is one canonical-pair aggregation."""
-    from .util import iter_partitions
-
     spark = edges.sparkSession
     e = edges.select("src", "dst")
     ne = e.count()
-    if ne <= LOCAL_NE_MAX and len(roots) * ne <= LOCAL_STATE_MAX:
+    if single_task("edge_betweenness", ne, state_rows=len(roots) * ne):
         # guarded single-task fast path (round-11) — see _local_brandes
         return _local_brandes(e, roots, max_depth, edge_mode=True)
     e = e.coalesce(iter_partitions(ne)).localCheckpoint()

@@ -29,58 +29,14 @@ from .util import (
     broadcasts,
     checkpoint_active,
     iter_partitions,
-    local_input,
+    map_single_task,
     min_round,
-    record_fast_path,
+    np_edges,
     self_loop_relation,
+    single_task,
     state_hint,
     vertex_ids,
 )
-
-#: edge-row bound for the single-task fast path (~16 B/row ⇒ ≤128 MB
-#: in one task); past it the level-synchronous DataFrame loop runs
-LOCAL_NE_MAX = 8_000_000
-
-#: bound on |roots| × |V| state rows for the multi-source fast path
-LOCAL_MS_STATE_MAX = 64_000_000
-
-
-def _np_edges(batches, with_wgt: bool = False):
-    """Concatenate Arrow batches of a symmetric edge table into NumPy
-    ``(ids, si, di[, wgt])`` index arrays (shared by the single-task
-    kernels below; ``ids`` = sorted distinct src = every vertex)."""
-    import numpy as np
-
-    srcs: list = []
-    dsts: list = []
-    wgts: list = []
-    for pdf in batches:
-        srcs.append(pdf["src"].to_numpy(dtype=np.int64))
-        dsts.append(pdf["dst"].to_numpy(dtype=np.int64))
-        if with_wgt:
-            wgts.append(pdf["wgt"].to_numpy(dtype=np.int64))
-    src = np.concatenate(srcs) if srcs else np.empty(0, np.int64)
-    dst = np.concatenate(dsts) if dsts else np.empty(0, np.int64)
-    ids = np.unique(src)
-    si = np.searchsorted(ids, src)
-    di = np.searchsorted(ids, dst)
-    # contract guard (round-10 ADVICE): these kernels require a
-    # SYMMETRIC table, where src covers every vertex.  A dst outside
-    # the src set would silently scatter updates to the wrong vertex
-    # (searchsorted returns the insertion point) — fail loudly instead.
-    if dst.size and not (
-        (di < ids.size).all() and (ids[np.minimum(di, ids.size - 1)] == dst).all()
-    ):
-        raise ValueError(
-            "edge table is not symmetric: a dst vertex never appears "
-            "as src — single-task graph kernels require the "
-            "symmetrized relation"
-        )
-    if with_wgt:
-        wgt = np.concatenate(wgts) if wgts else np.empty(0, np.int64)
-        return ids, si, di, wgt
-    return ids, si, di
-
 
 def _local_sssp_weighted(e: DataFrame, source: int, rounds: int) -> DataFrame:
     """Single-Arrow-task bounded-round Bellman-Ford (exact integer
@@ -91,7 +47,7 @@ def _local_sssp_weighted(e: DataFrame, source: int, rounds: int) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        ids, si, di, wgt = _np_edges(batches, with_wgt=True)
+        ids, si, di, wgt = np_edges(batches, ("wgt", "int64"))
         sent = np.iinfo(np.int64).max
         pos = np.searchsorted(ids, source)
         in_graph = pos < ids.size and ids[pos] == source
@@ -112,7 +68,7 @@ def _local_sssp_weighted(e: DataFrame, source: int, rounds: int) -> DataFrame:
             out_d = np.r_[out_d, np.int64(0)]
         yield pd.DataFrame({"id": out_id, "dist": out_d})
 
-    return local_input(e).coalesce(1).mapInPandas(run, "id long, dist long")
+    return map_single_task(e, run, "id long, dist long")
 
 
 def _local_widest_path(
@@ -126,7 +82,7 @@ def _local_widest_path(
         import numpy as np
         import pandas as pd
 
-        ids, si, di, wgt = _np_edges(batches, with_wgt=True)
+        ids, si, di, wgt = np_edges(batches, ("wgt", "int64"))
         pos = np.searchsorted(ids, source)
         in_graph = pos < ids.size and ids[pos] == source
         cap = np.full(ids.size, -1, dtype=np.int64)  # -1 = unreached
@@ -150,7 +106,7 @@ def _local_widest_path(
             out_c = np.r_[out_c, np.int64(inf)]
         yield pd.DataFrame({"id": out_id, "cap": out_c})
 
-    return local_input(e).coalesce(1).mapInPandas(run, "id long, cap long")
+    return map_single_task(e, run, "id long, cap long")
 
 
 def _local_two_shortest(
@@ -166,7 +122,7 @@ def _local_two_shortest(
         import numpy as np
         import pandas as pd
 
-        ids, si, di, wgt = _np_edges(batches, with_wgt=True)
+        ids, si, di, wgt = np_edges(batches, ("wgt", "int64"))
         pos = np.searchsorted(ids, source)
         in_graph = pos < ids.size and ids[pos] == source
         d1 = np.full(ids.size, sentinel, dtype=np.int64)
@@ -215,7 +171,7 @@ def _local_two_shortest(
             }
         yield pd.DataFrame(out)
 
-    return local_input(e).coalesce(1).mapInPandas(run, "id long, d1 long, d2 long")
+    return map_single_task(e, run, "id long, d1 long, d2 long")
 
 
 def _local_multi_source_bfs(
@@ -230,7 +186,7 @@ def _local_multi_source_bfs(
         import numpy as np
         import pandas as pd
 
-        ids, si, di = _np_edges(batches)
+        ids, si, di = np_edges(batches)
         out_r: list = []
         out_i: list = []
         out_d: list = []
@@ -263,7 +219,7 @@ def _local_multi_source_bfs(
             }
         )
 
-    return local_input(e).coalesce(1).mapInPandas(run, "root long, id long, dist int")
+    return map_single_task(e, run, "root long, id long, dist int")
 
 
 def _local_bfs(e: DataFrame, source: int, max_depth: int) -> DataFrame:
@@ -278,14 +234,7 @@ def _local_bfs(e: DataFrame, source: int, max_depth: int) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        srcs: list = []
-        dsts: list = []
-        for pdf in batches:
-            srcs.append(pdf["src"].to_numpy(dtype=np.int64))
-            dsts.append(pdf["dst"].to_numpy(dtype=np.int64))
-        src = np.concatenate(srcs) if srcs else np.empty(0, np.int64)
-        dst = np.concatenate(dsts) if dsts else np.empty(0, np.int64)
-        ids = np.unique(src)
+        ids, si, di = np_edges(batches)
         pos = np.searchsorted(ids, source)
         if pos >= ids.size or ids[pos] != source:
             # source has no outgoing edges: only the seed row exists
@@ -296,18 +245,6 @@ def _local_bfs(e: DataFrame, source: int, max_depth: int) -> DataFrame:
                 }
             )
             return
-        si = np.searchsorted(ids, src)
-        di = np.searchsorted(ids, dst)
-        # contract guard (round-10 ADVICE) — same check as _np_edges
-        if dst.size and not (
-            (di < ids.size).all()
-            and (ids[np.minimum(di, ids.size - 1)] == dst).all()
-        ):
-            raise ValueError(
-                "edge table is not symmetric: a dst vertex never "
-                "appears as src — single-task graph kernels require "
-                "the symmetrized relation"
-            )
         dist = np.full(ids.size, -1, dtype=np.int32)
         dist[pos] = 0
         depth = 0
@@ -321,7 +258,7 @@ def _local_bfs(e: DataFrame, source: int, max_depth: int) -> DataFrame:
         hit = dist >= 0
         yield pd.DataFrame({"id": ids[hit], "dist": dist[hit]})
 
-    return local_input(e).coalesce(1).mapInPandas(run, "id long, dist int")
+    return map_single_task(e, run, "id long, dist int")
 
 
 def bfs(
@@ -337,8 +274,7 @@ def bfs(
     semi-naive levels per chunk until a chunk reaches no new vertex;
     above the threshold it runs :func:`_frontier_bfs`."""
     ne = edges.count()
-    record_fast_path("bfs", ne <= LOCAL_NE_MAX)
-    if ne <= LOCAL_NE_MAX:
+    if single_task("bfs", ne):
         # guarded single-task fast path (round-10): per-level cost at
         # sf0.1 is scheduling + broadcast latency, not compute — see
         # _local_bfs; identical integer levels, cluster-scale graphs
@@ -432,7 +368,7 @@ def sssp_weighted(
     spark = edges.sparkSession
     e = edges.select("src", "dst", "wgt")
     ne = edges.count()
-    if ne <= LOCAL_NE_MAX:
+    if single_task("sssp_weighted", ne):
         # guarded single-task fast path (round-10): exact min-plus
         # integers, same relax-from-round-start schedule
         return _local_sssp_weighted(e, int(source), rounds)
@@ -484,7 +420,7 @@ def multi_source_bfs(
     # not re-run a derived-edge pipeline O(diameter) times
     e = edges.select("src", "dst")
     ne = edges.count()
-    if ne <= LOCAL_NE_MAX and len(roots) * ne <= LOCAL_MS_STATE_MAX:
+    if single_task("multi_source_bfs", ne, state_rows=len(roots) * ne):
         # guarded single-task fast path (round-10): per-root masked
         # level loops, integer hop distances, identical level schedule
         return _local_multi_source_bfs(e, [int(r) for r in roots], max_depth)
@@ -533,7 +469,7 @@ def widest_path(
     weights."""
     spark = edges.sparkSession
     ne = edges.count()
-    if ne <= LOCAL_NE_MAX:
+    if single_task("widest_path", ne):
         # guarded single-task fast path (round-10): exact (max, min)
         # semiring; the copy-forward carry is the self-loop term
         return _local_widest_path(edges.select("src", "dst", "wgt"), int(source), rounds, int(inf))
@@ -591,7 +527,7 @@ def two_shortest(
     spark = edges.sparkSession
     e = edges.select("src", "dst", "wgt")
     ne = edges.count()
-    if ne <= LOCAL_NE_MAX:
+    if single_task("two_shortest", ne):
         # guarded single-task fast path (round-10): exact integers,
         # identical candidate set and two-smallest-distinct reduce
         return _local_two_shortest(e, int(source), rounds, int(sentinel))

@@ -22,11 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .util import local_input, state_hint
-
-#: edge-row bound for the single-task fast path (~24 B/row ⇒ ≤192 MB
-#: in one task); past it the level-loop DataFrame plan runs
-LOCAL_NE_MAX = 8_000_000
+from .util import map_single_task, np_edges, single_task, state_hint
 
 
 def _local_agglomeration(edges: DataFrame, max_levels: int) -> DataFrame:
@@ -49,27 +45,8 @@ def _local_agglomeration(edges: DataFrame, max_levels: int) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        srcs: list = []
-        dsts: list = []
-        wgts: list = []
-        for pdf in batches:
-            srcs.append(pdf["src"].to_numpy(dtype=np.int64))
-            dsts.append(pdf["dst"].to_numpy(dtype=np.int64))
-            wgts.append(pdf["wgt"].to_numpy(dtype=np.float64))
-        src = np.concatenate(srcs) if srcs else np.empty(0, np.int64)
-        dst = np.concatenate(dsts) if dsts else np.empty(0, np.int64)
-        wgt = np.concatenate(wgts) if wgts else np.empty(0, np.float64)
-        ids = np.unique(src)  # symmetric: src covers every vertex
+        ids, si, di, wgt = np_edges(batches, ("wgt", "float64"))
         n = ids.size
-        si = np.searchsorted(ids, src)
-        di = np.searchsorted(ids, dst)
-        if dst.size and not (
-            (di < n).all() and (ids[np.minimum(di, n - 1)] == dst).all()
-        ):
-            raise ValueError(
-                "edge table is not symmetric: a dst vertex never "
-                "appears as src"
-            )
         comm = np.arange(n, dtype=np.int64)
         for _ in range(max_levels):
             vol = float(wgt.sum())
@@ -109,12 +86,10 @@ def _local_agglomeration(edges: DataFrame, max_levels: int) -> DataFrame:
                 break
         yield pd.DataFrame({"id": ids, "community": ids[comm]})
 
-    return (
-        local_input(
-            edges.select("src", "dst", F.col("wgt").cast("double").alias("wgt"))
-        )
-        .coalesce(1)
-        .mapInPandas(run, "id long, community long")
+    return map_single_task(
+        edges.select("src", "dst", F.col("wgt").cast("double").alias("wgt")),
+        run,
+        "id long, community long",
     )
 
 
@@ -166,7 +141,11 @@ def community_agglomeration(
     ``min_score_filter`` applies the reference's mean-based candidate
     filter (scores below the mean are not contracted).
     """
-    if not min_score_filter and edges.count() <= LOCAL_NE_MAX:
+    # the mean filter stays on the DataFrame path (no count job there)
+    eligible = not min_score_filter
+    if single_task(
+        "community_agglomeration", edges.count() if eligible else None, eligible
+    ):
         # guarded single-task fast path (round-10) for the
         # deterministic variant — see _local_agglomeration; the
         # mean-filter path and cluster-scale graphs run the loop below

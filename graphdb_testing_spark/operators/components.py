@@ -40,17 +40,14 @@ from pyspark.sql import functions as F
 from .util import (
     broadcasts,
     checkpoint_active,
-    local_input,
+    map_single_task,
     min_round,
-    record_fast_path,
+    np_edges,
     self_loop_relation,
+    single_task,
     state_hint,
     vertex_ids,
 )
-
-#: edge-row bound for the single-task fast path (~16 B/row ⇒ ≤128 MB
-#: in one task); past it the unrolled DataFrame loop runs
-LOCAL_NE_MAX = 8_000_000
 
 
 def _local_components(e: DataFrame) -> DataFrame:
@@ -66,24 +63,7 @@ def _local_components(e: DataFrame) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        srcs: list = []
-        dsts: list = []
-        for pdf in batches:
-            srcs.append(pdf["src"].to_numpy(dtype=np.int64))
-            dsts.append(pdf["dst"].to_numpy(dtype=np.int64))
-        src = np.concatenate(srcs) if srcs else np.empty(0, np.int64)
-        dst = np.concatenate(dsts) if dsts else np.empty(0, np.int64)
-        ids = np.unique(src)  # symmetric: src covers every vertex
-        si = np.searchsorted(ids, src)
-        di = np.searchsorted(ids, dst)
-        if dst.size and not (
-            (di < ids.size).all()
-            and (ids[np.minimum(di, ids.size - 1)] == dst).all()
-        ):
-            raise ValueError(
-                "edge table is not symmetric: a dst vertex never "
-                "appears as src"
-            )
+        ids, si, di = np_edges(batches)
         lab = np.arange(ids.size, dtype=np.int64)
         while True:
             m = lab.copy()
@@ -99,7 +79,7 @@ def _local_components(e: DataFrame) -> DataFrame:
             lab = m
         yield pd.DataFrame({"id": ids, "label": ids[lab]})
 
-    return local_input(e).coalesce(1).mapInPandas(run, "id long, label long")
+    return map_single_task(e, run, "id long, label long")
 
 
 def connected_components(
@@ -139,8 +119,7 @@ def connected_components(
     keys; the output is cast back to the input type.
     """
     ne = edges.count()
-    record_fast_path("components", not dst_partitioned and ne <= LOCAL_NE_MAX)
-    if not dst_partitioned and ne <= LOCAL_NE_MAX:
+    if single_task("components", ne, not dst_partitioned):
         # guarded single-task fast path (round-10): the per-round cost
         # at sf0.1 is stage scheduling + AQE re-planning for tiny
         # shuffles, not compute.  The fixpoint is the same min-id

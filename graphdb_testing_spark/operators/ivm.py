@@ -52,15 +52,3 @@ def join_delta(
     part3 = da.join(db, on)
     return part1.unionByName(part2).unionByName(part3)
 
-
-def maintain_join_view(
-    view: DataFrame,
-    a: DataFrame,
-    delta_a: DataFrame,
-    b: DataFrame,
-    delta_b: DataFrame,
-    on: Sequence[str],
-) -> DataFrame:
-    """New materialized view content: ``view ∪ join_delta(...)`` —
-    append-only maintenance step for one micro-batch."""
-    return view.unionByName(join_delta(a, delta_a, b, delta_b, on))

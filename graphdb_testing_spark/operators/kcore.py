@@ -16,11 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .util import local_input, state_hint
-
-#: edge-row bound for the single-task fast paths (~16 B/row ⇒ ≤128 MB
-#: in one task); past it the peel / h-index DataFrame loops run
-LOCAL_NE_MAX = 8_000_000
+from .util import iter_partitions, map_single_task, np_edges, single_task, state_hint
 
 
 def _local_kcore_vertices(
@@ -35,16 +31,7 @@ def _local_kcore_vertices(
         import numpy as np
         import pandas as pd
 
-        srcs: list = []
-        dsts: list = []
-        for pdf in batches:
-            srcs.append(pdf["src"].to_numpy(dtype=np.int64))
-            dsts.append(pdf["dst"].to_numpy(dtype=np.int64))
-        src = np.concatenate(srcs) if srcs else np.empty(0, np.int64)
-        dst = np.concatenate(dsts) if dsts else np.empty(0, np.int64)
-        ids = np.unique(src)  # symmetric: src covers every vertex
-        si = np.searchsorted(ids, src)
-        di = np.searchsorted(ids, dst)
+        ids, si, di = np_edges(batches)
         alive = np.ones(ids.size, dtype=bool)
         prev_n = ids.size
         rounds = 0
@@ -63,7 +50,7 @@ def _local_kcore_vertices(
             prev_n = n
         yield pd.DataFrame({"id": ids[alive]})
 
-    return local_input(e).coalesce(1).mapInPandas(run, "id long")
+    return map_single_task(e, run, "id long")
 
 
 def _local_core_numbers(
@@ -79,16 +66,7 @@ def _local_core_numbers(
         import numpy as np
         import pandas as pd
 
-        srcs: list = []
-        dsts: list = []
-        for pdf in batches:
-            srcs.append(pdf["src"].to_numpy(dtype=np.int64))
-            dsts.append(pdf["dst"].to_numpy(dtype=np.int64))
-        src = np.concatenate(srcs) if srcs else np.empty(0, np.int64)
-        dst = np.concatenate(dsts) if dsts else np.empty(0, np.int64)
-        ids = np.unique(src)
-        si = np.searchsorted(ids, src)
-        di = np.searchsorted(ids, dst)
+        ids, si, di = np_edges(batches)
         core = np.bincount(si, minlength=ids.size).astype(np.int64)
         prev_sum = int(core.sum())
         done = 0
@@ -127,7 +105,7 @@ def _local_core_numbers(
             {"id": ids, "core": core.astype(np.int32)}
         )
 
-    return local_input(e).coalesce(1).mapInPandas(run, "id long, core int")
+    return map_single_task(e, run, "id long, core int")
 
 
 def kcore_vertices(
@@ -141,7 +119,7 @@ def kcore_vertices(
     """
     e = edges.select("src", "dst")
     ne = e.count()
-    if k >= 1 and ne <= LOCAL_NE_MAX:
+    if single_task("kcore_vertices", ne, k >= 1):
         # guarded single-task fast path (round-10): each peel round at
         # sf0.1 costs stage scheduling + a checkpoint, not compute;
         # identical round schedule, cluster-scale graphs peel below
@@ -216,10 +194,9 @@ def core_numbers(
     the array is bounded by the max degree.  ``k_max`` is accepted
     for API compatibility and ignored.
     """
-    from .util import iter_partitions
-
     e = edges.select("src", "dst")
-    if e.count() <= LOCAL_NE_MAX:
+    ne = e.count()
+    if single_task("core_numbers", ne):
         # guarded single-task fast path (round-10): the sf0.1 fixpoint
         # is 25 h-index rounds of ~0.4s scheduling each; same chunked
         # Σcore convergence schedule, exact integer state either way
@@ -230,7 +207,6 @@ def core_numbers(
         .localCheckpoint()
     )
     nv = state.count()
-    ne = e.count()
     # right-size and materialize the constant edge relation once —
     # every round re-reads it (~250k edge rows per task)
     e = e.coalesce(iter_partitions(ne)).localCheckpoint()

@@ -57,18 +57,14 @@ from .util import (
     INT32_MAX,
     INT32_MIN,
     iter_partitions,
-    local_input,
-    record_fast_path,
+    map_single_task,
+    np_edges,
+    observed_checkpoint,
     round_layout,
+    single_task,
     state_hint,
     vertex_summary,
 )
-
-
-#: edge-row bound for the single-task PageRank fast path: the edge
-#: array must fit one task comfortably (~16 B/row ⇒ ≤ 128 MB) — at
-#: cluster scale the unrolled DataFrame loop runs instead
-LOCAL_NE_MAX = 8_000_000
 
 
 def _local_pagerank(
@@ -89,26 +85,29 @@ def _local_pagerank(
     ``mapInPandas``); the driver never holds edge OR rank data.  Warm
     starts (``init_ranks``) replicate the DataFrame path's shorter
     unroll and every-chunk checking; the warm ranks ride into the task
-    as extra rows on the edge relation (``pr0`` non-null marks them),
-    not as a driver collect (round-10 ADVICE: an nv-row ``collect()``
-    drove up to 8 M Python rows through the driver, a §5 regression vs
-    the DataFrame path which never does).  ``nv`` (count of distinct
+    as extra rows on the edge relation, tagged by ``rank_row``, not as
+    a driver collect (round-10 ADVICE: an nv-row ``collect()`` drove up
+    to 8 M Python rows through the driver, a §5 regression vs the
+    DataFrame path which never does).  ``nv`` (count of distinct
     ``src`` in the symmetric table) and ``base = (1-d)/nv`` are
     computed in-task from the same quantities — bit-identical
     arithmetic, one fewer up-front degree job.
     """
     if init_ranks is not None:
-        # warm ranks as tagged rows on the single task's input: edge
-        # rows carry pr0 = NULL, rank rows carry (id, id, pr).  dst is
-        # the row's own id so the long column stays non-null (a
-        # nullable int64 would arrive in pandas as float64 and corrupt
-        # ids past 2^53).
+        # warm ranks as tagged rows on the single task's input: rank
+        # rows carry (id, id, true, pr).  dst is the row's own id so the
+        # long column stays non-null (a nullable int64 would arrive in
+        # pandas as float64 and corrupt ids past 2^53).
         inp = e.select(
-            "src", "dst", F.lit(None).cast("double").alias("pr0")
+            "src",
+            "dst",
+            F.lit(False).alias("rank_row"),
+            F.lit(None).cast("double").alias("pr0"),
         ).unionAll(
             init_ranks.select(
                 F.col("id").alias("src"),
                 F.col("id").alias("dst"),
+                F.lit(True).alias("rank_row"),
                 F.col("pr").cast("double").alias("pr0"),
             )
         )
@@ -127,49 +126,34 @@ def _local_pagerank(
         import numpy as np
         import pandas as pd
 
-        srcs: list = []
-        dsts: list = []
-        pr0s: list = []
-        for pdf in batches:
-            s = pdf["src"].to_numpy(dtype=np.int64)
-            t = pdf["dst"].to_numpy(dtype=np.int64)
-            if has_init:
-                p = pdf["pr0"].to_numpy(dtype=np.float64)
-                rank_row = ~np.isnan(p)
-                pr0s.append((s[rank_row], p[rank_row]))
-                s, t = s[~rank_row], t[~rank_row]
-            srcs.append(s)
-            dsts.append(t)
-        src = np.concatenate(srcs) if srcs else np.empty(0, np.int64)
-        dst = np.concatenate(dsts) if dsts else np.empty(0, np.int64)
-        ids = np.unique(src)  # symmetric table: src covers all vertices
+        ranks: list = []
+
+        def edge_rows():
+            for pdf in batches:
+                if has_init:
+                    ranks.append(pdf[pdf["rank_row"]])
+                    pdf = pdf[~pdf["rank_row"]]
+                yield pdf
+
+        ids, si, di = np_edges(edge_rows())
         nv = ids.size
         base = (1.0 - d) / nv
         # full (src, dst) sort: message-sum order must not depend on
         # the incoming partition/row order, or reruns drift in the
-        # last float ulp
-        order = np.lexsort((dst, src))
-        si = np.searchsorted(ids, src[order])
-        di = np.searchsorted(ids, dst[order])
-        if dst.size and not (
-            (di < ids.size).all()
-            and (ids[np.minimum(di, ids.size - 1)] == dst[order]).all()
-        ):
-            raise ValueError(
-                "edge table is not symmetric: a dst vertex never "
-                "appears as src"
-            )
+        # last float ulp (ids is sorted, so (si, di) order = (src, dst))
+        order = np.lexsort((di, si))
+        si, di = si[order], di[order]
         deg = np.bincount(si, minlength=ids.size).astype(np.float64)
         starts = np.searchsorted(si, np.arange(ids.size))
+        pr0 = np.full(ids.size, 1.0 / nv)
         if has_init:
-            pr0 = np.full(ids.size, 1.0 / nv)
-            ip = np.concatenate([p[0] for p in pr0s]) if pr0s else np.empty(0, np.int64)
-            pv = np.concatenate([p[1] for p in pr0s]) if pr0s else np.empty(0, np.float64)
+            ip = np.concatenate([r["src"].to_numpy(np.int64) for r in ranks])
+            pv = np.concatenate([r["pr0"].to_numpy(np.float64) for r in ranks])
             keep = np.isin(ip, ids)
+            if np.isnan(pv[keep]).any():
+                raise ValueError("init_ranks holds a NULL or NaN pr for a graph vertex")
             pr0[np.searchsorted(ids, ip[keep])] = pv[keep]
-            prd = pr0 / deg
-        else:
-            prd = np.full(ids.size, 1.0 / nv) / deg
+        prd = pr0 / deg
         done = 0
         chunks = 0
         while done < total:
@@ -187,7 +171,7 @@ def _local_pagerank(
                     break
         yield pd.DataFrame({"id": ids, "pr": prd * deg})
 
-    return local_input(inp).coalesce(1).mapInPandas(run, "id long, pr double")
+    return map_single_task(inp, run, "id long, pr double")
 
 
 def pagerank(
@@ -215,20 +199,22 @@ def pagerank(
     the rounds-to-converge shrink, which is the incremental-update
     path the streaming workflow uses after small edge batches.  Warm
     starts check the delta every chunk (convergence is expected
-    early) with a shorter unroll.
+    early) with a shorter unroll.  A warm row of a graph vertex whose
+    ``pr`` is NULL or NaN raises ``ValueError`` (NaN would reach every
+    vertex within a few rounds).
     """
     e = edges.select("src", "dst")
     ne = edges.count()
-    record_fast_path("pagerank", not dst_partitioned and ne <= LOCAL_NE_MAX)
+    local = single_task("pagerank", ne, not dst_partitioned)
     if ne == 0:
         return e.select(F.col("src").alias("id"), F.lit(0.0).alias("pr")).limit(0)
-    if not dst_partitioned and ne <= LOCAL_NE_MAX:
+    if local:
         # guarded single-task fast path (round-10 optimization): at
         # sf0.1 each of the 100 convergence rounds costs ~0.2 s of
         # per-stage scheduling + AQE re-planning + a driver broadcast
         # round-trip to move a ~2.5 MB shuffle — the iteration is
         # latency-bound, not compute-bound.  A graph whose edge list
-        # fits one task (≤ LOCAL_NE_MAX rows ≈ 128 MB) iterates with
+        # fits one task (≤ util.LOCAL_NE_MAX rows ≈ 128 MB) iterates with
         # NumPy segment sums inside one Arrow task instead: identical
         # update formula, identical chunk/convergence schedule
         # (parity-tested to 6 dp oracle rounding in
@@ -288,17 +274,22 @@ def pagerank(
     # neither the delta check nor the final pr projection needs a
     # degree join
     if init_ranks is not None:
-        state = (
-            deg.join(init_ranks.select("id", "pr"), "id", "left")
-            .select(
+        # a warm row of a graph vertex whose pr is NULL or NaN leaves a
+        # NULL or NaN prd, counted in the checkpoint job itself
+        warm = init_ranks.select("id", "pr", F.lit(True).alias("warm"))
+        state, r = observed_checkpoint(
+            deg.join(warm, "id", "left").select(
                 "id",
                 (
-                    F.coalesce(F.col("pr"), F.lit(1.0 / nv)) / F.col("degree")
+                    F.when(F.col("warm"), F.col("pr")).otherwise(F.lit(1.0 / nv))
+                    / F.col("degree")
                 ).alias("prd"),
                 "degree",
-            )
-            .localCheckpoint()
+            ),
+            F.count(F.when(F.col("prd").isNull() | F.isnan("prd"), 1)).alias("bad"),
         )
+        if r["bad"]:
+            raise ValueError("init_ranks holds a NULL or NaN pr for a graph vertex")
         unroll = min(unroll, 5)
         check_every = 1
     else:
@@ -408,36 +399,19 @@ def _local_fixed_rounds_pr(
         import numpy as np
         import pandas as pd
 
-        srcs: list = []
-        dsts: list = []
-        wgts: list = []
-        for pdf in batches:
-            srcs.append(pdf["src"].to_numpy(dtype=np.int64))
-            dsts.append(pdf["dst"].to_numpy(dtype=np.int64))
-            if weighted:
-                wgts.append(pdf["wgt"].to_numpy(dtype=np.float64))
-        src = np.concatenate(srcs) if srcs else np.empty(0, np.int64)
-        dst = np.concatenate(dsts) if dsts else np.empty(0, np.int64)
-        ids = np.unique(src)  # symmetric table: src covers all vertices
+        ids, si, di, *extra = np_edges(
+            batches, *([("wgt", "float64")] if weighted else [])
+        )
         if ids.size == 0:
             yield pd.DataFrame(
                 {"id": np.empty(0, np.int64), "pr": np.empty(0, np.float64)}
             )
             return
-        order = np.lexsort((dst, src))
-        si = np.searchsorted(ids, src[order])
-        di = np.searchsorted(ids, dst[order])
-        if dst.size and not (
-            (di < ids.size).all()
-            and (ids[np.minimum(di, ids.size - 1)] == dst[order]).all()
-        ):
-            raise ValueError(
-                "edge table is not symmetric: a dst vertex never "
-                "appears as src"
-            )
+        order = np.lexsort((di, si))
+        si, di = si[order], di[order]
         starts = np.searchsorted(si, np.arange(ids.size))
         if weighted:
-            w = np.concatenate(wgts)[order]
+            w = extra[0][order]
             wdeg = np.bincount(si, weights=w, minlength=ids.size)
             base = (1.0 - d) / ids.size
             prd = (1.0 / ids.size) / wdeg
@@ -459,7 +433,7 @@ def _local_fixed_rounds_pr(
             pr = prd * deg
         yield pd.DataFrame({"id": ids, "pr": pr})
 
-    return local_input(e).coalesce(1).mapInPandas(run, "id long, pr double")
+    return map_single_task(e, run, "id long, pr double")
 
 
 def personalized_pagerank(
@@ -483,7 +457,7 @@ def personalized_pagerank(
     seeds = [int(s) for s in sources]
     e = edges.select("src", "dst")
     ne = edges.count()
-    if seeds and ne <= LOCAL_NE_MAX:
+    if single_task("personalized_pagerank", ne, bool(seeds)):
         # guarded single-task fast path (round-10): same fixed-round
         # pre-divided-rank update in one task — see _local_fixed_rounds_pr
         return _local_fixed_rounds_pr(
@@ -567,7 +541,7 @@ def weighted_pagerank(
     """
     e = edges.select("src", "dst", F.col(weight_col).alias("wgt"))
     ne = edges.count()
-    if ne <= LOCAL_NE_MAX:
+    if single_task("weighted_pagerank", ne):
         # guarded single-task fast path (round-10): same fixed-round
         # weight-pre-divided update in one task — see _local_fixed_rounds_pr
         return _local_fixed_rounds_pr(

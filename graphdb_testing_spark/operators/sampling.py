@@ -24,11 +24,7 @@ from pyspark.sql import functions as F
 
 
 from ..hashutil import hash_mod as _hash_mod  # the one portable draw
-from .util import local_input
-
-#: edge-row bound for the single-task walk fast paths (~24 B/row ⇒
-#: ≤192 MB in one task); past it the per-step join loops run
-LOCAL_NE_MAX = 8_000_000
+from .util import map_single_task, np_edges, single_task
 
 
 def _md5_mod(salt: str, parts: list, mod: int) -> int:
@@ -41,41 +37,29 @@ def _md5_mod(salt: str, parts: list, mod: int) -> int:
 
 
 def _np_adj(batches, with_wgt: bool = False):
-    """Arrow batches of an edge table → per-vertex ascending-``dst``
-    neighbor arrays: ``(verts, starts, nbr[, wgt])`` where vertex
-    ``verts[i]``'s neighbors are ``nbr[starts[i]:starts[i+1]]``.
-    Distinct (src, dst); with ``with_wgt`` the per-pair weight is the
-    MAX (mirroring :func:`weighted_adjacency`)."""
+    """Arrow batches of a symmetric edge table → per-vertex
+    ascending-``dst`` neighbor arrays: ``(verts, starts, nbr[, wgt])``
+    where vertex ``verts[i]``'s neighbors are
+    ``nbr[starts[i]:starts[i+1]]``.  Distinct (src, dst); with
+    ``with_wgt`` the per-pair weight is the MAX (mirroring
+    :func:`weighted_adjacency`)."""
     import numpy as np
 
-    srcs: list = []
-    dsts: list = []
-    wgts: list = []
-    for pdf in batches:
-        srcs.append(pdf["src"].to_numpy(dtype=np.int64))
-        dsts.append(pdf["dst"].to_numpy(dtype=np.int64))
-        if with_wgt:
-            wgts.append(pdf["wgt"].to_numpy(dtype=np.int64))
-    src = np.concatenate(srcs) if srcs else np.empty(0, np.int64)
-    dst = np.concatenate(dsts) if dsts else np.empty(0, np.int64)
+    ids, si, di, *extra = np_edges(batches, *([("wgt", "int64")] if with_wgt else []))
+    # ids is sorted, so (si, di) order is (src, dst) order
     if with_wgt:
-        w = np.concatenate(wgts) if wgts else np.empty(0, np.int64)
-        order = np.lexsort((w, dst, src))
-        src, dst, w = src[order], dst[order], w[order]
+        order = np.lexsort((extra[0], di, si))
+        si, di, w = si[order], di[order], extra[0][order]
         # last of each (src, dst) run holds the max weight
-        keep = np.r_[(src[1:] != src[:-1]) | (dst[1:] != dst[:-1]), True]
-        src, dst, w = src[keep], dst[keep], w[keep]
+        keep = np.r_[(si[1:] != si[:-1]) | (di[1:] != di[:-1]), True]
+        si, di, w = si[keep], di[keep], w[keep]
     else:
-        pairs = np.unique(np.stack([src, dst]), axis=1)
-        src, dst = pairs[0], pairs[1]
-        order = np.lexsort((dst, src))
-        src, dst = src[order], dst[order]
-        w = None
-    verts, starts = np.unique(src, return_index=True)
-    starts = np.r_[starts, src.size]
+        si, di = np.unique(np.stack([si, di]), axis=1)
+    # every vertex is a src, so row i of ids starts at the first si == i
+    starts = np.searchsorted(si, np.arange(ids.size + 1))
     if with_wgt:
-        return verts, starts, dst, w
-    return verts, starts, dst
+        return ids, starts, ids[di], w
+    return ids, starts, ids[di]
 
 
 def _local_random_walks(
@@ -105,7 +89,7 @@ def _local_random_walks(
             rows, columns=["walk_id", "step", "vertex"]
         ).astype({"walk_id": "int64", "step": "int32", "vertex": "int64"})
 
-    return local_input(e).coalesce(1).mapInPandas(run, "walk_id long, step int, vertex long")
+    return map_single_task(e, run, "walk_id long, step int, vertex long")
 
 
 def _local_weighted_walks(
@@ -137,7 +121,7 @@ def _local_weighted_walks(
             rows, columns=["walk_id", "step", "vertex"]
         ).astype({"walk_id": "int64", "step": "int32", "vertex": "int64"})
 
-    return local_input(e).coalesce(1).mapInPandas(run, "walk_id long, step int, vertex long")
+    return map_single_task(e, run, "walk_id long, step int, vertex long")
 
 
 def _local_node2vec_walks(
@@ -192,7 +176,7 @@ def _local_node2vec_walks(
             rows, columns=["walk_id", "step", "vertex"]
         ).astype({"walk_id": "int64", "step": "int32", "vertex": "int64"})
 
-    return local_input(e).coalesce(1).mapInPandas(run, "walk_id long, step int, vertex long")
+    return map_single_task(e, run, "walk_id long, step int, vertex long")
 
 
 def indexed_adjacency(edges: DataFrame) -> DataFrame:
@@ -239,7 +223,7 @@ def random_walks(
     indexed adjacency.  Walks never dead-end on a symmetric graph
     (any reached vertex has at least its predecessor as a neighbor).
     """
-    if edges.count() <= LOCAL_NE_MAX:
+    if single_task("random_walks", edges.count()):
         # guarded single-task fast path (round-10): same seed set,
         # ascending-dst indexing, and md5 draw — exact
         return _local_random_walks(
@@ -392,7 +376,7 @@ def weighted_random_walks(
     neighbor list, filtered to the single interval hit — ``Σ deg``
     rows per step, the inherent cost of weighted selection without a
     precomputed alias table."""
-    if edges.count() <= LOCAL_NE_MAX:
+    if single_task("weighted_random_walks", edges.count()):
         # guarded single-task fast path (round-10): same max-weight
         # integer CDF and md5 draw — exact
         return _local_weighted_walks(
@@ -453,7 +437,7 @@ def node2vec_walks(
     :func:`weighted_random_walks`, with per-(walker, step) cumulative
     weights instead of a precomputed per-vertex CDF.
     """
-    if edges.count() <= LOCAL_NE_MAX:
+    if single_task("node2vec_walks", edges.count()):
         # guarded single-task fast path (round-10): same candidate
         # ordering, integer multipliers, and md5 draw — exact
         return _local_node2vec_walks(

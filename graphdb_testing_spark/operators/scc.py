@@ -38,11 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .util import iter_partitions, local_input, state_hint
-
-#: edge-row bound for the single-task fast path (~16 B/row ⇒ ≤128 MB
-#: in one task); past it the distributed trim/color/settle loop runs
-LOCAL_NE_MAX = 8_000_000
+from .util import iter_partitions, map_single_task, np_edges, single_task, state_hint
 
 
 def _local_scc(e: DataFrame, max_outer: int = 30) -> DataFrame:
@@ -68,17 +64,8 @@ def _local_scc(e: DataFrame, max_outer: int = 30) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        srcs: list = []
-        dsts: list = []
-        for pdf in batches:
-            srcs.append(pdf["src"].to_numpy(dtype=np.int64))
-            dsts.append(pdf["dst"].to_numpy(dtype=np.int64))
-        src = np.concatenate(srcs) if srcs else np.empty(0, np.int64)
-        dst = np.concatenate(dsts) if dsts else np.empty(0, np.int64)
-        ids = np.unique(np.concatenate([src, dst]))
+        ids, si, di = np_edges(batches, directed=True)
         n = ids.size
-        si = np.searchsorted(ids, src)
-        di = np.searchsorted(ids, dst)
         scc = np.full(n, -1, dtype=np.int64)
         alive = np.ones(n, dtype=bool)
         vidx = np.arange(n, dtype=np.int64)
@@ -130,7 +117,7 @@ def _local_scc(e: DataFrame, max_outer: int = 30) -> DataFrame:
             alive &= ~settled
         yield pd.DataFrame({"id": ids, "scc_id": ids[scc]})
 
-    return local_input(e).coalesce(1).mapInPandas(run, "id long, scc_id long")
+    return map_single_task(e, run, "id long, scc_id long")
 
 
 def _minlabel_forward(
@@ -184,7 +171,7 @@ def strongly_connected_components(
     is deeper than ``max_outer`` peel rounds (raise the cap for
     pathological chain graphs).
     """
-    if edges.count() <= LOCAL_NE_MAX:
+    if single_task("strongly_connected_components", edges.count()):
         # guarded single-task fast path (round-10): the scc_id output
         # is algorithm-independent (min id under mutual reachability),
         # so the vectorized FW-BW peel matches structurally; it honors
@@ -296,8 +283,3 @@ def strongly_connected_components(
         out = out.unionAll(p)
     return out
 
-
-def scc_sizes(labels: DataFrame) -> DataFrame:
-    """``(scc_id, size)`` histogram (the histogram-sink shape of
-    ``src/util/histogram.c``)."""
-    return labels.groupBy("scc_id").agg(F.count("*").alias("size"))

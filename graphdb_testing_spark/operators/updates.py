@@ -268,11 +268,6 @@ def insert_if_absent(edges: DataFrame, new_edges: DataFrame) -> DataFrame:
     return edges.unionByName(fresh.select(*edges.columns))
 
 
-def update_throughput(n_actions: int, seconds: float) -> float:
-    """The M13 metric: actions applied per second (edges/sec)."""
-    return n_actions / seconds if seconds > 0 else float("inf")
-
-
 def merge_rollup(
     old: DataFrame,
     delta_events: DataFrame,

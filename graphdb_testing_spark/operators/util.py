@@ -207,21 +207,83 @@ def checkpoint_active(state: DataFrame) -> tuple[DataFrame, int]:
 #: by any query path; carries no data, only the branch taken.
 FAST_PATH_DECISIONS: dict[str, bool] = {}
 
+#: Edge-row bound of every single-task graph kernel (~16 B/row ⇒
+#: ≤128 MB in one task); past it the kernel's distributed DataFrame
+#: loop runs.  Compared only in :func:`single_task`.
+LOCAL_NE_MAX = 8_000_000
+
+#: Bound on the |roots| × |E| state rows of the multi-root single-task
+#: kernels (multi-source BFS, Brandes betweenness).
+LOCAL_STATE_MAX = 64_000_000
+
 
 def record_fast_path(family: str, fired: bool) -> None:
     """Record which side of a scale guard a kernel invocation took."""
     FAST_PATH_DECISIONS[family] = fired
 
 
-def local_input(e: DataFrame) -> DataFrame:
-    """Materialize a guard-bounded relation with FULL parallelism
-    before a single-task kernel collapses it with ``coalesce(1)``.
+def single_task(
+    family: str, ne: int | None, eligible: bool = True, state_rows: int = 0
+) -> bool:
+    """The scale guard of every single-task graph kernel: True when the
+    caller's own condition ``eligible`` holds, its ``ne``-row edge table
+    fits one task and its per-root state (``state_rows``, multi-root
+    kernels) fits :data:`LOCAL_STATE_MAX`.  Records the decision under
+    ``family``.  The bounds are read at call time, so patching this
+    module's constants moves every guard at once.  ``ne`` may be None
+    when ``eligible`` is False (the caller skips its count job)."""
+    fired = eligible and ne <= LOCAL_NE_MAX and state_rows <= LOCAL_STATE_MAX
+    record_fast_path(family, fired)
+    return fired
 
-    Without this, ``coalesce(1)`` pulls the whole upstream derivation
-    (e.g. the events self-join + aggregation behind ``user_graph``)
-    onto one core: post-shuffle coalesce sets the reduce side of every
-    upstream exchange to one task (measured: two_shortest 13.2 s with
-    the derivation inside the kernel job vs ~3 s checkpointed).  The
-    eager localCheckpoint runs the derivation wide once; the kernel
-    task then reads materialized blocks."""
-    return e.localCheckpoint()
+
+def map_single_task(e: DataFrame, fn, schema: str) -> DataFrame:
+    """Run the pandas-iterator kernel ``fn`` over ALL of the
+    guard-bounded relation ``e`` in one task (``mapInPandas`` over
+    ``coalesce(1)``); the driver never holds edge data.
+
+    ``e`` is first materialized with FULL parallelism.  Without this,
+    ``coalesce(1)`` pulls the whole upstream derivation (e.g. the
+    events self-join + aggregation behind ``user_graph``) onto one
+    core: post-shuffle coalesce sets the reduce side of every upstream
+    exchange to one task (measured: two_shortest 13.2 s with the
+    derivation inside the kernel job vs ~3 s checkpointed).  The eager
+    localCheckpoint runs the derivation wide once; the kernel task then
+    reads materialized blocks."""
+    return e.localCheckpoint().coalesce(1).mapInPandas(fn, schema)
+
+
+def np_edges(batches, *cols: tuple[str, str], directed: bool = False) -> tuple:
+    """Concatenate the pandas batches of an edge table into NumPy
+    ``(ids, si, di, *extra)``: ``ids`` the sorted vertex ids, ``si`` /
+    ``di`` the positions of each row's ``src`` / ``dst`` in ``ids``
+    (row order kept), and one array per ``(name, dtype)`` of ``cols``.
+
+    The single-task kernels require a SYMMETRIC table, whose ``src``
+    covers every vertex, so ``ids`` is the distinct ``src``.  A ``dst``
+    outside it would make ``searchsorted`` scatter updates to the wrong
+    vertex (or past the end), so it raises instead.  ``directed``
+    tables take ``ids`` from ``src ∪ dst`` with no check."""
+    import numpy as np
+
+    names = ["src", "dst", *(c for c, _ in cols)]
+    types = [np.int64, np.int64, *(np.dtype(t) for _, t in cols)]
+    parts: list[list] = [[] for _ in names]
+    for pdf in batches:
+        for part, c, t in zip(parts, names, types):
+            part.append(pdf[c].to_numpy(dtype=t))
+    src, dst, *extra = (
+        np.concatenate(part) if part else np.empty(0, t)
+        for part, t in zip(parts, types)
+    )
+    ids = np.unique(np.concatenate([src, dst]) if directed else src)
+    si = np.searchsorted(ids, src)
+    di = np.searchsorted(ids, dst)
+    if not directed and dst.size and not (
+        (di < ids.size).all() and (ids[np.minimum(di, ids.size - 1)] == dst).all()
+    ):
+        raise ValueError(
+            "edge table is not symmetric: a dst vertex never appears as "
+            "src — single-task graph kernels require the symmetrized relation"
+        )
+    return (ids, si, di, *extra)

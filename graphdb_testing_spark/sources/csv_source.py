@@ -91,11 +91,3 @@ def resolve_names(edges_by_name: DataFrame, physmap: DataFrame) -> DataFrame:
         )
     )
     return out
-
-
-def physmap_reverse(physmap: DataFrame, ids: DataFrame) -> DataFrame:
-    """id → name reverse lookup (``stinger_mapping_physid_direct``
-    analog)."""
-    return ids.join(physmap, ids.columns[0] == physmap.id, "left").select(
-        physmap.id, physmap.name
-    )

@@ -1,4 +1,4 @@
-"""Sinks: histogram CSV files and the named result store.
+"""Sinks: value histograms and the named result store.
 
 Reference: histogram sink (``src/util/histogram.c:6-145`` — counts
 per label/value written to ``name.batch.csv``) and the workflow's
@@ -16,18 +16,6 @@ from pyspark.sql import functions as F
 def histogram(df: DataFrame, col: str) -> DataFrame:
     """Value histogram: ``(value, count)``."""
     return df.groupBy(F.col(col).alias("value")).agg(F.count("*").alias("count"))
-
-
-def write_histogram(df: DataFrame, col: str, directory: str, name: str, batch: int) -> None:
-    """CSV histogram dump named like the reference's
-    ``<name>.<batch>.csv`` files."""
-    (
-        histogram(df, col)
-        .coalesce(1)
-        .write.mode("overwrite")
-        .option("header", "true")
-        .csv(f"{directory}/{name}.{batch}.csv")
-    )
 
 
 class NamedResultStore:

@@ -11,6 +11,7 @@ import random
 import pytest
 
 from graphdb_testing_spark.operators import betweenness as bcmod
+from graphdb_testing_spark.operators import util
 
 
 @pytest.fixture(scope="module")
@@ -42,15 +43,17 @@ def _emap(df):
 
 def test_vertex_bc_local_matches_dataframe_path(spark, sym_edges, monkeypatch):
     fast = _vmap(bcmod.betweenness(sym_edges, ROOTS))
-    monkeypatch.setattr(bcmod, "LOCAL_NE_MAX", 0)
+    monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
     slow = _vmap(bcmod.betweenness(sym_edges, ROOTS))
+    assert util.FAST_PATH_DECISIONS["betweenness"] is False
     assert fast == slow
 
 
 def test_edge_bc_local_matches_dataframe_path(spark, sym_edges, monkeypatch):
     fast = _emap(bcmod.edge_betweenness(sym_edges, ROOTS))
-    monkeypatch.setattr(bcmod, "LOCAL_NE_MAX", 0)
+    monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
     slow = _emap(bcmod.edge_betweenness(sym_edges, ROOTS))
+    assert util.FAST_PATH_DECISIONS["edge_betweenness"] is False
     assert fast == slow
 
 
@@ -63,6 +66,7 @@ def test_vertex_bc_deterministic_across_layouts(spark, sym_edges):
 def test_root_absent_from_graph(spark, sym_edges, monkeypatch):
     roots = [0, 999_999]  # second root not a vertex
     fast = _vmap(bcmod.betweenness(sym_edges, roots))
-    monkeypatch.setattr(bcmod, "LOCAL_NE_MAX", 0)
+    monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
     slow = _vmap(bcmod.betweenness(sym_edges, roots))
+    assert util.FAST_PATH_DECISIONS["betweenness"] is False
     assert fast == slow

@@ -11,6 +11,7 @@ import random
 import pytest
 
 from graphdb_testing_spark.operators import bfs as bfsmod
+from graphdb_testing_spark.operators import util
 
 
 @pytest.fixture(scope="module")
@@ -43,24 +44,27 @@ def _rows(df):
 @pytest.mark.parametrize("source,rounds", [(0, 6), (0, 2), (205, 4), (99999, 3)])
 def test_local_sssp_weighted_matches(spark, weighted_edges, monkeypatch, source, rounds):
     fast = _rows(bfsmod.sssp_weighted(weighted_edges, source, rounds=rounds))
-    monkeypatch.setattr(bfsmod, "LOCAL_NE_MAX", 0)
+    monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
     slow = _rows(bfsmod.sssp_weighted(weighted_edges, source, rounds=rounds))
+    assert util.FAST_PATH_DECISIONS["sssp_weighted"] is False
     assert fast == slow
 
 
 @pytest.mark.parametrize("source,rounds", [(0, 6), (102, 3), (99999, 2)])
 def test_local_widest_path_matches(spark, weighted_edges, monkeypatch, source, rounds):
     fast = _rows(bfsmod.widest_path(weighted_edges, source, rounds=rounds))
-    monkeypatch.setattr(bfsmod, "LOCAL_NE_MAX", 0)
+    monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
     slow = _rows(bfsmod.widest_path(weighted_edges, source, rounds=rounds))
+    assert util.FAST_PATH_DECISIONS["widest_path"] is False
     assert fast == slow
 
 
 @pytest.mark.parametrize("source,rounds", [(0, 6), (0, 1), (205, 4), (99999, 2)])
 def test_local_two_shortest_matches(spark, weighted_edges, monkeypatch, source, rounds):
     fast = _rows(bfsmod.two_shortest(weighted_edges, source, rounds=rounds))
-    monkeypatch.setattr(bfsmod, "LOCAL_NE_MAX", 0)
+    monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
     slow = _rows(bfsmod.two_shortest(weighted_edges, source, rounds=rounds))
+    assert util.FAST_PATH_DECISIONS["two_shortest"] is False
     assert fast == slow
 
 
@@ -69,6 +73,7 @@ def test_local_two_shortest_matches(spark, weighted_edges, monkeypatch, source, 
 )
 def test_local_multi_source_bfs_matches(spark, weighted_edges, monkeypatch, roots, depth):
     fast = _rows(bfsmod.multi_source_bfs(weighted_edges, roots, max_depth=depth))
-    monkeypatch.setattr(bfsmod, "LOCAL_NE_MAX", 0)
+    monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
     slow = _rows(bfsmod.multi_source_bfs(weighted_edges, roots, max_depth=depth))
+    assert util.FAST_PATH_DECISIONS["multi_source_bfs"] is False
     assert fast == slow

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from graphdb_testing_spark.operators import community as cmod
+from graphdb_testing_spark.operators import util
 
 
 @pytest.fixture(scope="module")
@@ -42,13 +43,14 @@ def test_local_agglomeration_matches(spark, weighted_edges, monkeypatch, levels)
             weighted_edges, max_levels=levels, min_score_filter=False
         ).collect()
     }
-    monkeypatch.setattr(cmod, "LOCAL_NE_MAX", 0)
+    monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
     slow = {
         (r["id"], r["community"])
         for r in cmod.community_agglomeration(
             weighted_edges, max_levels=levels, min_score_filter=False
         ).collect()
     }
+    assert util.FAST_PATH_DECISIONS["community_agglomeration"] is False
     assert fast == slow
     assert len(fast) == 80
 

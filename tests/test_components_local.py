@@ -36,11 +36,12 @@ def test_local_cc_matches_dataframe_path(spark, multi_component_edges, monkeypat
         (r["id"], r["label"])
         for r in compmod.connected_components(multi_component_edges).collect()
     }
-    monkeypatch.setattr(compmod, "LOCAL_NE_MAX", 0)
+    monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
     slow = {
         (r["id"], r["label"])
         for r in compmod.connected_components(multi_component_edges).collect()
     }
+    assert util.FAST_PATH_DECISIONS["components"] is False
     assert fast == slow
     labels = {lab for _, lab in fast}
     assert labels == {0, 200, 400, 600}
@@ -56,11 +57,12 @@ def test_local_bfs_matches_dataframe_path(spark, multi_component_edges, monkeypa
         (r["id"], r["dist"])
         for r in bfsmod.bfs(multi_component_edges, 600).collect()
     }
-    monkeypatch.setattr(bfsmod, "LOCAL_NE_MAX", 0)
+    monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
     slow = {
         (r["id"], r["dist"])
         for r in bfsmod.bfs(multi_component_edges, 600).collect()
     }
+    assert util.FAST_PATH_DECISIONS["bfs"] is False
     assert fast == slow
     # chain end is 40 hops away; islands unreachable (absent)
     assert (640, 40) in fast
@@ -72,18 +74,20 @@ def test_local_bfs_max_depth_and_missing_source(spark, multi_component_edges, mo
         (r["id"], r["dist"])
         for r in bfsmod.bfs(multi_component_edges, 600, max_depth=3).collect()
     }
-    monkeypatch.setattr(bfsmod, "LOCAL_NE_MAX", 0)
+    monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
     slow = {
         (r["id"], r["dist"])
         for r in bfsmod.bfs(multi_component_edges, 600, max_depth=3).collect()
     }
+    assert util.FAST_PATH_DECISIONS["bfs"] is False
     assert fast == slow
     assert max(d for _, d in fast) == 3
     monkeypatch.undo()
     # a source without edges keeps its (source, 0) row on both paths
-    for guard in (bfsmod.LOCAL_NE_MAX, 0):
-        monkeypatch.setattr(bfsmod, "LOCAL_NE_MAX", guard)
+    for guard in (util.LOCAL_NE_MAX, 0):
+        monkeypatch.setattr(util, "LOCAL_NE_MAX", guard)
         seed_only = bfsmod.bfs(multi_component_edges, 99999).collect()
+        assert util.FAST_PATH_DECISIONS["bfs"] is (guard > 0)
         assert [(r["id"], r["dist"]) for r in seed_only] == [(99999, 0)]
 
 
@@ -94,13 +98,14 @@ def test_distributed_cc_without_jump_runs_many_chunks(spark, multi_component_edg
         (r["id"], r["label"])
         for r in compmod.connected_components(multi_component_edges).collect()
     }
-    monkeypatch.setattr(compmod, "LOCAL_NE_MAX", 0)
+    monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
     slow = {
         (r["id"], r["label"])
         for r in compmod.connected_components(
             multi_component_edges, pointer_jump=False
         ).collect()
     }
+    assert util.FAST_PATH_DECISIONS["components"] is False
     assert fast == slow
 
 
@@ -109,8 +114,9 @@ def test_distributed_bfs_max_depth_mid_chunk(spark, multi_component_edges, monke
         (r["id"], r["dist"])
         for r in bfsmod.bfs(multi_component_edges, 600, max_depth=6).collect()
     }
-    monkeypatch.setattr(bfsmod, "LOCAL_NE_MAX", 0)
+    monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
     slow = bfsmod.bfs(multi_component_edges, 600, max_depth=6, checkpoint_every=4)
+    assert util.FAST_PATH_DECISIONS["bfs"] is False
     assert slow.schema.simpleString() == "struct<id:bigint,dist:int>"
     assert fast == {(r["id"], r["dist"]) for r in slow.collect()}
     assert len(fast) == 7 and (606, 6) in fast
@@ -121,8 +127,9 @@ def test_distributed_bfs_source_past_int32(spark, multi_component_edges, monkeyp
     stay on long ids and answer like the single-task path."""
     source = 2**31 + 7
     fast = [(r["id"], r["dist"]) for r in bfsmod.bfs(multi_component_edges, source).collect()]
-    monkeypatch.setattr(bfsmod, "LOCAL_NE_MAX", 0)
+    monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
     slow = [(r["id"], r["dist"]) for r in bfsmod.bfs(multi_component_edges, source).collect()]
+    assert util.FAST_PATH_DECISIONS["bfs"] is False
     assert fast == slow == [(source, 0)]
 
 
@@ -144,10 +151,11 @@ def test_shuffled_state_loops_match_single_task(spark, multi_component_edges, mo
         return {(r["id"], r["dist"]) for r in out.collect()}
 
     want_cc, want_bfs = cc(), levels(600, max_depth=6)
-    monkeypatch.setattr(compmod, "LOCAL_NE_MAX", 0)
-    monkeypatch.setattr(bfsmod, "LOCAL_NE_MAX", 0)
+    monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
     monkeypatch.setattr(util, "BROADCAST_STATE_MAX_ROWS", 0)
     assert cc() == want_cc
+    assert util.FAST_PATH_DECISIONS["components"] is False
     assert levels(600, max_depth=6, checkpoint_every=4) == want_bfs
+    assert util.FAST_PATH_DECISIONS["bfs"] is False
     assert levels(99999) == {(99999, 0)}
     assert levels(2**31 + 7) == {(2**31 + 7, 0)}

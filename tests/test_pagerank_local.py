@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from graphdb_testing_spark.operators import pagerank as prmod
+from graphdb_testing_spark.operators import util
 
 
 @pytest.fixture(scope="module")
@@ -33,16 +34,18 @@ def _r6(df):
 @pytest.mark.parametrize("num_iter", [3, 5, None])
 def test_local_matches_dataframe_path(spark, sym_edges, num_iter, monkeypatch):
     fast = _r6(prmod.pagerank(sym_edges, num_iter=num_iter))
-    monkeypatch.setattr(prmod, "LOCAL_NE_MAX", 0)
+    monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
     slow = _r6(prmod.pagerank(sym_edges, num_iter=num_iter))
+    assert util.FAST_PATH_DECISIONS["pagerank"] is False
     assert fast == slow
 
 
 def test_local_warm_start_matches(spark, sym_edges, monkeypatch):
     seed = prmod.pagerank(sym_edges, num_iter=4)
     fast = _r6(prmod.pagerank(sym_edges, init_ranks=seed, num_iter=3))
-    monkeypatch.setattr(prmod, "LOCAL_NE_MAX", 0)
+    monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
     slow = _r6(prmod.pagerank(sym_edges, init_ranks=seed, num_iter=3))
+    assert util.FAST_PATH_DECISIONS["pagerank"] is False
     assert fast == slow
 
 
@@ -59,9 +62,10 @@ def test_narrow_warm_start_joins_on_int_ids(spark, sym_edges, monkeypatch):
         joins.extend(l for l in plan.splitlines() if "Join LeftOuter" in l)
         return real(self, *a, **k)
 
-    monkeypatch.setattr(prmod, "LOCAL_NE_MAX", 0)
+    monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
     monkeypatch.setattr(cls, "localCheckpoint", spy)
     out = prmod.pagerank(sym_edges, init_ranks=seed, num_iter=3)
+    assert util.FAST_PATH_DECISIONS["pagerank"] is False
     assert out.schema["id"].dataType.simpleString() == "bigint"
     assert joins and not any("cast(" in l for l in joins), joins
     monkeypatch.undo()
@@ -76,9 +80,10 @@ def test_narrow_warm_start_skips_ids_past_int32(spark, sym_edges, stale_id, monk
     it onto a real vertex (2**32 + 5 wraps to vertex 5)."""
     seed = prmod.pagerank(sym_edges, num_iter=4)
     stale = seed.unionAll(spark.createDataFrame([(stale_id, 0.5)], seed.schema))
-    monkeypatch.setattr(prmod, "LOCAL_NE_MAX", 0)
+    monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
     want = _r6(prmod.pagerank(sym_edges, init_ranks=seed, num_iter=3))
     assert _r6(prmod.pagerank(sym_edges, init_ranks=stale, num_iter=3)) == want
+    assert util.FAST_PATH_DECISIONS["pagerank"] is False
 
 
 def test_local_is_deterministic_across_layouts(spark, sym_edges):
@@ -118,16 +123,18 @@ def sym_weighted_edges(spark):
 @pytest.mark.parametrize("num_iter", [1, 5])
 def test_local_weighted_matches(spark, sym_weighted_edges, monkeypatch, num_iter):
     fast = _r6(prmod.weighted_pagerank(sym_weighted_edges, num_iter=num_iter))
-    monkeypatch.setattr(prmod, "LOCAL_NE_MAX", 0)
+    monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
     slow = _r6(prmod.weighted_pagerank(sym_weighted_edges, num_iter=num_iter))
+    assert util.FAST_PATH_DECISIONS["weighted_pagerank"] is False
     assert fast == slow
 
 
 @pytest.mark.parametrize("seeds", [[0, 1, 2], [5], [0, 99999]])
 def test_local_personalized_matches(spark, sym_weighted_edges, monkeypatch, seeds):
     fast = _r6(prmod.personalized_pagerank(sym_weighted_edges, seeds, num_iter=5))
-    monkeypatch.setattr(prmod, "LOCAL_NE_MAX", 0)
+    monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
     slow = _r6(prmod.personalized_pagerank(sym_weighted_edges, seeds, num_iter=5))
+    assert util.FAST_PATH_DECISIONS["personalized_pagerank"] is False
     assert fast == slow
 
 
@@ -135,3 +142,29 @@ def test_local_weighted_deterministic_across_layouts(spark, sym_weighted_edges):
     a = _r6(prmod.weighted_pagerank(sym_weighted_edges.repartition(7), num_iter=4))
     b = _r6(prmod.weighted_pagerank(sym_weighted_edges.repartition(3), num_iter=4))
     assert a == b
+
+
+
+@pytest.mark.parametrize("forced", [False, True])
+def test_warm_start_rejects_null_and_nan_ranks(spark, sym_edges, monkeypatch, forced):
+    """A warm rank row of a graph vertex with a NULL or NaN pr is
+    rejected on both sides of the guard (the distributed loop would
+    spread NaN to every vertex); such a row for an id outside the graph
+    is ignored like any other stale row."""
+    if forced:
+        monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
+    good = [(r["id"], r["pr"]) for r in prmod.pagerank(sym_edges, num_iter=4).collect()]
+
+    def warm_run(rows):
+        warm = spark.createDataFrame(rows, "id long, pr double")
+        return prmod.pagerank(sym_edges, init_ranks=warm, num_iter=3)
+
+    msg = "init_ranks holds a NULL or NaN pr for a graph vertex"
+    for bad in (float("nan"), None):
+        with pytest.raises(Exception, match=msg) as err:
+            warm_run(good[1:] + [(good[0][0], bad)]).collect()
+        # the driver raises ValueError; the single task raises it inside
+        assert isinstance(err.value, ValueError) or f"ValueError: {msg}" in str(err.value)
+        assert util.FAST_PATH_DECISIONS["pagerank"] is not forced
+    stale = [(99999, float("nan")), (99998, None)]
+    assert _r6(warm_run(good + stale)) == _r6(warm_run(good))

@@ -11,6 +11,7 @@ import pytest
 
 from graphdb_testing_spark.operators import scc as sccmod
 from graphdb_testing_spark.operators import triangles as trimod
+from graphdb_testing_spark.operators import util
 
 
 @pytest.fixture(scope="module")
@@ -39,11 +40,12 @@ def test_local_scc_matches_dataframe_path(spark, directed_edges, monkeypatch):
         (r["id"], r["scc_id"])
         for r in sccmod.strongly_connected_components(directed_edges).collect()
     }
-    monkeypatch.setattr(sccmod, "LOCAL_NE_MAX", 0)
+    monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
     slow = {
         (r["id"], r["scc_id"])
         for r in sccmod.strongly_connected_components(directed_edges).collect()
     }
+    assert util.FAST_PATH_DECISIONS["strongly_connected_components"] is False
     assert fast == slow
     # the three cycles + the 2-cycle are components; DAG tail singletons
     labels = {}

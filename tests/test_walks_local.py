@@ -9,6 +9,7 @@ import random
 import pytest
 
 from graphdb_testing_spark.operators import sampling as smod
+from graphdb_testing_spark.operators import util
 
 
 @pytest.fixture(scope="module")
@@ -40,8 +41,9 @@ def _rows(df):
 @pytest.mark.parametrize("length,every", [(3, 50), (5, 25)])
 def test_local_random_walks_match(spark, walk_edges, monkeypatch, length, every):
     fast = _rows(smod.random_walks(walk_edges, walk_length=length, start_every=every))
-    monkeypatch.setattr(smod, "LOCAL_NE_MAX", 0)
+    monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
     slow = _rows(smod.random_walks(walk_edges, walk_length=length, start_every=every))
+    assert util.FAST_PATH_DECISIONS["random_walks"] is False
     assert fast == slow
 
 
@@ -50,10 +52,11 @@ def test_local_weighted_walks_match(spark, walk_edges, monkeypatch, length, ever
     fast = _rows(
         smod.weighted_random_walks(walk_edges, walk_length=length, start_every=every)
     )
-    monkeypatch.setattr(smod, "LOCAL_NE_MAX", 0)
+    monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
     slow = _rows(
         smod.weighted_random_walks(walk_edges, walk_length=length, start_every=every)
     )
+    assert util.FAST_PATH_DECISIONS["weighted_random_walks"] is False
     assert fast == slow
 
 
@@ -62,8 +65,9 @@ def test_local_node2vec_walks_match(spark, walk_edges, monkeypatch, length, ever
     fast = _rows(
         smod.node2vec_walks(walk_edges, walk_length=length, start_every=every)
     )
-    monkeypatch.setattr(smod, "LOCAL_NE_MAX", 0)
+    monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
     slow = _rows(
         smod.node2vec_walks(walk_edges, walk_length=length, start_every=every)
     )
+    assert util.FAST_PATH_DECISIONS["node2vec_walks"] is False
     assert fast == slow
