@@ -9,15 +9,15 @@ model (``tests/sqlite/test.c:210-233``)::
       FROM edges JOIN distance ON edges.src = distance.vtx
       WHERE distance.dist = d       -- until 0 rows inserted
 
-Spark-first design: with a broadcast state, a semi-naive level loop
-over the reached vertices ``(id, dist, active)``, ``active`` marking
-the last level's frontier: a round keeps the self-loop rows of
-``edges ∪ self-loops`` and rows from active senders, and takes
-``min(own dist, sender dist + 1)`` — the ``WHERE distance.dist = d``
-frontier, with the visited-set subtraction folded into the min.  Above
-the broadcast threshold the frontier loop joins each new frontier
-against the edges and subtracts the visited set with a ``left_anti``
-join.  Per-level sizes (``test.c:226-227``) come from :func:`bfs_levels`.
+Spark-first design: a semi-naive level loop over the reached vertices
+``(id, dist, active)``, ``active`` marking the last level's frontier:
+a round keeps the self-loop rows of ``edges ∪ self-loops`` and rows
+from active senders, and takes ``min(own dist, sender dist + 1)`` —
+the ``WHERE distance.dist = d`` frontier, with the visited-set
+subtraction folded into the min.  The state is broadcast or shuffled
+by its size (:func:`~graphdb_testing_spark.operators.util.state_hint`);
+the loop is the same.  Per-level sizes (``test.c:226-227``) come from
+:func:`bfs_levels`.
 """
 
 from __future__ import annotations
@@ -26,7 +26,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .util import (
-    broadcasts,
     checkpoint_active,
     iter_partitions,
     map_single_task,
@@ -269,83 +268,41 @@ def bfs(
 ) -> DataFrame:
     """``(id, dist)`` hop distances from ``source`` over a symmetric
     edge table; unreachable vertices are absent (reference leaves them
-    at "infinity", i.e. not in the ``distance`` table).  With a
-    broadcast state the distributed loop runs ``checkpoint_every``
-    semi-naive levels per chunk until a chunk reaches no new vertex;
-    above the threshold it runs :func:`_frontier_bfs`."""
+    at "infinity", i.e. not in the ``distance`` table).  The
+    distributed loop runs ``checkpoint_every`` semi-naive levels per
+    chunk until a chunk reaches no new vertex."""
     ne = edges.count()
     if single_task("bfs", ne):
         # guarded single-task fast path (round-10): per-level cost at
         # sf0.1 is scheduling + broadcast latency, not compute — see
         # _local_bfs; identical integer levels, cluster-scale graphs
-        # take the loops below
+        # take the loop below
         return _local_bfs(edges.select("src", "dst"), source, max_depth)
     id_type = edges.schema["src"].dataType.simpleString()
     # the int32 check covers the source too
     ids, nv, key = vertex_ids(edges, source)
     dist = edges.sparkSession.range(1).select(
-        F.lit(source).cast(key).alias("id"), F.lit(0).alias("dist")
+        F.lit(source).cast(key).alias("id"),
+        F.lit(0).alias("dist"),
+        F.lit(True).alias("active"),
     )
-    if not broadcasts(nv):
-        e = edges.select(F.col("src").cast(key).alias("src"), F.col("dst").cast(key).alias("dst"))
-        dist = _frontier_bfs(e.coalesce(iter_partitions(ne)), dist, max_depth, checkpoint_every)
-    else:
-        # the source's own self-loop keeps its (source, 0) row when it
-        # has no edges
-        rel = self_loop_relation(edges, ids, key, ne, nv, source=source)
-        dist = dist.withColumn("active", F.lit(True))
-        depth = 0
-        while depth < max_depth:
-            k = min(checkpoint_every, max_depth - depth)
-            chunk_start = dist
-            for _ in range(k):
-                dist = min_round(rel, dist, nv, "dist", 1)
-            dist, active = checkpoint_active(dist)
-            chunk_start.unpersist()
-            depth += k
-            if active == 0:
-                break
-        rel.unpersist()
+    # the source's own self-loop keeps its (source, 0) row when it has
+    # no edges
+    rel = self_loop_relation(edges, ids, key, ne, nv, source=source)
+    depth = 0
+    while depth < max_depth:
+        k = min(checkpoint_every, max_depth - depth)
+        chunk_start = dist
+        for _ in range(k):
+            dist = min_round(rel, dist, nv, "dist", 1)
+        dist, active = checkpoint_active(dist)
+        chunk_start.unpersist()
+        depth += k
+        if active == 0:
+            break
+    rel.unpersist()
     ids.unpersist()
     return dist.select(F.col("id").cast(id_type).alias("id"), "dist")
-
-
-def _frontier_bfs(
-    e: DataFrame, dist: DataFrame, max_depth: int, checkpoint_every: int
-) -> DataFrame:
-    """The frontier loop, kept for a shuffled state (``nv`` above the
-    broadcast threshold), where the semi-naive rounds are not measured:
-    each level joins the edges against the last frontier, subtracts the
-    visited set with a ``left_anti`` join, and its ``count()`` is both
-    the convergence test and the frontier's materialization."""
-    frontier = dist
-    depth = 0
-    reached = 1
-    while depth < max_depth:
-        depth += 1
-        # frontier and visited set are broadcast while they are small,
-        # so the edge table stays put (shuffle fallback past the
-        # threshold)
-        nxt = (
-            e.join(state_hint(frontier, reached), e.src == frontier.id)
-            .select(F.col("dst").alias("id"))
-            .distinct()
-            .join(state_hint(dist, reached), "id", "left_anti")
-            .withColumn("dist", F.lit(depth).cast("int"))
-            .localCheckpoint()
-        )
-        n = nxt.count()
-        if n == 0:
-            nxt.unpersist()
-            break
-        # dist stays a lazy union of checkpointed frontiers; truncate
-        # the union tree periodically so the anti-join plan stays flat
-        reached += n
-        dist = dist.unionAll(nxt)
-        if depth % checkpoint_every == 0:
-            dist = dist.localCheckpoint()
-        frontier = nxt
-    return dist
 
 
 def sssp_weighted(

@@ -17,14 +17,12 @@ Spark-first design
   When the labels are broadcast, the relation is hash-partitioned on
   ``src`` and persisted once, so a round is one narrow stage with no
   exchange (:func:`~graphdb_testing_spark.operators.util.round_layout`).
-* Semi-naive (broadcast labels): the state carries an ``active`` flag
-  (label dropped in the last round), a round keeps only self-loop rows
-  and rows from active senders — the same integer fixpoint from fewer
-  joined rows — and the loop stops when a chunk plus its jump leaves
-  no vertex active, counted in the chunk's ``localCheckpoint`` job.
-* Shuffled labels (above the broadcast threshold) and the
-  ``dst_partitioned`` layout keep the naive rounds and stop when a
-  chunk leaves ``SUM(label)`` unchanged.
+* Semi-naive: the state carries an ``active`` flag (label dropped in
+  the last round), a round keeps only self-loop rows and rows from
+  active senders — the same integer fixpoint from fewer joined rows —
+  and the loop stops when a chunk plus its jump leaves no vertex
+  active, counted in the chunk's ``localCheckpoint`` job.  One loop
+  serves broadcast and shuffled labels alike.
 * Pointer-jumping (labels self-join) once per chunk halves the round
   count on high-diameter graphs, same as the reference's jump step.
 * ``localCheckpoint`` every ``unroll`` rounds truncates lineage (the
@@ -38,7 +36,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .util import (
-    broadcasts,
     checkpoint_active,
     map_single_task,
     min_round,
@@ -89,7 +86,6 @@ def connected_components(
     # low-diameter graphs converge in 1-2 chunks; linear plan growth
     # makes larger unrolls safe for high-diameter graphs
     pointer_jump: bool = True,
-    dst_partitioned: bool = False,
 ) -> DataFrame:
     """``(id, label)`` where ``label`` = min vertex id in the component.
 
@@ -102,9 +98,8 @@ def connected_components(
     round is a single ``join + groupBy.min`` with no merge-back join.
     One self-reference per round ⇒ the unrolled lazy plan grows
     **linearly** in ``unroll`` (a state-referenced-twice formulation
-    grows 2^k and stalls Catalyst beyond a handful of rounds).  With
-    broadcast labels only vertices whose label dropped in the previous
-    round send messages.
+    grows 2^k and stalls Catalyst beyond a handful of rounds).  Only
+    vertices whose label dropped in the previous round send messages.
 
     Pointer jumping (``label[v] := label[label[v]]``,
     ``static_components.c:30-37``) runs once per chunk on the
@@ -112,14 +107,13 @@ def connected_components(
     it collapses chains on high-diameter graphs without paying the
     exponential in-chunk plan tax.
 
-    Convergence: with broadcast labels the loop stops after the first
-    chunk (plus jump) that leaves no vertex active — labels only ever
-    decrease, so no active vertex ⇔ fixpoint; otherwise see
-    :func:`_sum_test_loop`.  Ids that all fit int32 run the loop on int
+    Convergence: the loop stops after the first chunk (plus jump) that
+    leaves no vertex active — labels only ever decrease, so no active
+    vertex ⇔ fixpoint.  Ids that all fit int32 run the loop on int
     keys; the output is cast back to the input type.
     """
     ne = edges.count()
-    if single_task("components", ne, not dst_partitioned):
+    if single_task("components", ne):
         # guarded single-task fast path (round-10): the per-round cost
         # at sf0.1 is stage scheduling + AQE re-planning for tiny
         # shuffles, not compute.  The fixpoint is the same min-id
@@ -131,27 +125,25 @@ def connected_components(
         return _local_components(edges.select("src", "dst"))
     id_type = edges.schema["src"].dataType.simpleString()
     ids, nv, key = vertex_ids(edges)
-    rel = self_loop_relation(edges, ids, key, ne, nv, dst_partitioned=dst_partitioned)
+    rel = self_loop_relation(edges, ids, key, ne, nv)
     labels = ids.select(
-        F.col("id").cast(key).alias("id"), F.col("id").cast(key).alias("label")
+        F.col("id").cast(key).alias("id"),
+        F.col("id").cast(key).alias("label"),
+        F.lit(True).alias("active"),
     )
-    if dst_partitioned or not broadcasts(nv):
-        labels = _sum_test_loop(rel, labels, nv, max_iter, unroll, pointer_jump)
-    else:
-        labels = labels.withColumn("active", F.lit(True))
-        done = 0
-        while done < max_iter:
-            k = min(unroll, max_iter - done)
-            chunk_start = labels
-            for _ in range(k):
-                labels = min_round(rel, labels, nv, "label", 0)
-            if pointer_jump:
-                labels = _pointer_jump(labels.localCheckpoint(), nv)
-            labels, active = checkpoint_active(labels)
-            chunk_start.unpersist()
-            done += k
-            if active == 0:
-                break
+    done = 0
+    while done < max_iter:
+        k = min(unroll, max_iter - done)
+        chunk_start = labels
+        for _ in range(k):
+            labels = min_round(rel, labels, nv, "label", 0)
+        if pointer_jump:
+            labels = _pointer_jump(labels.localCheckpoint(), nv)
+        labels, active = checkpoint_active(labels)
+        chunk_start.unpersist()
+        done += k
+        if active == 0:
+            break
     ids.unpersist()
     rel.unpersist()
     return labels.select(
@@ -162,59 +154,16 @@ def connected_components(
 
 def _pointer_jump(labels: DataFrame, nv: int) -> DataFrame:
     """``label[v] := label[label[v]]`` on materialized labels (O(1) plan
-    size here); with an ``active`` column, a vertex whose label drops
-    becomes active."""
+    size here); a vertex whose label drops becomes active."""
     parents = labels.select(F.col("id").alias("p_id"), F.col("label").alias("p_label"))
-    cols = ["id", F.coalesce("p_label", "label").alias("label")]
-    if "active" in labels.columns:
-        jumped = F.coalesce(F.col("p_label") < F.col("label"), F.lit(False))
-        cols.append((F.col("active") | jumped).alias("active"))
+    jumped = F.coalesce(F.col("p_label") < F.col("label"), F.lit(False))
     return labels.join(
         state_hint(parents, nv), labels.label == parents.p_id, "left"
-    ).select(*cols)
-
-
-def _sum_test_loop(
-    rel: DataFrame,
-    labels: DataFrame,
-    nv: int,
-    max_iter: int,
-    unroll: int,
-    pointer_jump: bool,
-) -> DataFrame:
-    """The naive loop, kept for a shuffled label state (``nv`` above the
-    broadcast threshold) and for the ``dst_partitioned`` layout, where
-    the semi-naive rounds are not measured: every round joins the whole
-    relation, and the loop stops when a chunk leaves ``SUM(label)``
-    unchanged (labels only decrease, so an unchanged sum ⇔ fixpoint;
-    aggregated as ``DECIMAL(38,0)`` so 2^63-scale ids cannot overflow —
-    the convergence scalar of ``tests/sqlite/test.c:180``)."""
-
-    def label_sum(df: DataFrame):
-        s = df.agg(F.sum(F.col("label").cast("decimal(38,0)")).alias("s"))
-        return s.collect()[0]["s"]
-
-    prev_sum = label_sum(labels)
-    done = 0
-    while done < max_iter:
-        k = min(unroll, max_iter - done)
-        chunk_start = labels
-        for _ in range(k):
-            labels = (
-                rel.join(state_hint(labels, nv), rel.dst == labels.id)
-                .groupBy(F.col("src").alias("id"))
-                .agg(F.min("label").alias("label"))
-            )
-        labels = labels.localCheckpoint()
-        if pointer_jump:
-            labels = _pointer_jump(labels, nv).localCheckpoint()
-        done += k
-        cur_sum = label_sum(labels)
-        chunk_start.unpersist()
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    return labels
+    ).select(
+        "id",
+        F.coalesce("p_label", "label").alias("label"),
+        (F.col("active") | jumped).alias("active"),
+    )
 
 
 def component_count(labels: DataFrame) -> int:

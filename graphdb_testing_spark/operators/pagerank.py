@@ -183,7 +183,6 @@ def pagerank(
     unroll: int = 10,  # one state broadcast per round; chunk
     # cost is ~linear in unroll, so 10 mainly amortizes delta checks
     init_ranks: DataFrame | None = None,
-    dst_partitioned: bool = False,
 ) -> DataFrame:
     """``(id, pr)`` PageRank over a symmetric edge table.
 
@@ -205,7 +204,7 @@ def pagerank(
     """
     e = edges.select("src", "dst")
     ne = edges.count()
-    local = single_task("pagerank", ne, not dst_partitioned)
+    local = single_task("pagerank", ne)
     if ne == 0:
         return e.select(F.col("src").alias("id"), F.lit(0.0).alias("pr")).limit(0)
     if local:
@@ -223,8 +222,7 @@ def pagerank(
         # so the up-front groupBy(src) shuffle was pure waste there
         # (round-10 verdict item 8: no redundant jobs under guards).
         # Past the guard — every real cluster-scale graph — the
-        # unrolled DataFrame loop below is unchanged, including the
-        # dst_partitioned layout variant.
+        # unrolled DataFrame loop below is unchanged.
         return _local_pagerank(
             e, damping, tol, max_iter, num_iter, unroll, init_ranks
         )
@@ -253,18 +251,13 @@ def pagerank(
     deg_b = state_hint(deg, nv)
 
     # constant relation: edges + degree-of-source (round_layout; a
-    # coalesce above the broadcast threshold is checkpointed once).
-    # Measured there (R-MAT scale 18, 4M edges, 40 iters): the
-    # ``dst_partitioned`` layout ran 22.4s vs 17.9s for the uniform
-    # coalesce — power-law dst skew freezes into its partitions, while
-    # AQE splits it per round.  SCALE-24 A/Bs re-measure the variant.
+    # coalesce above the broadcast threshold is checkpointed once)
     e2 = round_layout(
         e.join(deg_b.withColumnRenamed("id", "src"), "src").select(
             "src", "dst", F.col("degree").alias("deg_src")
         ),
         ne,
         nv,
-        dst_partitioned,
     )
     if not e2.is_cached:
         e2 = e2.localCheckpoint()

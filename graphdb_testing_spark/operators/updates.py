@@ -619,12 +619,15 @@ def _write_trickle_journal(spark, data_dir: str, touched: list[int]) -> None:
     filesystem the snapshot is a HARD LINK per file instead of a byte
     copy — the journal pass over the k/B sliver becomes metadata-only.
     Non-local schemes (hdfs://, s3a://...) and any link failure fall
-    back to the original ``FileUtil.copy``.  Crash-safety is
-    unchanged: links are published before the record, recovery
-    restores by copy (a link carries the pre-batch bytes because store
-    files are immutable and replaced by delete+create, never appended)."""
+    back to the original ``FileUtil.copy``.  Locality is the scheme of
+    the resolved filesystem, not of ``data_dir``: a scheme-less path
+    under a non-local ``fs.defaultFS`` lives on that filesystem, and
+    linking a same-named local directory would journal the wrong
+    bytes.  Crash-safety is unchanged: links are published before the
+    record, recovery restores by copy (a link carries the pre-batch
+    bytes because store files are immutable and replaced by
+    delete+create, never appended)."""
     import json as _json
-    from urllib.parse import urlparse as _urlparse
 
     fs, pcls = _hadoop_fs(spark, data_dir)
     jdir, jrec = _journal_paths(data_dir)
@@ -638,7 +641,7 @@ def _write_trickle_journal(spark, data_dir: str, touched: list[int]) -> None:
         fs.delete(pcls(jdir), True)
     futil = spark._jvm.org.apache.hadoop.fs.FileUtil
     conf = spark._jsc.hadoopConfiguration()
-    is_local = _urlparse(data_dir).scheme in ("", "file")
+    is_local = fs.getUri().getScheme() == "file"
     local_root = data_dir[len("file:"):] if data_dir.startswith("file:") else data_dir
     jdir_local = jdir[len("file:"):] if jdir.startswith("file:") else jdir
     existing = []

@@ -31,7 +31,7 @@ def state_hint(df: DataFrame, nv: int | None) -> DataFrame:
 
 def broadcasts(nv: int) -> bool:
     """True when an ``nv``-row vertex state is broadcast (the regime in
-    which the semi-naive one-stage rounds of CC and BFS run)."""
+    which :func:`round_layout` makes a round one stage)."""
     return nv <= BROADCAST_STATE_MAX_ROWS
 
 
@@ -89,9 +89,7 @@ def iter_partitions(ne: int, cap: int = 2048) -> int:
     return max(1, min(cap, (ne + EDGE_ROWS_PER_PARTITION - 1) // EDGE_ROWS_PER_PARTITION))
 
 
-def round_layout(
-    rel: DataFrame, ne: int, nv: int, dst_partitioned: bool = False
-) -> DataFrame:
+def round_layout(rel: DataFrame, ne: int, nv: int) -> DataFrame:
     """Lay out the constant relation of an iterative kernel whose round
     is ``rel ⋈ state ON rel.dst = state.id → groupBy(src)``.
 
@@ -101,21 +99,17 @@ def round_layout(
     keeps it), so the ``groupBy(src)`` needs no Exchange: a round is
     one narrow stage plus the state broadcast, one Spark job.  Above
     the threshold the state shuffles anyway and the relation stays a
-    lazy ``coalesce`` to ~250k rows per task.  ``dst_partitioned`` is
-    the bucketed-layout A/B variant (hash on the join key instead).
-    Callers ``unpersist()`` the result."""
+    lazy ``coalesce`` to ~250k rows per task.  Callers ``unpersist()``
+    the result."""
     n = iter_partitions(ne)
-    if dst_partitioned:
-        rel = rel.repartition(n, "dst").persist()
-    elif broadcasts(nv):
-        # ≥ 2 partitions: a one-partition repartition plans as
-        # SinglePartition, which a cached scan reports as Unknown
-        rel = rel.repartition(max(2, n), "src").persist()
-    else:
+    if not broadcasts(nv):
         # lazy: rounds re-read the materialized inputs through a narrow
         # union instead of paying an up-front second edge copy (measured
         # 52.8 s -> 36.9 s for CC on a 16M-edge graph)
         return rel.coalesce(n)
+    # ≥ 2 partitions: a one-partition repartition plans as
+    # SinglePartition, which a cached scan reports as Unknown
+    rel = rel.repartition(max(2, n), "src").persist()
     # eager: a cache not yet built reports Unknown partitioning to the
     # rounds planned on top of it, which would put the exchange back
     rel.write.format("noop").mode("overwrite").save()
@@ -143,7 +137,6 @@ def self_loop_relation(
     ne: int,
     nv: int,
     source: int | None = None,
-    dst_partitioned: bool = False,
 ) -> DataFrame:
     """The constant relation of the min-fixpoint loops (CC, BFS): the
     edges plus one self-loop per vertex of ``ids`` and one for
@@ -158,7 +151,7 @@ def self_loop_relation(
     rel = edges.select(
         F.col("src").cast(key).alias("src"), F.col("dst").cast(key).alias("dst")
     ).unionAll(loops.select("src", F.col("src").alias("dst")))
-    return round_layout(rel, ne, nv, dst_partitioned)
+    return round_layout(rel, ne, nv)
 
 
 def min_round(rel: DataFrame, state: DataFrame, nv: int, col: str, step: int) -> DataFrame:

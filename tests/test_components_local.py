@@ -134,16 +134,17 @@ def test_distributed_bfs_source_past_int32(spark, multi_component_edges, monkeyp
 
 
 def test_shuffled_state_loops_match_single_task(spark, multi_component_edges, monkeypatch):
-    """Above the broadcast threshold CC keeps its naive sum-test loop
-    and BFS its frontier loop; forcing the threshold to 0 sends this
-    small graph through both, which must answer like the single-task
-    path (a 6-level cut inside 4-level checkpoints, a source without
-    edges, a source past int32)."""
+    """Forcing the broadcast threshold to 0 runs the one semi-naive
+    loop of CC and of BFS with a shuffled state, which must answer like
+    the single-task path: CC with and without pointer jumping (the
+    40-hop chain then stops on the active count after many chunks),
+    BFS with a 6-level cut inside 4-level checkpoints, a source without
+    edges and a source past int32."""
 
-    def cc():
+    def cc(**kw):
         return {
             (r["id"], r["label"])
-            for r in compmod.connected_components(multi_component_edges).collect()
+            for r in compmod.connected_components(multi_component_edges, **kw).collect()
         }
 
     def levels(source, **kw):
@@ -155,6 +156,7 @@ def test_shuffled_state_loops_match_single_task(spark, multi_component_edges, mo
     monkeypatch.setattr(util, "BROADCAST_STATE_MAX_ROWS", 0)
     assert cc() == want_cc
     assert util.FAST_PATH_DECISIONS["components"] is False
+    assert cc(pointer_jump=False) == want_cc
     assert levels(600, max_depth=6, checkpoint_every=4) == want_bfs
     assert util.FAST_PATH_DECISIONS["bfs"] is False
     assert levels(99999) == {(99999, 0)}

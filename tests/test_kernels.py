@@ -191,67 +191,6 @@ def test_multi_source_bfs_matches_single_source(spark, path_graph):
         assert per_root == single, r
 
 
-def test_dst_partitioned_layout_parity_and_plan(spark, bridged_cliques):
-    """The bucketed-layout kernel variant (dst_partitioned=True) is
-    result-identical, and a dst-hash-partitioned checkpointed edge
-    relation joins its per-round state with NO edge-side Exchange —
-    the persisted relation must carry outputPartitioning (persist()
-    does; localCheckpoint drops it to Unknown, measured) for the
-    layout to buy anything."""
-    import io
-    from contextlib import redirect_stdout
-
-    from pyspark.sql import functions as F
-
-    cc_a = {
-        (r.id, r.label) for r in connected_components(bridged_cliques).collect()
-    }
-    cc_b = {
-        (r.id, r.label)
-        for r in connected_components(
-            bridged_cliques, dst_partitioned=True
-        ).collect()
-    }
-    assert cc_a == cc_b
-    pr_a = {
-        r.id: round(r.pr, 10)
-        for r in pagerank(bridged_cliques, num_iter=5).collect()
-    }
-    pr_b = {
-        r.id: round(r.pr, 10)
-        for r in pagerank(
-            bridged_cliques, num_iter=5, dst_partitioned=True
-        ).collect()
-    }
-    assert pr_a == pr_b
-
-    # plan shape: exactly ONE Exchange (the state side), none above
-    # the checkpointed dst-partitioned edge relation
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        e = bridged_cliques.repartition(4, "dst").persist()
-        e.count()
-        state = bridged_cliques.select(F.col("src").alias("id")).distinct()
-        joined = e.join(state.hint("shuffle_hash"), e.dst == state.id)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            joined.explain("formatted")
-        tree = buf.getvalue().split("\n\n")[0]
-        lines = tree.splitlines()
-        ji = next(i for i, l in enumerate(lines) if "ShuffledHashJoin" in l)
-        si = next(i for i, l in enumerate(lines) if "InMemoryTableScan" in l)
-        # the join reads the persisted dst-partitioned relation with no
-        # Exchange in between (the Exchanges inside the InMemoryRelation
-        # build subtree are the one-time layout cost, and the state side
-        # keeps its own Exchange)
-        edge_path = lines[ji:si]
-        assert not any("Exchange" in l for l in edge_path), tree
-        assert any("Exchange" in l for l in lines[si:]), tree  # state side
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
 def test_broadcast_regime_round_has_no_exchange(spark, bridged_cliques):
     """With a broadcast state, the semi-naive round relation is
     hash-partitioned on ``src`` and persisted, so an unrolled chunk of

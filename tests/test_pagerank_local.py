@@ -92,14 +92,6 @@ def test_local_is_deterministic_across_layouts(spark, sym_edges):
     assert a == b
 
 
-def test_dst_partitioned_stays_on_dataframe_path(spark, sym_edges):
-    """The layout-flag variant must keep its plan (the flag exists to
-    A/B the distributed layout) — parity of values still holds."""
-    flag = _r6(prmod.pagerank(sym_edges, num_iter=3, dst_partitioned=True))
-    fast = _r6(prmod.pagerank(sym_edges, num_iter=3))
-    assert flag == fast
-
-
 def test_mass_conservation(spark, sym_edges):
     out = prmod.pagerank(sym_edges, num_iter=5)
     total = out.agg(F.sum("pr")).collect()[0][0]

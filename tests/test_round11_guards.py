@@ -103,6 +103,72 @@ def test_trickle_journal_uses_hardlinks(spark, tmp_path):
         assert os.stat(live).st_ino == st.st_ino
 
 
+def test_trickle_journal_locality_follows_resolved_fs(spark, tmp_path, monkeypatch):
+    """A scheme-less data_dir is local only if the RESOLVED filesystem
+    is: under a non-local fs.defaultFS the journal must be written by
+    FileUtil.copy on that filesystem, never hard-linked from a local
+    directory of the same name, and recovery must restore from it."""
+    import os
+    import shutil
+
+    from graphdb_testing_spark.operators import updates
+    from graphdb_testing_spark.operators.updates import (
+        _write_trickle_journal,
+        init_edge_store,
+        read_edge_store,
+        recover_trickle,
+        store_meta,
+    )
+
+    class _Uri:
+        def getScheme(self):
+            return "hdfs"
+
+    class _RemoteLooking:
+        """The real local FileSystem (py4j forwards its object id), but
+        reporting a non-``file`` scheme."""
+
+        def __init__(self, fs):
+            self._fs = fs
+
+        def getUri(self):
+            return _Uri()
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+    real = updates._hadoop_fs
+
+    def remote_fs(spark_, path):
+        fs, pcls = real(spark_, path)
+        return _RemoteLooking(fs), pcls
+
+    def no_link(*a):
+        raise AssertionError("hard-linked a journal on a non-local filesystem")
+
+    edges = spark.createDataFrame(
+        [(1, 2, 1), (2, 1, 1), (3, 4, 2), (4, 3, 2)],
+        "src long, dst long, wgt long",
+    )
+    store = str(tmp_path / "store")
+    init_edge_store(edges, store, table_rows=4)
+    want = sorted(read_edge_store(spark, store).collect())
+    data_dir = store_meta(spark, store)["data_dir"]
+    assert "://" not in data_dir and not data_dir.startswith("file:")
+    pts = sorted(
+        int(p.split("=")[1]) for p in os.listdir(data_dir) if p.startswith("pt=")
+    )
+    monkeypatch.setattr(updates, "_hadoop_fs", remote_fs)
+    monkeypatch.setattr(updates, "_snapshot_partition_localfs", no_link)
+    _write_trickle_journal(spark, data_dir, pts)
+    # a torn batch: every touched partition is gone
+    for p in pts:
+        shutil.rmtree(os.path.join(data_dir, f"pt={p}"))
+    assert recover_trickle(spark, data_dir) is True
+    monkeypatch.undo()
+    assert sorted(read_edge_store(spark, store).collect()) == want
+
+
 def test_bfs_rejects_nonsymmetric_table(spark):
     df = spark.createDataFrame([(0, 1), (1, 2)], "src long, dst long")
     with pytest.raises(Exception, match="not symmetric"):
