@@ -179,7 +179,8 @@ def _local_multi_source_bfs(
     """Single-Arrow-task multi-source BFS: one masked level loop per
     root (hop distances are integers; the level schedule matches the
     compound-key frontier loop, including seeding roots absent from
-    the edge table)."""
+    the edge table).  With one root it is :func:`bfs`'s single-task
+    path."""
 
     def run(batches):
         import numpy as np
@@ -221,45 +222,6 @@ def _local_multi_source_bfs(
     return map_single_task(e, run, "root long, id long, dist int")
 
 
-def _local_bfs(e: DataFrame, source: int, max_depth: int) -> DataFrame:
-    """Single-Arrow-task level-synchronous BFS over a bounded-size
-    symmetric edge table: one full-edge-array scan per level with
-    NumPy masks.  Hop distances are integers and the level schedule is
-    identical to the DataFrame loop, so the output rows match exactly
-    (unreachable vertices absent; the source row present even when it
-    has no edges, as in the DataFrame path's seed frontier)."""
-
-    def run(batches):
-        import numpy as np
-        import pandas as pd
-
-        ids, si, di = np_edges(batches)
-        pos = np.searchsorted(ids, source)
-        if pos >= ids.size or ids[pos] != source:
-            # source has no outgoing edges: only the seed row exists
-            yield pd.DataFrame(
-                {
-                    "id": np.array([source], dtype=np.int64),
-                    "dist": np.array([0], dtype=np.int32),
-                }
-            )
-            return
-        dist = np.full(ids.size, -1, dtype=np.int32)
-        dist[pos] = 0
-        depth = 0
-        while depth < max_depth:
-            depth += 1
-            tgt = di[dist[si] == depth - 1]
-            tgt = tgt[dist[tgt] < 0]
-            if tgt.size == 0:
-                break
-            dist[np.unique(tgt)] = depth
-        hit = dist >= 0
-        yield pd.DataFrame({"id": ids[hit], "dist": dist[hit]})
-
-    return map_single_task(e, run, "id long, dist int")
-
-
 def bfs(
     edges: DataFrame,
     source: int,
@@ -274,10 +236,13 @@ def bfs(
     ne = edges.count()
     if single_task("bfs", ne):
         # guarded single-task fast path (round-10): per-level cost at
-        # sf0.1 is scheduling + broadcast latency, not compute — see
-        # _local_bfs; identical integer levels, cluster-scale graphs
-        # take the loop below
-        return _local_bfs(edges.select("src", "dst"), source, max_depth)
+        # sf0.1 is scheduling + broadcast latency, not compute — the
+        # one-root NumPy level loop of _local_multi_source_bfs
+        # (identical integer levels; a source without edges keeps its
+        # (source, 0) row); cluster-scale graphs take the loop below
+        return _local_multi_source_bfs(
+            edges.select("src", "dst"), [source], max_depth
+        ).select("id", "dist")
     id_type = edges.schema["src"].dataType.simpleString()
     # the int32 check covers the source too
     ids, nv, key = vertex_ids(edges, source)

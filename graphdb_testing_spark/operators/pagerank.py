@@ -1,4 +1,5 @@
-"""PageRank with the reference's canonical parameters.
+"""PageRank with the reference's canonical parameters, and its
+personalized and weighted variants — one kernel, three variants.
 
 Reference semantics (SURVEY.md §2.4), identical across backends:
 ``damping d = 0.85``, ``epsilon = 1e-8`` (L1 delta), ``maxiter =
@@ -12,22 +13,43 @@ benchmark graphs push over ``src`` and pull over ``dst`` coincide;
 every vertex has degree ≥ 1 so there is no dangling mass (matching
 the reference, which likewise ignores dangling vertices).
 
-Spark-first design
-------------------
-* Vertex state is the single-column **pre-divided rank**
-  ``prd[v] = pr[v] / degree[v]`` and the *constant* edge relation
-  carries ``deg_src`` (degree of the source, attached once up
-  front).  A round is then a single ``edges ⋈ state`` join +
-  partially aggregated ``groupBy(src)`` that produces the next
+One kernel, three variants
+--------------------------
+All three public functions compute the same pre-divided-rank update
+``prd'[v] = (reset(v) + d·Σ_{u ∈ N(v)} w(u,v)·prd[u]) / wdeg(v)`` with
+``prd = pr / wdeg`` and differ only in three data choices:
+
+* the reset term: uniform ``(1-d)/nv`` (:func:`pagerank`,
+  :func:`weighted_pagerank`), or ``(1-d)/|S|`` on a seed set ``S`` and
+  0 elsewhere (:func:`personalized_pagerank`);
+* the initial ranks: ``1/nv``, ``1/|S|`` on the seeds, or a warm
+  start (``pagerank(init_ranks=...)``);
+* the edge weight: none (``w ≡ 1``, ``wdeg`` = degree), or the
+  weight column (:func:`weighted_pagerank`, ``wdeg = Σ w``).
+
+Each runs :func:`_pagerank`: the guarded single-task NumPy kernel
+(:func:`_local_pagerank`) when the edge table fits one task, else the
+distributed loop below.  GraphX (OSDI 2014) likewise runs plain and
+personalized PageRank as one loop.
+
+Spark-first design (the distributed loop)
+-----------------------------------------
+* Vertex state is the single-column **pre-divided rank** and the
+  *constant* edge relation carries ``deg_src`` (the source's ``wdeg``,
+  attached once up front).  A round is then a single ``edges ⋈ state``
+  join + partially aggregated ``groupBy(src)`` that produces the next
   ``prd`` directly — no merge-back join against old state or the
   degree table.  One state reference per round ⇒ the unrolled lazy
-  plan grows **linearly** in the unroll factor; one join per round ⇒
-  one state broadcast per round (the dropped second join halved
-  round latency).
+  plan grows **linearly** in the unroll factor.  The weight column and
+  its multiply are in the plan only for the weighted variant; the seed
+  reset is a JVM ``isin`` on the aggregation key, not a join.
 * No left join is needed to re-instate message-less vertices: the
   edge table is symmetric, so every vertex with degree ≥ 1 receives
   at least one message, and degree-0 vertices don't exist in the
   canonical edge relation.
+* When every id, degree and seed fits int32 (checked in the job that
+  materializes the degree table) the loop runs on int ids — half the
+  key bytes — and casts the output id back.
 * The edge relation is laid out by
   :func:`~graphdb_testing_spark.operators.util.round_layout` in
   ``iter_partitions(ne)`` tasks (~250k edge rows each): with a
@@ -56,7 +78,6 @@ from pyspark.sql import functions as F
 from .util import (
     INT32_MAX,
     INT32_MIN,
-    iter_partitions,
     map_single_task,
     np_edges,
     observed_checkpoint,
@@ -75,11 +96,15 @@ def _local_pagerank(
     num_iter: int | None,
     unroll: int,
     init_ranks: DataFrame | None,
+    seeds: list[int] | None,
+    weighted: bool,
 ) -> DataFrame:
     """Single-Arrow-task PageRank over a bounded-size symmetric edge
     table: NumPy gather + ``add.reduceat`` segment sums per round —
     the same pre-divided-rank update, chunk schedule, and chunk-L1
-    convergence rule as the DataFrame loop, evaluated in one task.
+    convergence rule as the DataFrame loop, evaluated in one task, for
+    every variant (``seeds``: personalized reset; ``weighted``: ``e``
+    carries ``wgt``).
 
     The edge table flows to the task through Spark (single-partition
     ``mapInPandas``); the driver never holds edge OR rank data.  Warm
@@ -135,17 +160,34 @@ def _local_pagerank(
                     pdf = pdf[~pdf["rank_row"]]
                 yield pdf
 
-        ids, si, di = np_edges(edge_rows())
+        ids, si, di, *w = np_edges(
+            edge_rows(), *([("wgt", "float64")] if weighted else [])
+        )
         nv = ids.size
-        base = (1.0 - d) / nv
         # full (src, dst) sort: message-sum order must not depend on
         # the incoming partition/row order, or reruns drift in the
         # last float ulp (ids is sorted, so (si, di) order = (src, dst))
         order = np.lexsort((di, si))
         si, di = si[order], di[order]
-        deg = np.bincount(si, minlength=ids.size).astype(np.float64)
-        starts = np.searchsorted(si, np.arange(ids.size))
-        pr0 = np.full(ids.size, 1.0 / nv)
+        if weighted:
+            w = w[0][order]
+            deg = np.bincount(si, weights=w, minlength=nv)
+        else:
+            deg = np.bincount(si, minlength=nv).astype(np.float64)
+        starts = np.searchsorted(si, np.arange(nv))
+        if seeds is None:
+            base = (1.0 - d) / nv
+            pr0 = np.full(nv, 1.0 / nv)
+        else:
+            s = np.asarray(seeds, dtype=np.int64)
+            sp = np.searchsorted(ids, s)
+            ok = (sp < nv) & (ids[np.minimum(sp, nv - 1)] == s)
+            in_seed = np.zeros(nv, dtype=bool)
+            in_seed[sp[ok]] = True
+            # max(.., 1): with no seed no vertex takes this share
+            n = max(len(seeds), 1)
+            base = np.where(in_seed, (1.0 - d) / n, 0.0)
+            pr0 = np.where(in_seed, 1.0 / n, 0.0)
         if has_init:
             ip = np.concatenate([r["src"].to_numpy(np.int64) for r in ranks])
             pv = np.concatenate([r["pr0"].to_numpy(np.float64) for r in ranks])
@@ -161,7 +203,8 @@ def _local_pagerank(
             checking = chk and (chunks + 1) % check_every == 0
             prd0 = prd
             for _ in range(k):
-                msum = np.add.reduceat(prd[di], starts)
+                msg = prd[di] * w if weighted else prd[di]
+                msum = np.add.reduceat(msg, starts)
                 prd = (base + d * msum) / deg
             done += k
             chunks += 1
@@ -172,6 +215,206 @@ def _local_pagerank(
         yield pd.DataFrame({"id": ids, "pr": prd * deg})
 
     return map_single_task(inp, run, "id long, pr double")
+
+
+def _pagerank(
+    edges: DataFrame,
+    family: str,
+    damping: float = 0.85,
+    tol: float = 1e-8,
+    max_iter: int = 100,
+    num_iter: int | None = None,
+    unroll: int = 10,
+    init_ranks: DataFrame | None = None,
+    seeds: list[int] | None = None,
+    weight_col: str | None = None,
+) -> DataFrame:
+    """``(id, pr)`` of every variant (module docstring): the
+    ``family`` guard picks :func:`_local_pagerank` or the distributed
+    loop; ``seeds`` selects the personalized reset and ``weight_col``
+    the edge weight."""
+    weighted = weight_col is not None
+    wgt = [F.col(weight_col).alias("wgt")] if weighted else []
+    e = edges.select("src", "dst", *wgt)
+    ne = edges.count()
+    local = single_task(family, ne)
+    if ne == 0:
+        return e.select(F.col("src").alias("id"), F.lit(0.0).alias("pr")).limit(0)
+    if local:
+        # guarded single-task fast path (round-10 optimization): at
+        # sf0.1 each of the 100 convergence rounds costs ~0.2 s of
+        # per-stage scheduling + AQE re-planning + a driver broadcast
+        # round-trip to move a ~2.5 MB shuffle — the iteration is
+        # latency-bound, not compute-bound.  A graph whose edge list
+        # fits one task (≤ util.LOCAL_NE_MAX rows ≈ 128 MB) iterates with
+        # NumPy segment sums inside one Arrow task instead: identical
+        # update formula, identical chunk/convergence schedule
+        # (parity-tested to 6 dp oracle rounding in
+        # tests/test_pagerank_local.py).  The guard runs BEFORE the
+        # degree job — the fast path derives nv/degrees in-task.  Past
+        # the guard — every real cluster-scale graph — the unrolled
+        # DataFrame loop below runs.
+        return _local_pagerank(
+            e, damping, tol, max_iter, num_iter, unroll, init_ranks, seeds, weighted
+        )
+    # narrow-id loop (round-11, guide §2.3 "narrower types"): when ids,
+    # seeds AND (unweighted) degrees fit int32 (checked in the job that
+    # materializes the degree table), the loop's (id, dst, deg_src)
+    # bytes halve; rank arithmetic is unchanged and the output id is
+    # cast back.  64-bit hash ids at 100 TB keep the long loop — the
+    # check IS the guard.
+    narrow_cols = ("id",) if weighted else ("id", "degree")
+    wdeg = F.sum("wgt").cast("double") if weighted else F.count("*")
+    deg, nv, narrow = vertex_summary(
+        e.groupBy(F.col("src").alias("id")).agg(wdeg.alias("degree")),
+        *narrow_cols,
+        also=tuple(seeds or ()),
+    )
+    id_type = edges.schema["src"].dataType.simpleString()
+    if narrow:
+        as_int = lambda *cs: [F.col(c).cast("int").alias(c) for c in cs]  # noqa: E731
+        # a weighted degree stays double
+        deg = deg.select(*as_int(*narrow_cols), *deg.columns[len(narrow_cols):])
+        e = e.select(*as_int("src", "dst"), *e.columns[2:])
+        if init_ranks is not None:
+            # warm ids outside int32 match no vertex of a narrow graph;
+            # drop them before the cast, which would fail or wrap
+            init_ranks = init_ranks.where(
+                F.col("id").between(INT32_MIN, INT32_MAX)
+            ).select(*as_int("id"), "pr")
+    if seeds is None:
+        n = nv
+        share = F.lit
+    else:
+        # the seeds join the int32 check above, so this cast is exact
+        in_seed = F.col("id").isin(
+            [F.lit(s).cast("int" if narrow else "bigint") for s in seeds]
+        )
+        # max(.., 1): with no seed no vertex takes this share
+        n = max(len(seeds), 1)
+        share = lambda x: F.when(in_seed, F.lit(x)).otherwise(F.lit(0.0))  # noqa: E731
+    base = share((1.0 - damping) / n)
+    deg_b = state_hint(deg, nv)
+
+    # constant relation: edges (+ weight) + wdeg-of-source
+    # (round_layout; a coalesce above the broadcast threshold is
+    # checkpointed once)
+    e2 = round_layout(
+        e.join(deg_b.withColumnRenamed("id", "src"), "src").select(
+            "src", "dst", *e.columns[2:], F.col("degree").alias("deg_src")
+        ),
+        ne,
+        nv,
+    )
+    if not e2.is_cached:
+        e2 = e2.localCheckpoint()
+    msg = F.col("prd") * F.col("wgt") if weighted else F.col("prd")
+
+    # state: (id, prd, degree) with prd = pr / wdeg; degree rides
+    # along (constant per vertex, re-emitted by each round's agg) so
+    # neither the delta check nor the final pr projection needs a
+    # degree join
+    if init_ranks is not None:
+        # a warm row of a graph vertex whose pr is NULL or NaN leaves a
+        # NULL or NaN prd, counted in the checkpoint job itself
+        warm = init_ranks.select("id", "pr", F.lit(True).alias("warm"))
+        state, r = observed_checkpoint(
+            deg.join(warm, "id", "left").select(
+                "id",
+                (
+                    F.when(F.col("warm"), F.col("pr")).otherwise(F.lit(1.0 / nv))
+                    / F.col("degree")
+                ).alias("prd"),
+                "degree",
+            ),
+            F.count(F.when(F.col("prd").isNull() | F.isnan("prd"), 1)).alias("bad"),
+        )
+        if r["bad"]:
+            raise ValueError("init_ranks holds a NULL or NaN pr for a graph vertex")
+        unroll = min(unroll, 5)
+        check_every = 1
+    else:
+        state = deg.select(
+            "id", (share(1.0 / n) / F.col("degree")).alias("prd"), "degree"
+        )
+        check_every = 2
+
+    total = num_iter if num_iter is not None else max_iter
+    done = 0
+    chunks = 0
+    while done < total:
+        k = min(unroll, total - done)
+        chunk_start = state
+        checking = num_iter is None and (chunks + 1) % check_every == 0
+        for i in range(k):
+            # broadcast the O(nv) state so the big edge side never
+            # moves; the groupBy emits the next prd directly (deg_src
+            # is constant per group, so first() is exact)
+            rnd = (
+                e2.join(state_hint(state, nv), e2.dst == state.id)
+                .select(F.col("src").alias("id"), msg.alias("m"), "deg_src")
+            )
+            if checking and i == k - 1:
+                # fold the convergence check into the chunk's last
+                # round (round-3 verdict item 7): union the
+                # CHECKPOINTED chunk-start state as zero-message self
+                # rows carrying prd0, so the materialized chunk output
+                # holds (prd, prd0) side by side and the L1 delta is a
+                # plain nv-row scan — the separate per-check
+                # state⋈chunk_start join job is gone.  +nv rows into a
+                # ne-row shuffle ≈ degree⁻¹ overhead, once per chunk.
+                rnd = rnd.unionByName(
+                    chunk_start.select(
+                        "id",
+                        F.lit(None).cast("double").alias("m"),
+                        F.lit(None).cast(
+                            e2.schema["deg_src"].dataType
+                        ).alias("deg_src"),
+                        F.col("prd").alias("prd0"),
+                    ),
+                    allowMissingColumns=True,
+                )
+                state = rnd.groupBy("id").agg(
+                    (
+                        (base + F.lit(damping) * F.sum("m"))
+                        / F.first("deg_src", ignorenulls=True)
+                    ).alias("prd"),
+                    F.first("deg_src", ignorenulls=True).alias("degree"),
+                    F.first("prd0", ignorenulls=True).alias("prd0"),
+                )
+            else:
+                state = rnd.groupBy("id").agg(
+                    (
+                        (base + F.lit(damping) * F.sum("m"))
+                        / F.first("deg_src")
+                    ).alias("prd"),
+                    F.first("deg_src").alias("degree"),
+                )
+        state = state.localCheckpoint()  # one job: materialize k rounds
+        done += k
+        chunks += 1
+        if checking:
+            # L1 delta in pr space: |pr - pr0| = |prd - prd0| * wdeg;
+            # eps=1e-8 never fires in the first few dozen rounds, so
+            # cold starts test every 2nd chunk (late stop is
+            # conservative: extra rounds only tighten)
+            delta = state.agg(
+                F.sum(
+                    F.abs(F.col("prd") - F.col("prd0")) * F.col("degree")
+                ).alias("d")
+            ).collect()[0]["d"]
+            state = state.select("id", "prd", "degree")
+            chunk_start.unpersist()
+            if delta is not None and delta <= tol:
+                break
+        else:
+            chunk_start.unpersist()
+    out = state.select(
+        F.col("id").cast(id_type).alias("id"),
+        (F.col("prd") * F.col("degree")).alias("pr"),
+    )
+    e2.unpersist()
+    return out
 
 
 def pagerank(
@@ -202,231 +445,9 @@ def pagerank(
     ``pr`` is NULL or NaN raises ``ValueError`` (NaN would reach every
     vertex within a few rounds).
     """
-    e = edges.select("src", "dst")
-    ne = edges.count()
-    local = single_task("pagerank", ne)
-    if ne == 0:
-        return e.select(F.col("src").alias("id"), F.lit(0.0).alias("pr")).limit(0)
-    if local:
-        # guarded single-task fast path (round-10 optimization): at
-        # sf0.1 each of the 100 convergence rounds costs ~0.2 s of
-        # per-stage scheduling + AQE re-planning + a driver broadcast
-        # round-trip to move a ~2.5 MB shuffle — the iteration is
-        # latency-bound, not compute-bound.  A graph whose edge list
-        # fits one task (≤ util.LOCAL_NE_MAX rows ≈ 128 MB) iterates with
-        # NumPy segment sums inside one Arrow task instead: identical
-        # update formula, identical chunk/convergence schedule
-        # (parity-tested to 6 dp oracle rounding in
-        # tests/test_pagerank_local.py).  The guard now runs BEFORE
-        # the degree job — the fast path derives nv/degrees in-task,
-        # so the up-front groupBy(src) shuffle was pure waste there
-        # (round-10 verdict item 8: no redundant jobs under guards).
-        # Past the guard — every real cluster-scale graph — the
-        # unrolled DataFrame loop below is unchanged.
-        return _local_pagerank(
-            e, damping, tol, max_iter, num_iter, unroll, init_ranks
-        )
-    # narrow-id loop (round-11, guide §2.3 "narrower types"): when ids
-    # AND degrees fit int32 (checked in the job that materializes the
-    # degree table), the loop's (id, dst, deg_src) bytes halve; rank
-    # arithmetic is unchanged and the output id is cast back.  64-bit
-    # hash ids at 100 TB keep the long loop — the check IS the guard.
-    deg, nv, narrow = vertex_summary(
-        e.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("degree")),
-        "id",
-        "degree",
+    return _pagerank(
+        edges, "pagerank", damping, tol, max_iter, num_iter, unroll, init_ranks
     )
-    base = (1.0 - damping) / nv
-    id_type = edges.schema["src"].dataType.simpleString()
-    if narrow:
-        as_int = lambda *cs: [F.col(c).cast("int").alias(c) for c in cs]  # noqa: E731
-        deg = deg.select(*as_int("id", "degree"))
-        e = e.select(*as_int("src", "dst"))
-        if init_ranks is not None:
-            # warm ids outside int32 match no vertex of a narrow graph;
-            # drop them before the cast, which would fail or wrap
-            init_ranks = init_ranks.where(
-                F.col("id").between(INT32_MIN, INT32_MAX)
-            ).select(*as_int("id"), "pr")
-    deg_b = state_hint(deg, nv)
-
-    # constant relation: edges + degree-of-source (round_layout; a
-    # coalesce above the broadcast threshold is checkpointed once)
-    e2 = round_layout(
-        e.join(deg_b.withColumnRenamed("id", "src"), "src").select(
-            "src", "dst", F.col("degree").alias("deg_src")
-        ),
-        ne,
-        nv,
-    )
-    if not e2.is_cached:
-        e2 = e2.localCheckpoint()
-
-    # state: (id, prd, degree) with prd = pr / degree; degree rides
-    # along (constant per vertex, re-emitted by each round's agg) so
-    # neither the delta check nor the final pr projection needs a
-    # degree join
-    if init_ranks is not None:
-        # a warm row of a graph vertex whose pr is NULL or NaN leaves a
-        # NULL or NaN prd, counted in the checkpoint job itself
-        warm = init_ranks.select("id", "pr", F.lit(True).alias("warm"))
-        state, r = observed_checkpoint(
-            deg.join(warm, "id", "left").select(
-                "id",
-                (
-                    F.when(F.col("warm"), F.col("pr")).otherwise(F.lit(1.0 / nv))
-                    / F.col("degree")
-                ).alias("prd"),
-                "degree",
-            ),
-            F.count(F.when(F.col("prd").isNull() | F.isnan("prd"), 1)).alias("bad"),
-        )
-        if r["bad"]:
-            raise ValueError("init_ranks holds a NULL or NaN pr for a graph vertex")
-        unroll = min(unroll, 5)
-        check_every = 1
-    else:
-        state = deg.select(
-            "id", (F.lit(1.0 / nv) / F.col("degree")).alias("prd"), "degree"
-        )
-        check_every = 2
-
-    total = num_iter if num_iter is not None else max_iter
-    done = 0
-    chunks = 0
-    while done < total:
-        k = min(unroll, total - done)
-        chunk_start = state
-        checking = num_iter is None and (chunks + 1) % check_every == 0
-        for i in range(k):
-            # broadcast the O(nv) state so the big edge side never
-            # moves; the groupBy emits the next prd directly (deg_src
-            # is constant per group, so first() is exact)
-            rnd = (
-                e2.join(state_hint(state, nv), e2.dst == state.id)
-                .select(
-                    F.col("src").alias("id"),
-                    F.col("prd").alias("m"),
-                    "deg_src",
-                )
-            )
-            if checking and i == k - 1:
-                # fold the convergence check into the chunk's last
-                # round (round-3 verdict item 7): union the
-                # CHECKPOINTED chunk-start state as zero-message self
-                # rows carrying prd0, so the materialized chunk output
-                # holds (prd, prd0) side by side and the L1 delta is a
-                # plain nv-row scan — the separate per-check
-                # state⋈chunk_start join job is gone.  +nv rows into a
-                # ne-row shuffle ≈ degree⁻¹ overhead, once per chunk.
-                rnd = rnd.unionByName(
-                    chunk_start.select(
-                        "id",
-                        F.lit(None).cast("double").alias("m"),
-                        F.lit(None).cast(
-                            e2.schema["deg_src"].dataType
-                        ).alias("deg_src"),
-                        F.col("prd").alias("prd0"),
-                    ),
-                    allowMissingColumns=True,
-                )
-                state = rnd.groupBy("id").agg(
-                    (
-                        (F.lit(base) + F.lit(damping) * F.sum("m"))
-                        / F.first("deg_src", ignorenulls=True)
-                    ).alias("prd"),
-                    F.first("deg_src", ignorenulls=True).alias("degree"),
-                    F.first("prd0", ignorenulls=True).alias("prd0"),
-                )
-            else:
-                state = rnd.groupBy("id").agg(
-                    (
-                        (F.lit(base) + F.lit(damping) * F.sum("m"))
-                        / F.first("deg_src")
-                    ).alias("prd"),
-                    F.first("deg_src").alias("degree"),
-                )
-        state = state.localCheckpoint()  # one job: materialize k rounds
-        done += k
-        chunks += 1
-        if checking:
-            # L1 delta in pr space: |pr - pr0| = |prd - prd0| * degree;
-            # eps=1e-8 never fires in the first few dozen rounds, so
-            # cold starts test every 2nd chunk (late stop is
-            # conservative: extra rounds only tighten)
-            delta = state.agg(
-                F.sum(
-                    F.abs(F.col("prd") - F.col("prd0")) * F.col("degree")
-                ).alias("d")
-            ).collect()[0]["d"]
-            state = state.select("id", "prd", "degree")
-            chunk_start.unpersist()
-            if delta is not None and delta <= tol:
-                break
-        else:
-            chunk_start.unpersist()
-    out = state.select(
-        F.col("id").cast(id_type).alias("id"),
-        (F.col("prd") * F.col("degree")).alias("pr"),
-    )
-    e2.unpersist()
-    return out
-
-
-def _local_fixed_rounds_pr(
-    e: DataFrame,
-    num_iter: int,
-    damping: float,
-    seeds: list[int] | None,
-    n_seeds: int | None,
-    weighted: bool,
-) -> DataFrame:
-    """Single-Arrow-task fixed-round kernel shared by the
-    personalized (uniform-reset-to-seeds) and weighted
-    (rank ∝ edge weight) PageRank variants — same pre-divided-rank
-    update and edge (src, dst) lexsort as :func:`_local_pagerank`, so
-    message-sum order is independent of input partitioning."""
-    d = damping
-
-    def run(batches):
-        import numpy as np
-        import pandas as pd
-
-        ids, si, di, *extra = np_edges(
-            batches, *([("wgt", "float64")] if weighted else [])
-        )
-        if ids.size == 0:
-            yield pd.DataFrame(
-                {"id": np.empty(0, np.int64), "pr": np.empty(0, np.float64)}
-            )
-            return
-        order = np.lexsort((di, si))
-        si, di = si[order], di[order]
-        starts = np.searchsorted(si, np.arange(ids.size))
-        if weighted:
-            w = extra[0][order]
-            wdeg = np.bincount(si, weights=w, minlength=ids.size)
-            base = (1.0 - d) / ids.size
-            prd = (1.0 / ids.size) / wdeg
-            for _ in range(num_iter):
-                msum = np.add.reduceat(prd[di] * w, starts)
-                prd = (base + d * msum) / wdeg
-            pr = prd * wdeg
-        else:
-            deg = np.bincount(si, minlength=ids.size).astype(np.float64)
-            in_seed = np.zeros(ids.size, dtype=bool)
-            sp = np.searchsorted(ids, np.asarray(seeds, dtype=np.int64))
-            ok = (sp < ids.size) & (ids[np.minimum(sp, ids.size - 1)] == seeds)
-            in_seed[sp[ok]] = True
-            base = (1.0 - d) / n_seeds
-            prd = np.where(in_seed, 1.0 / n_seeds, 0.0) / deg
-            for _ in range(num_iter):
-                msum = np.add.reduceat(prd[di], starts)
-                prd = (np.where(in_seed, base, 0.0) + d * msum) / deg
-            pr = prd * deg
-        yield pd.DataFrame({"id": ids, "pr": pr})
-
-    return map_single_task(e, run, "id long, pr double")
 
 
 def personalized_pagerank(
@@ -441,71 +462,18 @@ def personalized_pagerank(
 
         pr'[v] = (1-d)·[v ∈ S]/|S| + d · Σ_{u ∈ N(v)} pr[u]/deg(u)
 
-    Same fused one-join round as :func:`pagerank` (pre-divided rank,
-    degree carried on the edge relation); seed membership is a JVM
-    ``isin`` expression on the aggregation key, not a join.  Runs a
-    fixed ``num_iter`` rounds (oracle parity); init = uniform on S.
-    Unreachable vertices correctly converge to 0.
+    The :func:`pagerank` kernel and loop with the seed-set reset and
+    init = uniform on S, for a fixed ``num_iter`` rounds (oracle
+    parity).  Unreachable vertices correctly converge to 0, and an
+    empty ``sources`` ranks every vertex 0.
     """
-    seeds = [int(s) for s in sources]
-    e = edges.select("src", "dst")
-    ne = edges.count()
-    if single_task("personalized_pagerank", ne, bool(seeds)):
-        # guarded single-task fast path (round-10): same fixed-round
-        # pre-divided-rank update in one task — see _local_fixed_rounds_pr
-        return _local_fixed_rounds_pr(
-            e, num_iter, damping, seeds, len(seeds), weighted=False
-        )
-    deg = (
-        e.groupBy(F.col("src").alias("id"))
-        .agg(F.count("*").alias("degree"))
-        .localCheckpoint()
+    return _pagerank(
+        edges,
+        "personalized_pagerank",
+        damping,
+        num_iter=num_iter,
+        seeds=list(map(int, sources)),
     )
-    nv = deg.count()
-    if nv == 0 or not seeds:
-        return deg.select("id", F.lit(0.0).alias("pr"))
-    base = (1.0 - damping) / len(seeds)
-    deg_b = state_hint(deg, nv)
-    e2 = (
-        e.join(deg_b.withColumnRenamed("id", "src"), "src")
-        .select("src", "dst", F.col("degree").alias("deg_src"))
-        .coalesce(iter_partitions(ne))
-        .localCheckpoint()
-    )
-    in_seed = lambda c: F.col(c).isin(seeds)  # noqa: E731
-    state = deg.select(
-        "id",
-        (
-            F.when(in_seed("id"), F.lit(1.0 / len(seeds))).otherwise(F.lit(0.0))
-            / F.col("degree")
-        ).alias("prd"),
-        "degree",
-    ).localCheckpoint()
-    for i in range(num_iter):
-        state = (
-            e2.join(state_hint(state, nv), e2.dst == state.id)
-            .groupBy(F.col("src").alias("id"))
-            .agg(
-                F.sum("prd").alias("msum"),
-                F.first("deg_src").alias("degree"),
-            )
-            .select(
-                "id",
-                (
-                    (
-                        F.when(in_seed("id"), F.lit(base)).otherwise(F.lit(0.0))
-                        + F.lit(damping) * F.col("msum")
-                    )
-                    / F.col("degree")
-                ).alias("prd"),
-                "degree",
-            )
-        )
-        if (i + 1) % 5 == 0 or i == num_iter - 1:
-            state = state.localCheckpoint()
-    out = state.select("id", (F.col("prd") * F.col("degree")).alias("pr"))
-    e2.unpersist()
-    return out
 
 
 def weighted_pagerank(
@@ -526,55 +494,10 @@ def weighted_pagerank(
     (``tests/networkx/test_scipy.py:69``; the unweighted kernels
     elsewhere are the degenerate w≡1 case).
 
-    Same fused one-join round as :func:`pagerank`: state is the
-    weight-pre-divided rank ``prd = pr / wdeg``; the constant edge
-    relation carries ``wgt`` and ``wdeg_src``, so a round is one
-    state join + one partial-aggregated ``groupBy(src)``.  Fixed
-    ``num_iter`` rounds (unrolled-CTE oracle parity).
+    The :func:`pagerank` kernel and loop with ``weight_col`` as the
+    edge weight (state ``prd = pr / wdeg``), for a fixed ``num_iter``
+    rounds (unrolled-CTE oracle parity).
     """
-    e = edges.select("src", "dst", F.col(weight_col).alias("wgt"))
-    ne = edges.count()
-    if single_task("weighted_pagerank", ne):
-        # guarded single-task fast path (round-10): same fixed-round
-        # weight-pre-divided update in one task — see _local_fixed_rounds_pr
-        return _local_fixed_rounds_pr(
-            e, num_iter, damping, None, None, weighted=True
-        )
-    wdeg = (
-        e.groupBy(F.col("src").alias("id"))
-        .agg(F.sum("wgt").cast("double").alias("wdeg"))
-        .localCheckpoint()
+    return _pagerank(
+        edges, "weighted_pagerank", damping, num_iter=num_iter, weight_col=weight_col
     )
-    nv = wdeg.count()
-    if nv == 0:
-        return wdeg.select("id", F.lit(0.0).alias("pr"))
-    base = (1.0 - damping) / nv
-    e2 = (
-        e.join(state_hint(wdeg, nv).withColumnRenamed("id", "src"), "src")
-        .select("src", "dst", "wgt", F.col("wdeg").alias("wdeg_src"))
-        .coalesce(iter_partitions(ne))
-        .localCheckpoint()
-    )
-    state = wdeg.select(
-        "id", (F.lit(1.0 / nv) / F.col("wdeg")).alias("prd"), "wdeg"
-    ).localCheckpoint()
-    for i in range(num_iter):
-        state = (
-            e2.join(state_hint(state, nv), e2.dst == state.id)
-            .groupBy(F.col("src").alias("id"))
-            .agg(
-                (
-                    (
-                        F.lit(base)
-                        + F.lit(damping) * F.sum(F.col("prd") * F.col("wgt"))
-                    )
-                    / F.first("wdeg_src")
-                ).alias("prd"),
-                F.first("wdeg_src").alias("wdeg"),
-            )
-        )
-        if (i + 1) % 5 == 0 or i == num_iter - 1:
-            state = state.localCheckpoint()
-    out = state.select("id", (F.col("prd") * F.col("wdeg")).alias("pr"))
-    e2.unpersist()
-    return out

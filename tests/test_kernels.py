@@ -10,6 +10,7 @@ from graphdb_testing_spark.operators.components import (
     component_sizes,
     connected_components,
 )
+from graphdb_testing_spark.operators import util
 from graphdb_testing_spark.operators.pagerank import pagerank
 
 
@@ -154,11 +155,18 @@ def test_personalized_pagerank_unreachable_is_zero(spark, path_graph):
     assert rows[0] > 0.2
 
 
-def test_weighted_pagerank_uniform_weights_match_unweighted(spark, bridged_cliques):
+@pytest.mark.parametrize("ne_max", [util.LOCAL_NE_MAX, 0])
+def test_weighted_pagerank_uniform_weights_match_unweighted(
+    spark, bridged_cliques, ne_max, monkeypatch
+):
+    """w ≡ 1 is plain PageRank on both sides of the guard: the
+    single-task kernel and the shared distributed loop."""
     from graphdb_testing_spark.operators.pagerank import weighted_pagerank
 
+    monkeypatch.setattr(util, "LOCAL_NE_MAX", ne_max)
     pr_u = {r.id: r.pr for r in pagerank(bridged_cliques, num_iter=8).collect()}
     pr_w = {r.id: r.pr for r in weighted_pagerank(bridged_cliques, num_iter=8).collect()}
+    assert util.FAST_PATH_DECISIONS["weighted_pagerank"] is (ne_max > 0)
     assert set(pr_u) == set(pr_w)
     for v in pr_u:
         assert abs(pr_u[v] - pr_w[v]) < 1e-12

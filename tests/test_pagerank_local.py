@@ -121,13 +121,19 @@ def test_local_weighted_matches(spark, sym_weighted_edges, monkeypatch, num_iter
     assert fast == slow
 
 
-@pytest.mark.parametrize("seeds", [[0, 1, 2], [5], [0, 99999]])
+@pytest.mark.parametrize(
+    "seeds", [[0, 1, 2], [5], [0, 99999], [0, 2**32 + 5], []]
+)
 def test_local_personalized_matches(spark, sym_weighted_edges, monkeypatch, seeds):
+    """Seeds outside the graph take no reset mass; one past int32 must
+    neither fail nor wrap onto vertex 5 on the narrow-id loop; no seeds
+    rank every vertex 0."""
     fast = _r6(prmod.personalized_pagerank(sym_weighted_edges, seeds, num_iter=5))
     monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
     slow = _r6(prmod.personalized_pagerank(sym_weighted_edges, seeds, num_iter=5))
     assert util.FAST_PATH_DECISIONS["personalized_pagerank"] is False
     assert fast == slow
+    assert seeds or set(fast.values()) == {0.0}
 
 
 def test_local_weighted_deterministic_across_layouts(spark, sym_weighted_edges):
