@@ -1,4 +1,4 @@
-"""BFS / unweighted single-source shortest paths.
+"""BFS, multi-source BFS and the bounded-round weighted path kernels.
 
 Reference semantics (SURVEY.md §2.4): level-synchronous frontier
 expansion; distance = hop count.  The relational formulation is the
@@ -9,38 +9,57 @@ model (``tests/sqlite/test.c:210-233``)::
       FROM edges JOIN distance ON edges.src = distance.vtx
       WHERE distance.dist = d       -- until 0 rows inserted
 
-Spark-first design: a semi-naive level loop over the reached vertices
-``(id, dist, active)``, ``active`` marking the last level's frontier:
-a round keeps the self-loop rows of ``edges ∪ self-loops`` and rows
-from active senders, and takes ``min(own dist, sender dist + 1)`` —
-the ``WHERE distance.dist = d`` frontier, with the visited-set
-subtraction folded into the min.  The state is broadcast or shuffled
-by its size (:func:`~graphdb_testing_spark.operators.util.state_hint`);
-the loop is the same.  Per-level sizes (``test.c:226-227``) come from
+Spark-first design: every kernel here but :func:`two_shortest` is one
+semiring over the same semi-naive loop (:func:`_semiring_paths`, on
+:func:`~graphdb_testing_spark.operators.util.semiring_round` and
+:func:`~graphdb_testing_spark.operators.util.fixpoint`):
+
+* :func:`bfs` and :func:`multi_source_bfs` are ``(min, + 1)``, the
+  latter keyed by ``(root, id)``;
+* :func:`sssp_weighted` is ``(min, + wgt)`` (Bellman-Ford);
+* :func:`widest_path` is ``(max, least(·, wgt))``.
+
+The state ``(id, value, active)`` holds the reached vertices,
+``active`` marking the last round's changes: a round keeps the
+self-loop rows of ``edges ∪ self-loops`` and rows from active senders
+and takes ``plus(own value, times(sender value))`` — the ``WHERE
+distance.dist = d`` frontier, with the visited-set subtraction folded
+into the ``plus``.  Both semirings are selective and idempotent, so
+sending only from changed vertices gives the same values after exactly
+``r`` rounds: the bounded kernels stay bit-identical to their
+fixed-unroll SQL oracles, and a chunk that changes nothing ends the
+loop early.  Sources keep their row even without edges (their own
+self-loop), as the oracles' ``UNION ALL`` carries the previous round
+forward.  The state is broadcast or shuffled by its size
+(:func:`~graphdb_testing_spark.operators.util.state_hint`); the loop is
+the same.  Per-level sizes (``test.c:226-227``) come from
 :func:`bfs_levels`.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .util import (
-    checkpoint_active,
+    fixpoint,
     iter_partitions,
     map_single_task,
-    min_round,
     np_edges,
     self_loop_relation,
+    semiring_round,
     single_task,
     state_hint,
     vertex_ids,
 )
 
+
 def _local_sssp_weighted(e: DataFrame, source: int, rounds: int) -> DataFrame:
     """Single-Arrow-task bounded-round Bellman-Ford (exact integer
     min-plus semiring; each round relaxes from the round-start state,
-    matching the DataFrame loop's union + min-aggregate exactly)."""
+    as the semiring rounds and the SQL oracle do)."""
 
     def run(batches):
         import numpy as np
@@ -74,8 +93,8 @@ def _local_widest_path(
     e: DataFrame, source: int, rounds: int, inf: int
 ) -> DataFrame:
     """Single-Arrow-task bounded-round (max, min) semiring fixpoint —
-    exact integers; the DataFrame loop's inf-weight self-loops are the
-    ``new = old.copy()`` carry-over here."""
+    exact integers; the semiring round's self-loop identity rows are
+    the ``new = old.copy()`` carry-over here."""
 
     def run(batches):
         import numpy as np
@@ -97,10 +116,9 @@ def _local_widest_path(
             cap = new
         hit = cap >= 0
         out_id, out_c = ids[hit], cap[hit]
-        if not in_graph and rounds == 0:
-            # the DataFrame loop rebuilds state from the join each
-            # round, so a source absent from the edge table survives
-            # only the zero-round case (unlike SSSP's union carry)
+        if not in_graph:
+            # a source without edges keeps its row, as the oracle's
+            # UNION ALL carries w{i-1} forward
             out_id = np.r_[out_id, np.int64(source)]
             out_c = np.r_[out_c, np.int64(inf)]
         yield pd.DataFrame({"id": out_id, "cap": out_c})
@@ -222,17 +240,64 @@ def _local_multi_source_bfs(
     return map_single_task(e, run, "root long, id long, dist int")
 
 
-def bfs(
-    edges: DataFrame,
-    source: int,
-    max_depth: int = 100,
-    checkpoint_every: int = 4,
+def _semiring_paths(
+    rel_edges: DataFrame,
+    ne: int,
+    roots: list[int],
+    col: str,
+    init,
+    times,
+    max_rounds: int,
+    plus: str = "min",
+    rooted: bool = False,
 ) -> DataFrame:
+    """The distributed side of every path kernel here: semiring rounds
+    (:func:`~graphdb_testing_spark.operators.util.semiring_round`)
+    from ``roots``, each seeded with ``init`` in ``col``, over
+    ``rel_edges`` ``(src, dst[, wgt])`` (``src`` receives from
+    ``dst``), for at most ``max_rounds`` rounds or to the fixpoint.
+    ``rooted`` keys the state by ``(root, id)``: all roots advance in
+    one state of at most |roots| × nv rows.  Every root gets a
+    self-loop (a root without edges keeps its row) and enters the
+    int32 check, so a root past int32 keeps the loop on long ids.
+    Returns ``([root,] id, col, active)`` on the loop's key type."""
+    spark = rel_edges.sparkSession
+    ids, nv, key = vertex_ids(rel_edges, also=tuple(roots))
+    ns = nv * len(roots) if rooted else nv
+    rel = self_loop_relation(rel_edges, ids, key, ne, ns, sources=tuple(roots))
+    seeds = reduce(
+        DataFrame.unionAll,
+        [
+            spark.range(1).select(
+                *([F.lit(r).cast(key).alias("root")] if rooted else []),
+                F.lit(r).cast(key).alias("id"),
+                init.alias(col),
+                F.lit(True).alias("active"),
+            )
+            for r in roots
+        ],
+    )
+    keys = ("root", "id") if rooted else ("id",)
+    state = fixpoint(
+        lambda st: semiring_round(rel, st, ns, col, times, plus, keys), seeds, max_rounds
+    )
+    rel.unpersist()
+    ids.unpersist()
+    return state
+
+
+def _reversed(edges: DataFrame) -> DataFrame:
+    """A weighted edge table as a semiring relation: ``dst`` receives
+    from ``src`` along the edge direction, as the SQL oracles relax."""
+    return edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "wgt")
+
+
+def bfs(edges: DataFrame, source: int, max_depth: int = 100) -> DataFrame:
     """``(id, dist)`` hop distances from ``source`` over a symmetric
     edge table; unreachable vertices are absent (reference leaves them
     at "infinity", i.e. not in the ``distance`` table).  The
-    distributed loop runs ``checkpoint_every`` semi-naive levels per
-    chunk until a chunk reaches no new vertex."""
+    distributed loop runs ``(min, + 1)`` semi-naive levels until a
+    chunk reaches no new vertex."""
     ne = edges.count()
     if single_task("bfs", ne):
         # guarded single-task fast path (round-10): per-level cost at
@@ -244,29 +309,9 @@ def bfs(
             edges.select("src", "dst"), [source], max_depth
         ).select("id", "dist")
     id_type = edges.schema["src"].dataType.simpleString()
-    # the int32 check covers the source too
-    ids, nv, key = vertex_ids(edges, source)
-    dist = edges.sparkSession.range(1).select(
-        F.lit(source).cast(key).alias("id"),
-        F.lit(0).alias("dist"),
-        F.lit(True).alias("active"),
+    dist = _semiring_paths(
+        edges.select("src", "dst"), ne, [source], "dist", F.lit(0), lambda v: v + 1, max_depth
     )
-    # the source's own self-loop keeps its (source, 0) row when it has
-    # no edges
-    rel = self_loop_relation(edges, ids, key, ne, nv, source=source)
-    depth = 0
-    while depth < max_depth:
-        k = min(checkpoint_every, max_depth - depth)
-        chunk_start = dist
-        for _ in range(k):
-            dist = min_round(rel, dist, nv, "dist", 1)
-        dist, active = checkpoint_active(dist)
-        chunk_start.unpersist()
-        depth += k
-        if active == 0:
-            break
-    rel.unpersist()
-    ids.unpersist()
     return dist.select(F.col("id").cast(id_type).alias("id"), "dist")
 
 
@@ -282,35 +327,22 @@ def sssp_weighted(
     multiplicities, never distances — SURVEY.md §2.4) to true weighted
     shortest paths.  Runs exactly ``rounds`` relaxations so a
     fixed-unroll SQL oracle computes the identical partial fixpoint;
-    with ``rounds >= graph diameter`` this is the full solution.  Each
-    round is one join + min-aggregate; state is re-materialized per
-    round, with the measured broadcast-below/shuffle-above policy
-    (:func:`~graphdb_testing_spark.operators.util.state_hint`).
+    with ``rounds >= graph diameter`` this is the full solution.  The
+    distributed side is the ``(min, + wgt)`` semiring round, relaxing
+    along the edge direction from the vertices that changed last
+    round; a real ``(u, u)`` edge is relaxed like any other.
     """
-    spark = edges.sparkSession
     e = edges.select("src", "dst", "wgt")
     ne = edges.count()
     if single_task("sssp_weighted", ne):
         # guarded single-task fast path (round-10): exact min-plus
         # integers, same relax-from-round-start schedule
         return _local_sssp_weighted(e, int(source), rounds)
-    e = e.coalesce(iter_partitions(ne))
-    dist = spark.createDataFrame(
-        [(int(source), 0)], "id long, dist long"
-    ).localCheckpoint()
-    reached = 1
-    for _ in range(rounds):
-        relaxed = e.join(state_hint(dist, reached), e.src == F.col("id")).select(
-            F.col("dst").alias("id"), (F.col("dist") + F.col("wgt")).alias("dist")
-        )
-        dist = (
-            dist.unionAll(relaxed)
-            .groupBy("id")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint()
-        )
-        reached = dist.count()  # cheap on the materialized checkpoint
-    return dist
+    dist = _semiring_paths(
+        _reversed(e), ne, [int(source)], "dist", F.lit(0).cast("long"),
+        lambda v: v + F.col("wgt"), rounds,
+    )
+    return dist.select(F.col("id").cast("long").alias("id"), "dist")
 
 
 def bfs_levels(dist: DataFrame) -> DataFrame:
@@ -326,53 +358,29 @@ def eccentricity(dist: DataFrame) -> int:
 
 
 def multi_source_bfs(
-    edges: DataFrame,
-    roots: list[int],
-    max_depth: int = 100,
-    checkpoint_every: int = 4,
+    edges: DataFrame, roots: list[int], max_depth: int = 100
 ) -> DataFrame:
     """``(root, id, dist)`` hop distances from every root at once.
 
-    All roots advance in ONE (root, id)-keyed frontier — O(diameter)
-    Spark jobs total, not O(roots × diameter), the same batching the
-    Brandes operator uses (`betweenness.py`).  State is ≤ |roots| × nv
-    rows, shuffled on the compound key; the edge table never moves."""
-    spark = edges.sparkSession
-    # checkpoint: the per-level join must probe a materialized table,
-    # not re-run a derived-edge pipeline O(diameter) times
+    All roots advance in ONE ``(root, id)``-keyed state of at most
+    |roots| × nv rows — O(diameter) Spark jobs total, not O(roots ×
+    diameter), the same batching the Brandes operator uses
+    (`betweenness.py`); the relation never moves."""
     e = edges.select("src", "dst")
     ne = edges.count()
+    roots = [int(r) for r in roots]
     if single_task("multi_source_bfs", ne, state_rows=len(roots) * ne):
         # guarded single-task fast path (round-10): per-root masked
         # level loops, integer hop distances, identical level schedule
-        return _local_multi_source_bfs(e, [int(r) for r in roots], max_depth)
-    e = e.coalesce(iter_partitions(ne)).localCheckpoint()
-    dist = spark.createDataFrame(
-        [(int(r), int(r), 0) for r in roots], "root long, id long, dist int"
-    ).localCheckpoint()
-    frontier = dist
-    reached = len(roots)
-    depth = 0
-    while depth < max_depth:
-        depth += 1
-        nxt = (
-            e.join(state_hint(frontier, reached), e.src == frontier.id)
-            .select("root", F.col("dst").alias("id"))
-            .distinct()
-            .join(state_hint(dist, reached), ["root", "id"], "left_anti")
-            .withColumn("dist", F.lit(depth).cast("int"))
-            .localCheckpoint()
-        )
-        n = nxt.count()
-        if n == 0:
-            nxt.unpersist()
-            break
-        reached += n
-        dist = dist.unionAll(nxt)
-        if depth % checkpoint_every == 0:
-            dist = dist.localCheckpoint()
-        frontier = nxt
-    return dist
+        return _local_multi_source_bfs(e, roots, max_depth)
+    if not roots:
+        return e.sparkSession.createDataFrame([], "root long, id long, dist int")
+    dist = _semiring_paths(
+        e, ne, roots, "dist", F.lit(0), lambda v: v + 1, max_depth, rooted=True
+    )
+    return dist.select(
+        F.col("root").cast("long").alias("root"), F.col("id").cast("long").alias("id"), "dist"
+    )
 
 
 def widest_path(
@@ -384,51 +392,22 @@ def widest_path(
     """``(id, cap)`` — bounded-round max-bottleneck (widest) path from
     ``source``: ``cap(v) = max over paths of the minimum edge weight``.
 
-    The (max, min) semiring twin of Bellman-Ford SSSP — same plan per
-    round (one join + one aggregate), opposite monotonicity; ``cap``
-    only ever increases, so ``rounds ≥ diameter`` reaches the exact
-    fixpoint.  Capacity planning / max-flow-lite over co-occurrence
-    weights."""
-    spark = edges.sparkSession
+    The (max, min) semiring twin of Bellman-Ford SSSP — the same round
+    and loop, opposite monotonicity; ``cap`` only ever increases, so
+    ``rounds ≥ diameter`` reaches the exact fixpoint.  A source without
+    edges keeps ``(source, inf)``.  Capacity planning / max-flow-lite
+    over co-occurrence weights."""
+    e = edges.select("src", "dst", "wgt")
     ne = edges.count()
     if single_task("widest_path", ne):
         # guarded single-task fast path (round-10): exact (max, min)
         # semiring; the copy-forward carry is the self-loop term
-        return _local_widest_path(edges.select("src", "dst", "wgt"), int(source), rounds, int(inf))
-    # self-loops with weight = inf make the round a SINGLE
-    # join + groupBy.max (min(cap, inf) = cap keeps the old value), so
-    # the state is referenced once per round — linear plan growth, and
-    # rounds can be unrolled between checkpoints (the
-    # operators/components.py idiom)
-    ids = edges.select(F.col("src").alias("id")).distinct().localCheckpoint()
-    e_self = (
-        edges.select("src", "dst", "wgt")
-        .unionAll(
-            ids.select(
-                F.col("id").alias("src"),
-                F.col("id").alias("dst"),
-                F.lit(int(inf)).alias("wgt"),
-            )
-        )
-        .coalesce(iter_partitions(ne))
+        return _local_widest_path(e, int(source), rounds, int(inf))
+    cap = _semiring_paths(
+        _reversed(e), ne, [int(source)], "cap", F.lit(int(inf)).cast("long"),
+        lambda v: F.least(v, F.col("wgt")), rounds, plus="max",
     )
-    nv = ids.count()
-    cap = spark.createDataFrame(
-        [(int(source), int(inf))], "id long, cap long"
-    ).localCheckpoint()
-    done = 0
-    unroll = 3
-    while done < rounds:
-        k = min(unroll, rounds - done)
-        for _ in range(k):
-            cap = (
-                e_self.join(state_hint(cap, nv), e_self.src == F.col("id"))
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.max(F.least(F.col("cap"), F.col("wgt"))).alias("cap"))
-            )
-        cap = cap.localCheckpoint()
-        done += k
-    return cap
+    return cap.select(F.col("id").cast("long").alias("id"), "cap")
 
 
 def two_shortest(

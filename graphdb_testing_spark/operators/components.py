@@ -13,7 +13,8 @@ Spark-first design
 * One round = ``relation ⋈ labels`` on ``dst`` → ``groupBy(src).min``
   over the constant relation ``edges ∪ self-loops``; the self-loop row
   carries a vertex's own label, so the label state is referenced once
-  per round (:func:`~graphdb_testing_spark.operators.util.min_round`).
+  per round (:func:`~graphdb_testing_spark.operators.util.semiring_round`
+  with ``min`` and ``+ 0``).
   When the labels are broadcast, the relation is hash-partitioned on
   ``src`` and persisted once, so a round is one narrow stage with no
   exchange (:func:`~graphdb_testing_spark.operators.util.round_layout`).
@@ -25,9 +26,11 @@ Spark-first design
   serves broadcast and shuffled labels alike.
 * Pointer-jumping (labels self-join) once per chunk halves the round
   count on high-diameter graphs, same as the reference's jump step.
-* ``localCheckpoint`` every ``unroll`` rounds truncates lineage (the
-  Spark analog of Pegasus's per-stage HDFS materialization,
-  ``tests/pegasus/sssp/SSSP.java:302-310``).
+* ``localCheckpoint`` every ``util.CHUNK_ROUNDS`` rounds truncates
+  lineage, in the one chunk loop of every fixpoint kernel
+  (:func:`~graphdb_testing_spark.operators.util.fixpoint`; the
+  pointer jump is its per-chunk hook): the Spark analog of Pegasus's
+  per-stage HDFS materialization (``tests/pegasus/sssp/SSSP.java:302-310``).
 """
 
 from __future__ import annotations
@@ -36,11 +39,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .util import (
-    checkpoint_active,
+    fixpoint,
     map_single_task,
-    min_round,
     np_edges,
     self_loop_relation,
+    semiring_round,
     single_task,
     state_hint,
     vertex_ids,
@@ -82,9 +85,6 @@ def _local_components(e: DataFrame) -> DataFrame:
 def connected_components(
     edges: DataFrame,
     max_iter: int = 100,
-    unroll: int = 4,  # chunk-end pointer jump collapses chains, so
-    # low-diameter graphs converge in 1-2 chunks; linear plan growth
-    # makes larger unrolls safe for high-diameter graphs
     pointer_jump: bool = True,
 ) -> DataFrame:
     """``(id, label)`` where ``label`` = min vertex id in the component.
@@ -97,7 +97,7 @@ def connected_components(
     so ``min over neighbors`` includes the vertex's own label, and the
     round is a single ``join + groupBy.min`` with no merge-back join.
     One self-reference per round ⇒ the unrolled lazy plan grows
-    **linearly** in ``unroll`` (a state-referenced-twice formulation
+    **linearly** in the chunk length (a state-referenced-twice formulation
     grows 2^k and stalls Catalyst beyond a handful of rounds).  Only
     vertices whose label dropped in the previous round send messages.
 
@@ -125,25 +125,18 @@ def connected_components(
         return _local_components(edges.select("src", "dst"))
     id_type = edges.schema["src"].dataType.simpleString()
     ids, nv, key = vertex_ids(edges)
-    rel = self_loop_relation(edges, ids, key, ne, nv)
+    rel = self_loop_relation(edges.select("src", "dst"), ids, key, ne, nv)
     labels = ids.select(
         F.col("id").cast(key).alias("id"),
         F.col("id").cast(key).alias("label"),
         F.lit(True).alias("active"),
     )
-    done = 0
-    while done < max_iter:
-        k = min(unroll, max_iter - done)
-        chunk_start = labels
-        for _ in range(k):
-            labels = min_round(rel, labels, nv, "label", 0)
-        if pointer_jump:
-            labels = _pointer_jump(labels.localCheckpoint(), nv)
-        labels, active = checkpoint_active(labels)
-        chunk_start.unpersist()
-        done += k
-        if active == 0:
-            break
+    labels = fixpoint(
+        lambda st: semiring_round(rel, st, nv, "label", lambda v: v + 0),
+        labels,
+        max_iter,
+        (lambda st: _pointer_jump(st.localCheckpoint(), nv)) if pointer_jump else None,
+    )
     ids.unpersist()
     rel.unpersist()
     return labels.select(

@@ -14,31 +14,47 @@ Spark-first design
   subgraph are singleton SCCs; peeling them to (bounded) fixpoint is
   two semi-joins per round and removes the DAG tails that would
   otherwise cost one full color round each.
-* **Forward coloring**: ``color[v] = min u that reaches v`` via the
-  one-self-reference-per-round min-label loop of
-  :func:`operators.components.connected_components` (self-loop edges
-  appended to the constant relation; ``join + groupBy.min`` along the
-  edge direction; DECIMAL(38,0) Σcolor convergence scalar; linear plan
-  growth, ``localCheckpoint`` per chunk).
+* **Forward coloring**: ``color[v] = min u that reaches v`` is the
+  ``(min, + 0)`` semiring round of
+  :func:`operators.components.connected_components`
+  (:func:`operators.util.semiring_round`) over the reversed relation,
+  so labels flow along the edge direction; semi-naive (only vertices
+  whose color dropped send), and the one chunk loop
+  (:func:`operators.util.fixpoint`) stops on the first chunk that
+  leaves no vertex active, counted in the chunk's checkpoint job.
 * **Backward settle**: within one color class, ``SCC(root) =
   {v : color[v] = root ∧ v →* root}`` — every vertex on such a path
-  shares the color, so the backward reachability join can (and does)
-  filter on color equality, keeping the frontier inside one class.
-  Settledness is monotone; convergence = stable count.
+  shares the color, so settling is the same ``(min, + 0)`` round over
+  the intra-color edges, seeded with the color roots, and it stops
+  the same way.
 * Each outer round removes every color root's full SCC, so rounds ≤
   the longest SCC chain in the condensation — with trimming, small for
-  real graphs.  All joins carry :func:`operators.util.state_hint`
-  (broadcast below the measured crossover, shuffle-hash above), so the
-  same code is the 100 TB plan: no driver-side collections beyond
-  scalar counts.
+  real graphs.  Vertex-set and edge-set sizes come from the
+  checkpoint jobs themselves (observed metrics), ids that fit int32
+  run the loops on int keys, and all joins carry
+  :func:`operators.util.state_hint` (broadcast below the measured
+  crossover, shuffle-hash above), so the same code is the 100 TB plan:
+  no driver-side collections beyond scalar counts.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .util import iter_partitions, map_single_task, np_edges, single_task, state_hint
+from .util import (
+    fixpoint,
+    map_single_task,
+    np_edges,
+    observed_checkpoint,
+    self_loop_relation,
+    semiring_round,
+    single_task,
+    state_hint,
+    vertex_summary,
+)
 
 
 def _local_scc(e: DataFrame, max_outer: int = 30) -> DataFrame:
@@ -120,48 +136,43 @@ def _local_scc(e: DataFrame, max_outer: int = 30) -> DataFrame:
     return map_single_task(e, run, "id long, scc_id long")
 
 
-def _minlabel_forward(
-    edges: DataFrame, verts: DataFrame, nv: int, max_iter: int, unroll: int
-) -> DataFrame:
-    """``(id, color)`` with ``color`` = min vertex id reaching ``id``
-    (reflexive) along edge direction, to fixpoint."""
-    ne = edges.count()
-    e_self = (
-        edges.select("src", "dst")
-        .unionAll(verts.select(F.col("id").alias("src"), F.col("id").alias("dst")))
-        .coalesce(iter_partitions(ne + nv))
+def _counted(df: DataFrame) -> tuple[DataFrame, int]:
+    """``localCheckpoint`` ``df`` and count its rows in the same job."""
+    df, r = observed_checkpoint(df, F.count(F.lit(1)).alias("n"))
+    return df, int(r["n"])
+
+
+def _restrict(cur_edges: DataFrame, remaining: DataFrame, nrem: int) -> tuple[DataFrame, int]:
+    """The edges of ``cur_edges`` with both ends in ``remaining``,
+    checkpointed, and their count."""
+    keep_s = remaining.select(F.col("id").alias("src"))
+    keep_d = remaining.select(F.col("id").alias("dst"))
+    return _counted(
+        cur_edges.join(state_hint(keep_s, nrem), "src", "semi")
+        .join(state_hint(keep_d, nrem), "dst", "semi")
+        .select("src", "dst")
     )
-    colors = verts.withColumn("color", F.col("id")).localCheckpoint()
-    prev_sum = colors.agg(
-        F.sum(F.col("color").cast("decimal(38,0)")).alias("s")
-    ).collect()[0]["s"]
-    done = 0
-    while done < max_iter:
-        k = min(unroll, max_iter - done)
-        chunk_start = colors
-        for _ in range(k):
-            colors = (
-                e_self.join(state_hint(colors, nv), e_self.src == colors.id)
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.min("color").alias("color"))
-            )
-        colors = colors.localCheckpoint()
-        done += k
-        cur_sum = colors.agg(
-            F.sum(F.col("color").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
-        chunk_start.unpersist()
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    return colors
+
+
+def _propagate_min(
+    rel_edges: DataFrame, ids: DataFrame, ne: int, nv: int, state: DataFrame, col: str, max_prop: int
+) -> DataFrame:
+    """``state`` after min-label rounds (``semiring_round`` with ``+ 0``)
+    over ``rel_edges`` (``src`` receives from ``dst``) plus a self-loop
+    per vertex of ``ids``, to the fixpoint or ``max_prop`` rounds."""
+    key = ids.schema["id"].dataType.simpleString()
+    rel = self_loop_relation(rel_edges, ids, key, ne, nv)
+    state = fixpoint(
+        lambda st: semiring_round(rel, st, nv, col, lambda v: v + 0), state, max_prop
+    )
+    rel.unpersist()
+    return state
 
 
 def strongly_connected_components(
     edges: DataFrame,
     max_outer: int = 30,
     max_prop: int = 100,
-    unroll: int = 4,
     trim_rounds: int = 10,
 ) -> DataFrame:
     """``(id, scc_id)`` over a **directed** ``(src, dst)`` edge list;
@@ -178,18 +189,22 @@ def strongly_connected_components(
         # the same max_outer cap (with per-round trim) so pathological
         # chain graphs fail fast instead of hanging (round-10 ADVICE)
         return _local_scc(edges.select("src", "dst"), max_outer)
-    ids = (
+    id_type = edges.schema["src"].dataType.simpleString()
+    ids, nrem, narrow = vertex_summary(
         edges.select(F.col("src").alias("id"))
         .unionAll(edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        "id",
     )
-    remaining = ids
-    cur_edges = edges.select("src", "dst").distinct().localCheckpoint()
+    key = "int" if narrow else id_type
+    remaining = ids.select(F.col("id").cast(key).alias("id"))
+    cur_edges, ne = _counted(
+        edges.select(F.col("src").cast(key).alias("src"), F.col("dst").cast(key).alias("dst"))
+        .distinct()
+    )
     pieces: list[DataFrame] = []
 
     for _ in range(max_outer):
-        nrem = remaining.count()
         if nrem == 0:
             break
 
@@ -197,89 +212,66 @@ def strongly_connected_components(
         for _ in range(trim_rounds):
             srcs = cur_edges.select(F.col("src").alias("id")).distinct()
             dsts = cur_edges.select(F.col("dst").alias("id")).distinct()
-            both = srcs.join(state_hint(dsts, nrem), "id").localCheckpoint()
-            dead = remaining.join(state_hint(both, nrem), "id", "left_anti")
-            if dead.isEmpty():
+            both = srcs.join(state_hint(dsts, nrem), "id")
+            kept, nkept = _counted(remaining.join(state_hint(both, nrem), "id", "semi"))
+            if nkept == nrem:
                 break
             pieces.append(
-                dead.select("id", F.col("id").alias("scc_id")).localCheckpoint()
+                remaining.join(state_hint(kept, nkept), "id", "left_anti").select(
+                    "id", F.col("id").alias("scc_id")
+                )
             )
-            remaining = remaining.join(
-                state_hint(both, nrem), "id", "semi"
-            ).localCheckpoint()
-            nrem = remaining.count()
-            keep_s = remaining.select(F.col("id").alias("src"))
-            keep_d = remaining.select(F.col("id").alias("dst"))
-            cur_edges = (
-                cur_edges.join(state_hint(keep_s, nrem), "src", "semi")
-                .join(state_hint(keep_d, nrem), "dst", "semi")
-                .select("src", "dst")
-                .localCheckpoint()
-            )
+            remaining, nrem = kept, nkept
+            cur_edges, ne = _restrict(cur_edges, remaining, nrem)
         if nrem == 0:
             break
 
-        # --- forward min-label coloring to fixpoint
-        colors = _minlabel_forward(cur_edges, remaining, nrem, max_prop, unroll)
-
-        # --- backward settle within each color class
-        settled = (
-            colors.filter(F.col("id") == F.col("color"))
-            .select("id", F.col("color").alias("scc_id"))
-            .localCheckpoint()
+        # --- forward coloring: color[v] = min u reaching v, labels
+        # flowing along the edge direction (the relation reversed)
+        colors = _propagate_min(
+            cur_edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
+            remaining,
+            ne,
+            nrem,
+            remaining.select("id", F.col("id").alias("color"), F.lit(True).alias("active")),
+            "color",
+            max_prop,
         )
-        n_settled = settled.count()
-        for _ in range(max_prop):
-            grown = (
-                cur_edges.join(
-                    state_hint(
-                        settled.select(
-                            F.col("id").alias("dst"), F.col("scc_id")
-                        ),
-                        n_settled,
-                    ),
-                    "dst",
-                )
-                .join(
-                    state_hint(
-                        colors.select(F.col("id").alias("src"), "color"), nrem
-                    ),
-                    "src",
-                )
-                .filter(F.col("color") == F.col("scc_id"))
-                .select(F.col("src").alias("id"), "scc_id")
-                .unionAll(settled)
-                .distinct()
-                .localCheckpoint()
-            )
-            n_grown = grown.count()
-            settled.unpersist()
-            settled = grown
-            if n_grown == n_settled:
-                break
-            n_settled = n_grown
+
+        # --- backward settle: from each color root against the edge
+        # direction, over the edges inside one color class
+        src_c = colors.select(F.col("id").alias("src"), F.col("color").alias("c_src"))
+        dst_c = colors.select(F.col("id").alias("dst"), F.col("color").alias("c_dst"))
+        intra = (
+            cur_edges.join(state_hint(src_c, nrem), "src")
+            .join(state_hint(dst_c, nrem), "dst")
+            .where(F.col("c_src") == F.col("c_dst"))
+            .select("src", "dst")
+        )
+        settled = _propagate_min(
+            intra,
+            remaining,
+            ne,
+            nrem,
+            colors.where(F.col("id") == F.col("color")).select(
+                "id", F.col("color").alias("scc_id"), F.lit(True).alias("active")
+            ),
+            "scc_id",
+            max_prop,
+        ).select("id", "scc_id")
 
         pieces.append(settled)
-        remaining = remaining.join(
-            state_hint(settled.select("id"), n_settled), "id", "left_anti"
-        ).localCheckpoint()
-        nrem = remaining.count()
-        keep_s = remaining.select(F.col("id").alias("src"))
-        keep_d = remaining.select(F.col("id").alias("dst"))
-        cur_edges = (
-            cur_edges.join(state_hint(keep_s, nrem), "src", "semi")
-            .join(state_hint(keep_d, nrem), "dst", "semi")
-            .select("src", "dst")
-            .localCheckpoint()
+        remaining, nrem = _counted(
+            remaining.join(state_hint(settled.select("id"), nrem), "id", "left_anti")
         )
+        cur_edges, ne = _restrict(cur_edges, remaining, nrem)
     else:
-        if not remaining.isEmpty():
+        if nrem:
             raise RuntimeError(
                 f"SCC did not converge within max_outer={max_outer} peel rounds"
             )
 
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.unionAll(p)
-    return out
-
+    out = reduce(DataFrame.unionAll, pieces)
+    return out.select(
+        F.col("id").cast(id_type).alias("id"), F.col("scc_id").cast(id_type).alias("scc_id")
+    )

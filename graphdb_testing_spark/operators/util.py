@@ -116,16 +116,14 @@ def round_layout(rel: DataFrame, ne: int, nv: int) -> DataFrame:
     return rel
 
 
-def vertex_ids(edges: DataFrame, source: int | None = None) -> tuple[DataFrame, int, str]:
+def vertex_ids(edges: DataFrame, also: tuple[int, ...] = ()) -> tuple[DataFrame, int, str]:
     """``(ids, nv, key_type)`` of a symmetric edge table: ``ids`` is its
     checkpointed distinct ``src`` as ``id`` (a symmetric table's src
     covers every vertex), and the checkpoint job itself also gives
-    ``nv`` and the int32 check (``source`` included): ``key_type`` is
-    ``int`` when the loop can run on narrow ids."""
+    ``nv`` and the int32 check (``also``, e.g. a source, included):
+    ``key_type`` is ``int`` when the loop can run on narrow ids."""
     ids, nv, narrow = vertex_summary(
-        edges.select(F.col("src").alias("id")).distinct(),
-        "id",
-        also=() if source is None else (source,),
+        edges.select(F.col("src").alias("id")).distinct(), "id", also=also
     )
     return ids, nv, "int" if narrow else ids.schema["id"].dataType.simpleString()
 
@@ -136,59 +134,98 @@ def self_loop_relation(
     key: str,
     ne: int,
     nv: int,
-    source: int | None = None,
+    sources: tuple[int, ...] = (),
 ) -> DataFrame:
-    """The constant relation of the min-fixpoint loops (CC, BFS): the
-    edges plus one self-loop per vertex of ``ids`` and one for
-    ``source`` (so a source without edges keeps its row), keyed by
-    ``key`` (see :func:`vertex_ids`) and laid out by
-    :func:`round_layout`."""
+    """The constant relation of the semiring fixpoint loops: ``edges``
+    as ``(src, dst[, wgt])`` with ``src`` the receiving and ``dst`` the
+    sending vertex, plus one self-loop per vertex of ``ids`` and one
+    per ``sources`` vertex (so a source without edges keeps its row),
+    keyed by ``key`` (see :func:`vertex_ids`) and laid out by
+    :func:`round_layout` for an ``nv``-row state.  A weighted
+    relation's self-loops carry a NULL ``wgt``, which tells them apart
+    from a real ``(u, u)`` edge."""
+    spark = ids.sparkSession
     loops = ids.select(F.col("id").cast(key).alias("src"))
-    if source is not None:
-        loops = loops.unionAll(
-            ids.sparkSession.range(1).select(F.lit(source).cast(key).alias("src"))
-        )
-    rel = edges.select(
-        F.col("src").cast(key).alias("src"), F.col("dst").cast(key).alias("dst")
-    ).unionAll(loops.select("src", F.col("src").alias("dst")))
+    for s in sources:
+        loops = loops.unionAll(spark.range(1).select(F.lit(s).cast(key).alias("src")))
+    cols = [F.col("src").cast(key).alias("src"), F.col("dst").cast(key).alias("dst")]
+    loop_cols = ["src", F.col("src").alias("dst")]
+    if "wgt" in edges.columns:
+        cols.append("wgt")
+        loop_cols.append(F.lit(None).cast(edges.schema["wgt"].dataType).alias("wgt"))
+    rel = edges.select(*cols).unionAll(loops.select(*loop_cols))
     return round_layout(rel, ne, nv)
 
 
-def min_round(rel: DataFrame, state: DataFrame, nv: int, col: str, step: int) -> DataFrame:
-    """One semi-naive min-propagation round over ``state (id, col,
-    active)``: of :func:`self_loop_relation` keep the self-loop rows and
-    rows from active senders (``dst``), then per ``src`` take ``min(own,
-    sender + step)``, active when it dropped (or first appeared).  The
-    own value rides in on the self-loop row, so the state is referenced
-    ONCE per round and an unrolled chunk's plan grows linearly.  Sending
-    only from changed vertices (Pregelix, VLDB 2014; GraphX, OSDI 2014)
-    reaches the same integer fixpoint: each value a vertex held was sent
-    the round after it was set, and values only decrease."""
-    loop = F.col("src") == F.col("dst")
+def semiring_round(
+    rel: DataFrame,
+    state: DataFrame,
+    nv: int,
+    col: str,
+    times,
+    plus: str = "min",
+    keys: tuple[str, ...] = ("id",),
+) -> DataFrame:
+    """One semi-naive semiring round over ``state (*keys, col, active)``:
+    of :func:`self_loop_relation` keep the self-loop rows and rows from
+    active senders (``dst``), then per ``src`` (and the other ``keys``,
+    e.g. ``root``) take ``plus`` (``"min"`` or ``"max"``) of the own
+    value and ``times(sender value)`` (``+ step``, ``+ wgt`` or
+    ``least(·, wgt)``), active when it improved (or first appeared).
+    The own value rides in on the self-loop row — the semiring's
+    identity — so the state is referenced ONCE per round and an
+    unrolled chunk's plan grows linearly.  Sending only from changed
+    vertices (Pregelix, VLDB 2014; GraphX, OSDI 2014) gives the same
+    values after every round for a selective, idempotent ``plus``: a
+    value that did not change was already sent."""
+    loop = F.col("wgt").isNull() if "wgt" in rel.columns else F.col("src") == F.col("dst")
+    agg = getattr(F, plus)
     val = F.col(col)
-    return (
+    by = [k for k in keys if k != "id"]
+    out = (
         rel.join(state_hint(state, nv), rel.dst == state.id)
         .where(loop | F.col("active"))
-        .groupBy("src")
+        .groupBy(*by, "src")
         .agg(
-            F.min(F.when(loop, val).otherwise(val + step)).alias(col),
-            F.min(F.when(loop, val)).alias("own"),
+            agg(F.when(loop, val).otherwise(times(val))).alias(col),
+            agg(F.when(loop, val)).alias("own"),
         )
-        .select(
-            F.col("src").alias("id"),
-            col,
-            (F.col("own").isNull() | (F.col(col) < F.col("own"))).alias("active"),
-        )
+    )
+    better = F.col(col) < F.col("own") if plus == "min" else F.col(col) > F.col("own")
+    return out.select(
+        *by, F.col("src").alias("id"), col, (F.col("own").isNull() | better).alias("active")
     )
 
 
-def checkpoint_active(state: DataFrame) -> tuple[DataFrame, int]:
-    """``localCheckpoint`` a loop state carrying an ``active`` flag and
-    count its active rows in the same job."""
-    state, r = observed_checkpoint(
-        state, F.count(F.when(F.col("active"), 1)).alias("n")
-    )
-    return state, int(r["n"])
+#: Rounds per ``localCheckpoint`` chunk of every fixpoint loop: the
+#: unrolled chunk is one lazy plan (linear in its length, see
+#: :func:`semiring_round`), and the stop test reads the chunk's
+#: checkpoint job, so a short chunk pays more checkpoints and a long
+#: one overshoots a fixpoint by more rounds.
+CHUNK_ROUNDS = 4
+
+
+def fixpoint(round_fn, state: DataFrame, max_rounds: int, after_chunk=None) -> DataFrame:
+    """Run ``round_fn`` on ``state`` for at most ``max_rounds`` rounds,
+    in chunks of :data:`CHUNK_ROUNDS`: unroll a chunk, apply
+    ``after_chunk`` (e.g. CC's pointer jump), checkpoint and count the
+    active rows in one job, drop the chunk's input, and stop once a
+    chunk leaves no vertex active (a fixpoint: the rest of the rounds
+    would change nothing)."""
+    done = 0
+    while done < max_rounds:
+        k = min(CHUNK_ROUNDS, max_rounds - done)
+        chunk_start = state
+        for _ in range(k):
+            state = round_fn(state)
+        if after_chunk is not None:
+            state = after_chunk(state)
+        state, r = observed_checkpoint(state, F.count(F.when(F.col("active"), 1)).alias("n"))
+        chunk_start.unpersist()
+        done += k
+        if r["n"] == 0:
+            break
+    return state
 
 
 #: Last guard decision per kernel family — observability ONLY.  The

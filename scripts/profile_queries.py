@@ -4,14 +4,28 @@ Usage::
 
     python scripts/profile_queries.py [--json OUT] [sf_dir] query [query ...]
 
-Prints one line per query: name, wall seconds, row count.  Used to
-profile the heavier analytics (betweenness, community, core numbers)
-that bench.py does not time per-round, and — with ``--json`` — to
-record the quiet-host serial times of the sweep's heaviest queries
-(``SWEEP_TIMES_r{N}.json``), the trustworthy companion to the
+Prints one line per query: name, wall seconds, row count, and the
+Spark jobs and tasks the query ran (build plus a final ``count()``).
+Each query runs under its own job group; its jobs come from the status
+tracker, its tasks are the completed tasks of its stages, each stage
+counted once (a stage an earlier query ran shows up again as skipped).
+Used to profile the heavier analytics (betweenness, community, core
+numbers) that bench.py does not time per-round, and — with ``--json``
+— to record the quiet-host serial times of the sweep's heaviest
+queries (``SWEEP_TIMES_r{N}.json``), the trustworthy companion to the
 contention-noisy parallel sweep logs.  Run it on a QUIET host; each
 record carries the load average at measurement time so a reader can
 tell.
+
+To count the distributed side of the guarded kernels, patch the guard
+constants before the script runs (the same snippet as the forced
+oracle sweeps; the guards read them at call time)::
+
+    import runpy, sys; sys.path.insert(0, ".")
+    from graphdb_testing_spark.operators import util
+    util.LOCAL_NE_MAX = 0  # and/or util.BROADCAST_STATE_MAX_ROWS = 0
+    sys.argv = ["scripts/profile_queries.py", "<sf dir>", *queries]
+    runpy.run_path("scripts/profile_queries.py", run_name="__main__")
 """
 
 from __future__ import annotations
@@ -45,20 +59,32 @@ def main() -> int:
         app_name="graphdb-testing-spark-profile",
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    counted: set[int] = set()
     records = []
     for name in names:
+        sc.setJobGroup(f"profile-{name}", name)
         t0 = time.time()
         n = qs[name](spark, sf_dir).count()
         dt = time.time() - t0
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs = tracker.getJobIdsForGroup(f"profile-{name}")
+        stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds} - counted
+        counted |= stages
+        tasks = sum(tracker.getStageInfo(s).numCompletedTasks for s in stages)
         records.append(
             {
                 "query": name,
                 "spark_s": round(dt, 2),
                 "rows": n,
+                "jobs": len(jobs),
+                "tasks": tasks,
                 "load1": round(os.getloadavg()[0], 1),
             }
         )
-        print(f"{name}: {dt:.2f}s rows={n}", flush=True)
+        print(f"{name}: {dt:.2f}s rows={n} jobs={len(jobs)} tasks={tasks}", flush=True)
     if json_out:
         with open(json_out, "w") as f:
             json.dump(

@@ -115,7 +115,7 @@ def test_distributed_bfs_max_depth_mid_chunk(spark, multi_component_edges, monke
         for r in bfsmod.bfs(multi_component_edges, 600, max_depth=6).collect()
     }
     monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
-    slow = bfsmod.bfs(multi_component_edges, 600, max_depth=6, checkpoint_every=4)
+    slow = bfsmod.bfs(multi_component_edges, 600, max_depth=6)
     assert util.FAST_PATH_DECISIONS["bfs"] is False
     assert slow.schema.simpleString() == "struct<id:bigint,dist:int>"
     assert fast == {(r["id"], r["dist"]) for r in slow.collect()}
@@ -157,7 +157,7 @@ def test_shuffled_state_loops_match_single_task(spark, multi_component_edges, mo
     assert cc() == want_cc
     assert util.FAST_PATH_DECISIONS["components"] is False
     assert cc(pointer_jump=False) == want_cc
-    assert levels(600, max_depth=6, checkpoint_every=4) == want_bfs
+    assert levels(600, max_depth=6) == want_bfs
     assert util.FAST_PATH_DECISIONS["bfs"] is False
     assert levels(99999) == {(99999, 0)}
     assert levels(2**31 + 7) == {(2**31 + 7, 0)}

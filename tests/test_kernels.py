@@ -208,13 +208,15 @@ def test_broadcast_regime_round_has_no_exchange(spark, bridged_cliques):
     from pyspark.sql import functions as F
 
     from graphdb_testing_spark.operators.util import (
-        min_round,
         self_loop_relation,
+        semiring_round,
         vertex_ids,
     )
 
     ids, nv, key = vertex_ids(bridged_cliques)
-    rel = self_loop_relation(bridged_cliques, ids, key, bridged_cliques.count(), nv)
+    rel = self_loop_relation(
+        bridged_cliques.select("src", "dst"), ids, key, bridged_cliques.count(), nv
+    )
     assert rel.is_cached and key == "int"
     state = ids.select(
         F.col("id").cast(key).alias("id"),
@@ -222,7 +224,7 @@ def test_broadcast_regime_round_has_no_exchange(spark, bridged_cliques):
         F.lit(True).alias("active"),
     )
     for _ in range(3):  # vertex 7 is 3 hops from 0
-        state = min_round(rel, state, nv, "label", 0)
+        state = semiring_round(rel, state, nv, "label", lambda v: v + 0)
     plan = state._jdf.queryExecution().executedPlan().toString()
     assert "InMemoryTableScan" in plan and "BroadcastExchange" in plan, plan
     assert "ENSURE_REQUIREMENTS" not in plan, plan

@@ -41,12 +41,15 @@ def test_local_scc_matches_dataframe_path(spark, directed_edges, monkeypatch):
         for r in sccmod.strongly_connected_components(directed_edges).collect()
     }
     monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
-    slow = {
-        (r["id"], r["scc_id"])
-        for r in sccmod.strongly_connected_components(directed_edges).collect()
-    }
-    assert util.FAST_PATH_DECISIONS["strongly_connected_components"] is False
-    assert fast == slow
+    # the distributed loop with a broadcast and with a shuffled state
+    for bcast in (util.BROADCAST_STATE_MAX_ROWS, 0):
+        monkeypatch.setattr(util, "BROADCAST_STATE_MAX_ROWS", bcast)
+        slow = {
+            (r["id"], r["scc_id"])
+            for r in sccmod.strongly_connected_components(directed_edges).collect()
+        }
+        assert util.FAST_PATH_DECISIONS["strongly_connected_components"] is False
+        assert fast == slow
     # the three cycles + the 2-cycle are components; DAG tail singletons
     labels = {}
     for i, s in fast:
