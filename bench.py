@@ -205,10 +205,14 @@ def run_suite(spark, sf_dir: str) -> tuple[dict[str, float], dict[str, int]]:
     timings: dict[str, float] = {}
     meta: dict[str, int] = {}
 
+    guard_records: dict[str, list] = {}
+
     def timed(name: str, fn):
-        t0 = time.time()
-        out = fn()
-        timings[name] = round(time.time() - t0, 4)
+        with oputil.recording() as records:
+            t0 = time.time()
+            out = fn()
+            timings[name] = round(time.time() - t0, 4)
+        guard_records[name] = [list(r) for r in records]
         return out
 
     # build: derive + canonicalize + materialize the part-supplier graph
@@ -302,25 +306,17 @@ def run_suite(spark, sf_dir: str) -> tuple[dict[str, float], dict[str, int]]:
     timed("curation", _curation)
 
     # scaling legibility (round-10 verdict task 2): per-kernel guard
-    # state, additions-only.  true = the single-task fast-path guard
-    # fired (so the kernel is serial BY DESIGN at this SF and core
-    # count cannot move it); false = the guarded kernel took its
-    # distributed scale path; null = the kernel has no guarded
-    # single-task path at all.  The guard constants ride along so the
-    # driver can interpret the booleans without reading the code.
-    fast = oputil.FAST_PATH_DECISIONS
+    # state.  true = every single-task fast-path guard the kernel met
+    # fired (so it is serial BY DESIGN at this SF and core count cannot
+    # move it); false = a guarded call took its distributed scale path;
+    # null = the kernel met no guard.  ``guard_records`` lists each
+    # call's [family, size, fired]; the guard constants ride along so
+    # the driver can interpret them without reading the code.
     meta["fast_path"] = {
-        "build": None,
-        "sv": fast.get("components"),
-        "sssp": fast.get("bfs"),
-        "pr": fast.get("pagerank"),
-        "update": None,
-        "tri": fast.get("dense"),
-        "q1": None,
-        "dedup": None,
-        "asof": None,
-        "curation": None,
+        name: all(r[2] for r in recs) if recs else None
+        for name, recs in guard_records.items()
     }
+    meta["guard_records"] = guard_records
     meta["guards"] = {
         "LOCAL_NE_MAX": oputil.LOCAL_NE_MAX,
         "LOCAL_STATE_MAX": oputil.LOCAL_STATE_MAX,

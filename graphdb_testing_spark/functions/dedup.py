@@ -341,8 +341,10 @@ def dedup_retention(
     verify and connected-components stages materialized eagerly and
     their wall-times recorded under ``"lsh_verify_s"`` / ``"cc_s"`` —
     the manifest is unchanged, only the materialization boundaries
-    move (used by ``scripts/bench_retention_collapse.py`` to report
-    where a disk-resident run spends its time).
+    move (the disk-resident retention A/B of ``RETENTION_AB_r07.json``
+    used it to report where a run spends its time; its one-off driver
+    ``scripts/bench_retention_collapse.py`` is in commit ``67a05b5`` and
+    earlier).
     """
     from ..operators.components import connected_components
 

@@ -868,8 +868,8 @@ def ivf_kmeans_topk(
     This is IVF-Flat (Jégou et al., "Product Quantization for Nearest
     Neighbor Search", 2011): cells adapt to the data distribution, so
     at equal recall the candidate set is smaller than data-oblivious
-    sign buckets — the A/B ``scripts/bench_simsearch_scale.py``
-    measures both curves.
+    sign buckets — the A/B driver ``scripts/bench_simsearch_scale.py``
+    (commit ``67a05b5`` and earlier) measured both curves.
 
     Scale shape: training touches the corpus ``rounds + 1`` times with
     broadcast centroids (k·d integers) and ≤ k·d-group shuffles; the

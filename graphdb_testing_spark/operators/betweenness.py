@@ -11,16 +11,23 @@ simultaneously in one vertex-state DataFrame keyed by ``(root, id)``
 — each BFS level is a single join + aggregate for the whole root
 batch, so the job count is O(diameter), not O(roots × diameter).
 The backward sweep walks the stored level frontiers deep→shallow the
-same way.  Sampled roots ≈ the reference's approximation; exact BC =
-every vertex as root.
+same way.  Vertex and edge betweenness run one sweep
+(:func:`_brandes_sweep`, the distributed twin of
+:func:`_local_brandes`); edge mode only adds the canonical-pair
+aggregation of the backward terms.  A level costs one job forward
+(its checkpoint also counts its rows) plus the visited-set
+checkpoint, and one job backward.  Sampled roots ≈ the reference's
+approximation; exact BC = every vertex as root.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .util import iter_partitions, map_single_task, np_edges, single_task, state_hint
+from .util import counted, iter_partitions, map_single_task, np_edges, single_task, state_hint
 
 
 def _local_brandes(
@@ -135,6 +142,116 @@ def _local_brandes(
     return map_single_task(e, run, schema)
 
 
+def _brandes_sweep(
+    e: DataFrame, ne: int, roots: list[int], max_depth: int, edge_mode: bool
+) -> DataFrame:
+    """The distributed side of both Brandes kernels, mirroring
+    :func:`_local_brandes`: all roots advance in one ``(root, id)``
+    state, a forward BFS level (path counts ``sigma``) per job, then
+    the dependency sweep deepest level first, one job per level.  Each
+    level's row count comes from its checkpoint job.  ``edge_mode``
+    adds the canonical-pair aggregation of the per-edge terms."""
+    spark = e.sparkSession
+    # constant relation, re-read every level of both sweeps:
+    # right-size (~250k edge rows/task) and materialize once
+    e = e.coalesce(iter_partitions(ne)).localCheckpoint()
+    # per-root state is bounded by nv rows per root; checkpointed
+    # state carries no Catalyst stats, so hint sizes explicitly
+    nv = e.select("src").distinct().count()
+    est = nv * len(roots)
+
+    frontier = spark.createDataFrame(
+        [(int(r), int(r), 1.0) for r in roots],
+        "root long, id long, sigma double",
+    ).localCheckpoint()
+    levels = [frontier]
+    visited = frontier.select("root", "id").localCheckpoint()
+    for _ in range(max_depth):
+        nxt, n = counted(
+            e.join(state_hint(frontier, est), e.src == frontier.id)
+            .groupBy("root", F.col("dst").alias("id"))
+            .agg(F.sum("sigma").alias("sigma"))
+            .join(state_hint(visited, est), ["root", "id"], "left_anti")
+        )
+        if n == 0:
+            break
+        levels.append(nxt)
+        visited = visited.unionAll(nxt.select("root", "id")).localCheckpoint()
+        frontier = nxt
+
+    # backward dependency sweep, deepest level first: the DAG edge
+    # p → c of a root carries (σ_p/σ_c)(1 + δ_c), and δ_p sums them
+    child = levels[-1].withColumn("delta", F.lit(0.0))
+    deltas = [child.select("root", "id", "delta")]
+    edge_terms = []
+    for parents in reversed(levels[:-1]):
+        c = child.select(
+            F.col("root").alias("c_root"),
+            F.col("id").alias("c_id"),
+            F.col("sigma").alias("c_sigma"),
+            F.col("delta").alias("c_delta"),
+        )
+        terms = (
+            state_hint(parents, est)
+            .join(e, parents.id == e.src)
+            .join(
+                state_hint(c, est),
+                (F.col("dst") == F.col("c_id")) & (F.col("root") == F.col("c_root")),
+            )
+            .select(
+                "root",
+                "id",
+                "c_id",
+                ((F.col("sigma") / F.col("c_sigma")) * (1.0 + F.col("c_delta"))).alias("dep"),
+            )
+        )
+        if edge_mode:
+            # referenced twice (the pair sums and the vertex deltas):
+            # materialize, so the final aggregation does not redo the joins
+            terms = terms.localCheckpoint()
+            edge_terms.append(
+                terms.select(
+                    F.least("id", "c_id").alias("u"), F.greatest("id", "c_id").alias("v"), "dep"
+                )
+            )
+        contrib = terms.groupBy("root", "id").agg(F.sum("dep").alias("dep"))
+        child = (
+            parents.join(contrib, ["root", "id"], "left")
+            .select("root", "id", "sigma", F.coalesce("dep", F.lit(0.0)).alias("delta"))
+            .localCheckpoint()
+        )
+        deltas.append(child.select("root", "id", "delta"))
+
+    if edge_mode:
+        if not edge_terms:
+            return spark.createDataFrame([], "u long, v long, bc double")
+        return (
+            reduce(DataFrame.unionAll, edge_terms)
+            .groupBy("u", "v")
+            .agg(F.round(F.sum("dep"), 6).alias("bc"))
+        )
+    return (
+        reduce(DataFrame.unionAll, deltas)
+        .filter(F.col("id") != F.col("root"))  # Brandes: v != s
+        .groupBy("id")
+        .agg(F.round(F.sum("delta"), 6).alias("bc"))
+    )
+
+
+def _brandes(edges: DataFrame, roots: list[int], max_depth: int, edge_mode: bool) -> DataFrame:
+    """Both Brandes kernels behind their guard: :func:`_local_brandes`
+    when the |roots| × |E| state fits one task, else
+    :func:`_brandes_sweep`.  At sf0.1 each sweep level costs scheduling,
+    not compute (~2·diameter jobs), sigma is integer-exact and the
+    delta fold order is fixed — see :func:`_local_brandes`."""
+    e = edges.select("src", "dst")
+    ne = e.count()
+    family = "edge_betweenness" if edge_mode else "betweenness"
+    if single_task(family, ne, state_rows=len(roots) * ne):
+        return _local_brandes(e, roots, max_depth, edge_mode)
+    return _brandes_sweep(e, ne, roots, max_depth, edge_mode)
+
+
 def betweenness(
     edges: DataFrame,
     roots: list[int],
@@ -147,92 +264,7 @@ def betweenness(
     (the reference treats the symmetric edge relation as a directed
     graph both ways, as we do).
     """
-    spark = edges.sparkSession
-    e = edges.select("src", "dst")
-    # constant relation, re-read every level of both sweeps:
-    # right-size (~250k edge rows/task) and materialize once
-    ne = e.count()
-    if single_task("betweenness", ne, state_rows=len(roots) * ne):
-        # guarded single-task fast path (round-11): per-level cost at
-        # sf0.1 is scheduling for both sweeps (~2·diameter jobs);
-        # sigma is integer-exact and the delta fold order is fixed —
-        # see _local_brandes.  Cluster-scale graphs keep the
-        # all-roots-in-one-state DataFrame sweep below.
-        return _local_brandes(e, roots, max_depth, edge_mode=False)
-    e = e.coalesce(iter_partitions(ne)).localCheckpoint()
-    # per-root state is bounded by nv rows per root; checkpointed
-    # state carries no Catalyst stats, so hint sizes explicitly
-    nv = e.select("src").distinct().count()
-    est = nv * len(roots)
-
-    frontier = spark.createDataFrame(
-        [(int(r), int(r), 0, 1.0) for r in roots],
-        "root long, id long, dist int, sigma double",
-    ).localCheckpoint()
-    levels = [frontier]
-    visited = frontier.select("root", "id").localCheckpoint()
-    depth = 0
-    while depth < max_depth:
-        depth += 1
-        nxt = (
-            e.join(state_hint(frontier, est), e.src == frontier.id)
-            .groupBy("root", F.col("dst").alias("id"))
-            .agg(F.sum("sigma").alias("sigma"))
-            .join(state_hint(visited, est), ["root", "id"], "left_anti")
-            .withColumn("dist", F.lit(depth).cast("int"))
-            .select("root", "id", "dist", "sigma")
-            .localCheckpoint()
-        )
-        if nxt.count() == 0:
-            break
-        levels.append(nxt)
-        visited = visited.unionAll(nxt.select("root", "id")).localCheckpoint()
-        frontier = nxt
-
-    # backward dependency sweep, deepest level first
-    deltas: DataFrame | None = None  # rows (root, id, sigma, delta) at processed levels
-    child = levels[-1].withColumn("delta", F.lit(0.0))
-    acc = child.select("root", "id", "delta")
-    for lvl in range(len(levels) - 2, -1, -1):
-        parents = levels[lvl]
-        c = child.select(
-            F.col("root").alias("c_root"),
-            F.col("id").alias("c_id"),
-            F.col("sigma").alias("c_sigma"),
-            F.col("delta").alias("c_delta"),
-        )
-        contrib = (
-            state_hint(parents, est).join(e, parents.id == e.src)
-            .join(
-                state_hint(c, est),
-                (F.col("dst") == F.col("c_id")) & (F.col("root") == F.col("c_root")),
-            )
-            .groupBy("root", "id")
-            .agg(
-                F.sum(
-                    (F.col("sigma") / F.col("c_sigma")) * (F.lit(1.0) + F.col("c_delta"))
-                ).alias("dep")
-            )
-        )
-        child = (
-            parents.join(contrib, ["root", "id"], "left")
-            .select(
-                "root",
-                "id",
-                "dist",
-                "sigma",
-                F.coalesce("dep", F.lit(0.0)).alias("delta"),
-            )
-            .localCheckpoint()
-        )
-        acc = acc.unionAll(child.select("root", "id", "delta"))
-    deltas = acc
-
-    return (
-        deltas.filter(F.col("id") != F.col("root"))  # Brandes: v != s
-        .groupBy("id")
-        .agg(F.round(F.sum("delta"), 6).alias("bc"))
-    )
+    return _brandes(edges, roots, max_depth, edge_mode=False)
 
 
 def sample_roots(edges: DataFrame, n: int, seed: int = 1) -> list[int]:
@@ -260,91 +292,8 @@ def edge_betweenness(
     Girvan–Newman edge score).  Same all-roots-in-one-state design as
     :func:`betweenness`: per root, the contribution of DAG edge
     ``p → c`` is ``(σ_p/σ_c)(1 + δ_c)``; summing over roots and both
-    BFS orientations gives the undirected score.  Forward sweep is
-    identical; the backward sweep emits its per-edge terms *before*
-    the vertex aggregation instead of after, so the extra cost over
-    vertex BC is one canonical-pair aggregation."""
-    spark = edges.sparkSession
-    e = edges.select("src", "dst")
-    ne = e.count()
-    if single_task("edge_betweenness", ne, state_rows=len(roots) * ne):
-        # guarded single-task fast path (round-11) — see _local_brandes
-        return _local_brandes(e, roots, max_depth, edge_mode=True)
-    e = e.coalesce(iter_partitions(ne)).localCheckpoint()
-    nv = e.select("src").distinct().count()
-    est = nv * len(roots)
-
-    frontier = spark.createDataFrame(
-        [(int(r), int(r), 0, 1.0) for r in roots],
-        "root long, id long, dist int, sigma double",
-    ).localCheckpoint()
-    levels = [frontier]
-    visited = frontier.select("root", "id").localCheckpoint()
-    depth = 0
-    while depth < max_depth:
-        depth += 1
-        nxt = (
-            e.join(state_hint(frontier, est), e.src == frontier.id)
-            .groupBy("root", F.col("dst").alias("id"))
-            .agg(F.sum("sigma").alias("sigma"))
-            .join(state_hint(visited, est), ["root", "id"], "left_anti")
-            .withColumn("dist", F.lit(depth).cast("int"))
-            .select("root", "id", "dist", "sigma")
-            .localCheckpoint()
-        )
-        if nxt.count() == 0:
-            break
-        levels.append(nxt)
-        visited = visited.unionAll(nxt.select("root", "id")).localCheckpoint()
-        frontier = nxt
-
-    child = levels[-1].withColumn("delta", F.lit(0.0))
-    edge_acc: DataFrame | None = None
-    for lvl in range(len(levels) - 2, -1, -1):
-        parents = levels[lvl]
-        c = child.select(
-            F.col("root").alias("c_root"),
-            F.col("id").alias("c_id"),
-            F.col("sigma").alias("c_sigma"),
-            F.col("delta").alias("c_delta"),
-        )
-        terms = (
-            state_hint(parents, est)
-            .join(e, parents.id == e.src)
-            .join(
-                state_hint(c, est),
-                (F.col("dst") == F.col("c_id")) & (F.col("root") == F.col("c_root")),
-            )
-            .select(
-                "root",
-                "id",
-                F.col("c_id").alias("cid"),
-                (
-                    (F.col("sigma") / F.col("c_sigma"))
-                    * (F.lit(1.0) + F.col("c_delta"))
-                ).alias("dep"),
-            )
-            .localCheckpoint()
-        )
-        epart = terms.select(
-            F.least("id", "cid").alias("u"),
-            F.greatest("id", "cid").alias("v"),
-            "dep",
-        )
-        edge_acc = epart if edge_acc is None else edge_acc.unionAll(epart)
-        contrib = terms.groupBy("root", "id").agg(F.sum("dep").alias("dep"))
-        child = (
-            parents.join(contrib, ["root", "id"], "left")
-            .select(
-                "root",
-                "id",
-                "dist",
-                "sigma",
-                F.coalesce("dep", F.lit(0.0)).alias("delta"),
-            )
-            .localCheckpoint()
-        )
-
-    if edge_acc is None:
-        return spark.createDataFrame([], "u long, v long, bc double")
-    return edge_acc.groupBy("u", "v").agg(F.round(F.sum("dep"), 6).alias("bc"))
+    BFS orientations gives the undirected score.  Both kernels run
+    the same sweep; edge mode also sums each backward term under its
+    canonical pair, so the extra cost over vertex BC is one
+    canonical-pair aggregation."""
+    return _brandes(edges, roots, max_depth, edge_mode=True)

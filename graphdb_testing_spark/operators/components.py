@@ -82,11 +82,7 @@ def _local_components(e: DataFrame) -> DataFrame:
     return map_single_task(e, run, "id long, label long")
 
 
-def connected_components(
-    edges: DataFrame,
-    max_iter: int = 100,
-    pointer_jump: bool = True,
-) -> DataFrame:
+def connected_components(edges: DataFrame, pointer_jump: bool = True) -> DataFrame:
     """``(id, label)`` where ``label`` = min vertex id in the component.
 
     ``edges`` must be symmetric (every edge present in both
@@ -117,10 +113,9 @@ def connected_components(
         # guarded single-task fast path (round-10): the per-round cost
         # at sf0.1 is stage scheduling + AQE re-planning for tiny
         # shuffles, not compute.  The fixpoint is the same min-id
-        # labeling either way (max_iter is a safety valve both paths
-        # share only in the non-converged regime, which the 100-round
-        # default never reaches on a graph small enough for this
-        # guard).  Parity-tested in tests/test_components_local.py;
+        # labeling either way (the distributed loop's 100-round bound
+        # is a safety valve never reached on a graph small enough for
+        # this guard).  Parity-tested in tests/test_components_local.py;
         # cluster-scale graphs take the unrolled loop below.
         return _local_components(edges.select("src", "dst"))
     id_type = edges.schema["src"].dataType.simpleString()
@@ -134,7 +129,7 @@ def connected_components(
     labels = fixpoint(
         lambda st: semiring_round(rel, st, nv, "label", lambda v: v + 0),
         labels,
-        max_iter,
+        100,
         (lambda st: _pointer_jump(st.localCheckpoint(), nv)) if pointer_jump else None,
     )
     ids.unpersist()

@@ -75,7 +75,7 @@ def dense_ctx(edges: DataFrame, symmetric: bool = True) -> _DenseCtx | None:
         .distinct()
     )
     nv = verts.count()
-    record_fast_path("dense", not (nv == 0 or nv > DENSE_NV_MAX))
+    record_fast_path("dense", nv, not (nv == 0 or nv > DENSE_NV_MAX))
     if nv == 0 or nv > DENSE_NV_MAX:
         return None
     # driver-built index map over a guard-bounded collect (nv ≤ 4096)

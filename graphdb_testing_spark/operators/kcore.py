@@ -1,14 +1,22 @@
-"""k-core decomposition by iterative peeling.
+"""k-core decomposition: peeling and the neighborhood h-index.
 
 Reference semantics (SURVEY.md §2.5 A1, ``tests/stinger/src/alg/
 static_kcore.c:12-57``): a vertex is in the k-core if at least k of
 its neighbors are in the k-core; computed by repeatedly discarding
 vertices of degree < k restricted to the surviving set.
 
-Spark-first design: the surviving vertex set is a small DataFrame;
-each peel round is one semi-join + groupBy over the (cached,
-pre-partitioned) edge table.  Rounds are bounded in the fixed-round
-variant so the DuckDB oracle can unroll the identical computation.
+Spark-first design: both distributed kernels run in the one chunk loop
+of every fixpoint kernel
+(:func:`~graphdb_testing_spark.operators.util.fixpoint`) over the
+constant relation ``edges ∪ self-loops``
+(:func:`~graphdb_testing_spark.operators.util.self_loop_relation`),
+whose self-loop row carries a vertex's own state into its round — the
+state is referenced once per round, so a chunk of
+``util.CHUNK_ROUNDS`` rounds is one job, and the loop stops at the
+chunk that leaves no vertex active.  Every edge row counts toward the
+degree: a duplicated row twice, a real ``(u, u)`` edge toward u's own
+degree (its ``wgt`` is 1; the added self-loops carry a NULL ``wgt``),
+like the SQL oracles.  Ids that fit int32 run the loop on int keys.
 """
 
 from __future__ import annotations
@@ -16,7 +24,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .util import iter_partitions, map_single_task, np_edges, single_task, state_hint
+from .util import (
+    fixpoint,
+    map_single_task,
+    np_edges,
+    self_loop_relation,
+    single_task,
+    state_hint,
+    vertex_ids,
+)
 
 
 def _local_kcore_vertices(
@@ -53,14 +69,10 @@ def _local_kcore_vertices(
     return map_single_task(e, run, "id long")
 
 
-def _local_core_numbers(
-    e: DataFrame, max_rounds: int, unroll: int
-) -> DataFrame:
-    """Single-Arrow-task iterated neighborhood h-index with the SAME
-    chunked Σcore convergence schedule as the DataFrame loop (chunks
-    of ``unroll`` rounds, stop when Σcore is unchanged after a chunk
-    or at ``max_rounds``), so bounded-round variants match round for
-    round.  All-integer state."""
+def _local_core_numbers(e: DataFrame, max_rounds: int) -> DataFrame:
+    """Single-Arrow-task iterated neighborhood h-index: rounds until
+    one changes nothing or ``max_rounds`` — the output of the DataFrame
+    loop, whose every stop is a fixpoint too.  All-integer state."""
 
     def run(batches):
         import numpy as np
@@ -68,44 +80,40 @@ def _local_core_numbers(
 
         ids, si, di = np_edges(batches)
         core = np.bincount(si, minlength=ids.size).astype(np.int64)
-        prev_sum = int(core.sum())
-        done = 0
-        while done < max_rounds and ids.size:
-            k = min(unroll, max_rounds - done)
-            for _ in range(k):
-                # h-index per vertex of neighbor core values: sort
-                # edges by (vertex, -value); h = #positions with
-                # value >= 1-based rank (prefix property)
-                vals = core[di]
-                order = np.lexsort((-vals, si))
-                s_si = si[order]
-                s_val = vals[order]
-                starts = np.flatnonzero(
-                    np.r_[True, s_si[1:] != s_si[:-1]]
-                )
-                sizes = np.diff(np.r_[starts, s_si.size])
-                pos = (
-                    np.arange(s_si.size, dtype=np.int64)
-                    - np.repeat(starts, sizes)
-                    + 1
-                )
-                new_core = np.add.reduceat(
-                    (s_val >= pos).astype(np.int64), starts
-                )
-                stable = np.array_equal(new_core, core)
-                core = new_core
-                if stable:
-                    break  # fixpoint: remaining rounds are idempotent
-            new_sum = int(core.sum())
-            done += k
-            if stable or new_sum == prev_sum:
-                break
-            prev_sum = new_sum
-        yield pd.DataFrame(
-            {"id": ids, "core": core.astype(np.int32)}
-        )
+        for _ in range(max_rounds if ids.size else 0):
+            # h-index per vertex of neighbor core values: sort edges by
+            # (vertex, -value); h = #positions with value >= 1-based
+            # rank (prefix property)
+            vals = core[di]
+            order = np.lexsort((-vals, si))
+            s_si = si[order]
+            s_val = vals[order]
+            starts = np.flatnonzero(np.r_[True, s_si[1:] != s_si[:-1]])
+            sizes = np.diff(np.r_[starts, s_si.size])
+            pos = np.arange(s_si.size, dtype=np.int64) - np.repeat(starts, sizes) + 1
+            new_core = np.add.reduceat((s_val >= pos).astype(np.int64), starts)
+            if np.array_equal(new_core, core):
+                break  # fixpoint: remaining rounds are idempotent
+            core = new_core
+        yield pd.DataFrame({"id": ids, "core": core.astype(np.int32)})
 
     return map_single_task(e, run, "id long, core int")
+
+
+def _degree_relation(e: DataFrame, ne: int):
+    """``(rel, ids, nv, deg)`` of a distributed k-core loop: ``rel`` the
+    self-loop relation of ``e`` with ``wgt`` 1 on every edge row and
+    NULL on the added self-loops, ``ids`` its checkpointed vertex ids
+    (the caller unpersists both), and ``deg`` the lazy ``(id, deg)``
+    row count per vertex, keyed like ``rel``."""
+    ids, nv, key = vertex_ids(e)
+    rel = self_loop_relation(e.select("src", "dst", F.lit(1).alias("wgt")), ids, key, ne, nv)
+    if not rel.is_cached:
+        # shuffled-state layout is a lazy coalesce: materialize it once
+        # so a derived edge table is not re-derived every chunk
+        rel = rel.localCheckpoint()
+    deg = e.groupBy(F.col("src").cast(key).alias("id")).agg(F.count(F.lit(1)).alias("deg"))
+    return rel, ids, nv, deg
 
 
 def kcore_vertices(
@@ -116,6 +124,14 @@ def kcore_vertices(
     ``max_rounds=None`` peels to fixpoint; a fixed ``max_rounds``
     performs exactly that many peels (deterministic intermediate
     semantics, used by the unrolled SQL oracle).
+
+    The distributed loop peels semi-naively over the state ``(id, deg,
+    alive, active)``, ``active`` = peeled in the last round: a round
+    subtracts from ``deg`` the rows of active senders and keeps
+    ``alive`` while ``deg ≥ k``.  After round r, ``deg(v)`` counts the
+    neighbors alive after round r − 1 — the degree restricted to the
+    survivors that a full peel round recounts.  Every round that does
+    not end the peel removes a vertex, so ``nv`` rounds bound it.
     """
     e = edges.select("src", "dst")
     ne = e.count()
@@ -124,50 +140,38 @@ def kcore_vertices(
         # sf0.1 costs stage scheduling + a checkpoint, not compute;
         # identical round schedule, cluster-scale graphs peel below
         return _local_kcore_vertices(e, k, max_rounds)
-    active = e.select(F.col("src").alias("id")).distinct().localCheckpoint()
-    prev_n = active.count()
-    rounds = 0
-    while True:
-        if max_rounds is not None and rounds >= max_rounds:
-            break
-        # active is referenced TWICE per round — without lineage
-        # truncation the plan doubles every round (2^rounds nodes),
-        # so eager-checkpoint instead of persist
-        surviving = (
-            e.join(
-                state_hint(active.select(F.col("id").alias("src")), prev_n),
-                "src",
-                "left_semi",
+    rel, ids, nv, deg = _degree_relation(e, ne)
+
+    def peel(state: DataFrame) -> DataFrame:
+        loop = F.col("wgt").isNull()
+        out = (
+            rel.join(state_hint(state, nv), rel.dst == state.id)
+            .where(loop | F.col("active"))
+            .groupBy("src")
+            .agg(
+                F.sum(F.when(loop, F.col("deg")).otherwise(-F.col("wgt"))).alias("deg"),
+                F.max(F.when(loop, F.col("alive"))).alias("was"),
             )
-            .join(
-                state_hint(active.select(F.col("id").alias("dst")), prev_n),
-                "dst",
-                "left_semi",
-            )
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.count("*").alias("deg"))
-            .filter(F.col("deg") >= k)
-            .select("id")
-            .localCheckpoint()
         )
-        n = surviving.count()
-        active.unpersist()
-        active = surviving
-        rounds += 1
-        if max_rounds is None and n == prev_n:
-            break
-        if n == 0:
-            break
-        prev_n = n
-    return active
+        keep = F.col("was") & (F.col("deg") >= k)
+        return out.select(
+            F.col("src").alias("id"),
+            "deg",
+            keep.alias("alive"),
+            (F.col("was") & ~keep).alias("active"),
+        )
+
+    state = fixpoint(
+        peel,
+        deg.select("id", "deg", F.lit(True).alias("alive"), F.lit(False).alias("active")),
+        nv if max_rounds is None else max_rounds,
+    )
+    rel.unpersist()
+    ids.unpersist()
+    return state.where("alive").select(F.col("id").cast(edges.schema["src"].dataType).alias("id"))
 
 
-def core_numbers(
-    edges: DataFrame,
-    max_rounds: int = 100,
-    k_max: int | None = None,
-    unroll: int = 4,
-) -> DataFrame:
+def core_numbers(edges: DataFrame, max_rounds: int = 100) -> DataFrame:
     """``(id, core)`` — max k such that the vertex survives k-core
     peeling (the reference outputs the max-k labels plus per-k counts,
     ``static_kcore.c:12-57``).
@@ -179,67 +183,47 @@ def core_numbers(
     levels sequentially (a 100-core graph costs ~100 peel fixpoints
     the telescope way, ~10 rounds this way).
 
-    Spark-first design: with ``c0 = degree`` the iteration is already
-    pointwise non-increasing (the h-index is ≤ the neighbor count and
-    monotone in its inputs), so no ``least(old, new)`` merge-back
-    join is needed — a round is ONE broadcast join + histogram
-    aggregate + per-id window, referencing the state exactly once.
-    That keeps the lazy plan linear in depth, so ``unroll`` rounds
-    compose into a single checkpointed job, PageRank-style; the
-    Σcore convergence test runs once per chunk (conservative — extra
-    rounds past the fixpoint change nothing).  The h-index itself is
-    one shuffle: ``collect_list`` the neighbor values per vertex,
-    sort descending, and count positions with ``cs[i] ≥ i+1`` via a
-    JVM-side higher-order ``filter`` — no second window shuffle, and
-    the array is bounded by the max degree.  ``k_max`` is accepted
-    for API compatibility and ignored.
+    From ``c0 = degree`` the iteration is deterministic and never
+    increases a value (the h-index is ≤ the neighbor count and
+    monotone in its inputs), so a round that changes nothing is a
+    fixpoint and every stop — the chunk loop's and the single-task
+    loop's — returns the values after ``min(max_rounds, T)`` rounds,
+    T the fixpoint depth.  A distributed round gathers every row of the
+    relation per vertex: the neighbor values, and the own old value on
+    the self-loop row, so ``active`` (the core fell) needs no second
+    state reference.  The h-index is one aggregate: ``collect_list``
+    the neighbor values, sort descending, and count positions with
+    ``cs[i] ≥ i+1`` via a JVM-side higher-order ``filter``.
     """
     e = edges.select("src", "dst")
     ne = e.count()
     if single_task("core_numbers", ne):
         # guarded single-task fast path (round-10): the sf0.1 fixpoint
-        # is 25 h-index rounds of ~0.4s scheduling each; same chunked
-        # Σcore convergence schedule, exact integer state either way
-        return _local_core_numbers(e, max_rounds, unroll)
-    state = (
-        e.groupBy(F.col("src").alias("id"))
-        .agg(F.count("*").alias("core"))
-        .localCheckpoint()
-    )
-    nv = state.count()
-    # right-size and materialize the constant edge relation once —
-    # every round re-reads it (~250k edge rows per task)
-    e = e.coalesce(iter_partitions(ne)).localCheckpoint()
-    # cores only decrease, so Σcore strictly drops on any change — a
-    # single-table aggregate over the cached state replaces a
-    # join-based changed-flag test
-    prev_sum = state.agg(F.sum("core")).collect()[0][0]
-    done = 0
-    while done < max_rounds:
-        k = min(unroll, max_rounds - done)
-        old = state
-        for _ in range(k):
-            nbr = e.join(
-                state_hint(state.withColumnRenamed("id", "dst"), nv), "dst"
-            ).select(F.col("src").alias("id"), F.col("core").alias("c_nbr"))
-            # h-index per vertex: h = |{i : cs[i] >= i+1}| over the
-            # descending-sorted neighbor values (1-based i)
-            state = (
-                nbr.groupBy("id")
-                .agg(F.sort_array(F.collect_list("c_nbr"), asc=False).alias("cs"))
-                .select(
-                    "id",
-                    F.size(
-                        F.filter("cs", lambda c, i: c >= i + F.lit(1))
-                    ).cast("long").alias("core"),
-                )
+        # is 25 h-index rounds of ~0.4s scheduling each; exact integer
+        # state either way
+        return _local_core_numbers(e, max_rounds)
+    rel, ids, nv, deg = _degree_relation(e, ne)
+
+    def h_index(state: DataFrame) -> DataFrame:
+        loop = F.col("wgt").isNull()
+        out = (
+            rel.join(state_hint(state, nv), rel.dst == state.id)
+            .groupBy("src")
+            .agg(
+                F.sort_array(F.collect_list(F.when(~loop, F.col("core"))), asc=False).alias("cs"),
+                F.max(F.when(loop, F.col("core"))).alias("own"),
             )
-        state = state.localCheckpoint()  # one job: materialize k rounds
-        new_sum = state.agg(F.sum("core")).collect()[0][0]
-        old.unpersist()
-        done += k
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    e.unpersist()
-    return state.select("id", F.col("core").cast("int").alias("core"))
+        )
+        h = F.size(F.filter("cs", lambda c, i: c >= i + F.lit(1)))
+        return out.select(
+            F.col("src").alias("id"), h.alias("core"), (h < F.col("own")).alias("active")
+        )
+
+    state = fixpoint(
+        h_index,
+        deg.select("id", F.col("deg").cast("int").alias("core"), F.lit(True).alias("active")),
+        max_rounds,
+    )
+    rel.unpersist()
+    ids.unpersist()
+    return state.select(F.col("id").cast(edges.schema["src"].dataType).alias("id"), "core")

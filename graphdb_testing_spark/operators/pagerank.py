@@ -58,7 +58,7 @@ Spark-first design (the distributed loop)
   stage; above the threshold it is a uniform coalesce.  Per-round cost
   on small graphs is task scheduling, not compute, and the same sizing
   formula yields thousands of tasks at 100 TB.
-* ``unroll`` rounds compose into one lazy plan materialized by a
+* ``_UNROLL`` rounds compose into one lazy plan materialized by a
   single eager ``localCheckpoint`` (truncates lineage; driver job
   scheduling is the per-round floor, so fewer/bigger jobs win).
 * The L1 convergence delta is measured once per chunk against the
@@ -87,6 +87,11 @@ from .util import (
     vertex_summary,
 )
 
+#: Rounds per chunk of both loops (warm starts: at most 5).  One state
+#: broadcast per round; chunk cost is ~linear in it, so 10 mainly
+#: amortizes the delta checks.
+_UNROLL = 10
+
 
 def _local_pagerank(
     e: DataFrame,
@@ -94,7 +99,6 @@ def _local_pagerank(
     tol: float,
     max_iter: int,
     num_iter: int | None,
-    unroll: int,
     init_ranks: DataFrame | None,
     seeds: list[int] | None,
     weighted: bool,
@@ -136,10 +140,11 @@ def _local_pagerank(
                 F.col("pr").cast("double").alias("pr0"),
             )
         )
-        unroll = min(unroll, 5)
+        unroll = min(_UNROLL, 5)
         check_every = 1
     else:
         inp = e
+        unroll = _UNROLL
         check_every = 2
     has_init = init_ranks is not None
     total = num_iter if num_iter is not None else max_iter
@@ -224,7 +229,6 @@ def _pagerank(
     tol: float = 1e-8,
     max_iter: int = 100,
     num_iter: int | None = None,
-    unroll: int = 10,
     init_ranks: DataFrame | None = None,
     seeds: list[int] | None = None,
     weight_col: str | None = None,
@@ -255,7 +259,7 @@ def _pagerank(
         # the guard — every real cluster-scale graph — the unrolled
         # DataFrame loop below runs.
         return _local_pagerank(
-            e, damping, tol, max_iter, num_iter, unroll, init_ranks, seeds, weighted
+            e, damping, tol, max_iter, num_iter, init_ranks, seeds, weighted
         )
     # narrow-id loop (round-11, guide §2.3 "narrower types"): when ids,
     # seeds AND (unweighted) degrees fit int32 (checked in the job that
@@ -331,12 +335,13 @@ def _pagerank(
         )
         if r["bad"]:
             raise ValueError("init_ranks holds a NULL or NaN pr for a graph vertex")
-        unroll = min(unroll, 5)
+        unroll = min(_UNROLL, 5)
         check_every = 1
     else:
         state = deg.select(
             "id", (share(1.0 / n) / F.col("degree")).alias("prd"), "degree"
         )
+        unroll = _UNROLL
         check_every = 2
 
     total = num_iter if num_iter is not None else max_iter
@@ -423,8 +428,6 @@ def pagerank(
     tol: float = 1e-8,
     max_iter: int = 100,
     num_iter: int | None = None,
-    unroll: int = 10,  # one state broadcast per round; chunk
-    # cost is ~linear in unroll, so 10 mainly amortizes delta checks
     init_ranks: DataFrame | None = None,
 ) -> DataFrame:
     """``(id, pr)`` PageRank over a symmetric edge table.
@@ -446,7 +449,7 @@ def pagerank(
     vertex within a few rounds).
     """
     return _pagerank(
-        edges, "pagerank", damping, tol, max_iter, num_iter, unroll, init_ranks
+        edges, "pagerank", damping, tol, max_iter, num_iter, init_ranks
     )
 
 

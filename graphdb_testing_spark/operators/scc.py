@@ -45,10 +45,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .util import (
+    counted,
     fixpoint,
     map_single_task,
     np_edges,
-    observed_checkpoint,
     self_loop_relation,
     semiring_round,
     single_task,
@@ -136,18 +136,12 @@ def _local_scc(e: DataFrame, max_outer: int = 30) -> DataFrame:
     return map_single_task(e, run, "id long, scc_id long")
 
 
-def _counted(df: DataFrame) -> tuple[DataFrame, int]:
-    """``localCheckpoint`` ``df`` and count its rows in the same job."""
-    df, r = observed_checkpoint(df, F.count(F.lit(1)).alias("n"))
-    return df, int(r["n"])
-
-
 def _restrict(cur_edges: DataFrame, remaining: DataFrame, nrem: int) -> tuple[DataFrame, int]:
     """The edges of ``cur_edges`` with both ends in ``remaining``,
     checkpointed, and their count."""
     keep_s = remaining.select(F.col("id").alias("src"))
     keep_d = remaining.select(F.col("id").alias("dst"))
-    return _counted(
+    return counted(
         cur_edges.join(state_hint(keep_s, nrem), "src", "semi")
         .join(state_hint(keep_d, nrem), "dst", "semi")
         .select("src", "dst")
@@ -155,15 +149,15 @@ def _restrict(cur_edges: DataFrame, remaining: DataFrame, nrem: int) -> tuple[Da
 
 
 def _propagate_min(
-    rel_edges: DataFrame, ids: DataFrame, ne: int, nv: int, state: DataFrame, col: str, max_prop: int
+    rel_edges: DataFrame, ids: DataFrame, ne: int, nv: int, state: DataFrame, col: str
 ) -> DataFrame:
     """``state`` after min-label rounds (``semiring_round`` with ``+ 0``)
     over ``rel_edges`` (``src`` receives from ``dst``) plus a self-loop
-    per vertex of ``ids``, to the fixpoint or ``max_prop`` rounds."""
+    per vertex of ``ids``, to the fixpoint or 100 rounds."""
     key = ids.schema["id"].dataType.simpleString()
     rel = self_loop_relation(rel_edges, ids, key, ne, nv)
     state = fixpoint(
-        lambda st: semiring_round(rel, st, nv, col, lambda v: v + 0), state, max_prop
+        lambda st: semiring_round(rel, st, nv, col, lambda v: v + 0), state, 100
     )
     rel.unpersist()
     return state
@@ -172,8 +166,6 @@ def _propagate_min(
 def strongly_connected_components(
     edges: DataFrame,
     max_outer: int = 30,
-    max_prop: int = 100,
-    trim_rounds: int = 10,
 ) -> DataFrame:
     """``(id, scc_id)`` over a **directed** ``(src, dst)`` edge list;
     ``scc_id`` = min vertex id in the strongly connected component.
@@ -198,7 +190,7 @@ def strongly_connected_components(
     )
     key = "int" if narrow else id_type
     remaining = ids.select(F.col("id").cast(key).alias("id"))
-    cur_edges, ne = _counted(
+    cur_edges, ne = counted(
         edges.select(F.col("src").cast(key).alias("src"), F.col("dst").cast(key).alias("dst"))
         .distinct()
     )
@@ -208,12 +200,13 @@ def strongly_connected_components(
         if nrem == 0:
             break
 
-        # --- trim: no-in or no-out vertices are singleton SCCs
-        for _ in range(trim_rounds):
+        # --- trim (at most 10 rounds): no-in or no-out vertices are
+        # singleton SCCs
+        for _ in range(10):
             srcs = cur_edges.select(F.col("src").alias("id")).distinct()
             dsts = cur_edges.select(F.col("dst").alias("id")).distinct()
             both = srcs.join(state_hint(dsts, nrem), "id")
-            kept, nkept = _counted(remaining.join(state_hint(both, nrem), "id", "semi"))
+            kept, nkept = counted(remaining.join(state_hint(both, nrem), "id", "semi"))
             if nkept == nrem:
                 break
             pieces.append(
@@ -235,7 +228,6 @@ def strongly_connected_components(
             nrem,
             remaining.select("id", F.col("id").alias("color"), F.lit(True).alias("active")),
             "color",
-            max_prop,
         )
 
         # --- backward settle: from each color root against the edge
@@ -257,11 +249,10 @@ def strongly_connected_components(
                 "id", F.col("color").alias("scc_id"), F.lit(True).alias("active")
             ),
             "scc_id",
-            max_prop,
         ).select("id", "scc_id")
 
         pieces.append(settled)
-        remaining, nrem = _counted(
+        remaining, nrem = counted(
             remaining.join(state_hint(settled.select("id"), nrem), "id", "left_anti")
         )
         cur_edges, ne = _restrict(cur_edges, remaining, nrem)

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -50,6 +52,12 @@ def observed_checkpoint(df: DataFrame, *metrics) -> tuple[DataFrame, dict]:
     return df, obs.get
 
 
+def counted(df: DataFrame) -> tuple[DataFrame, int]:
+    """``localCheckpoint`` ``df`` and count its rows in the same job."""
+    df, r = observed_checkpoint(df, F.count(F.lit(1)).alias("n"))
+    return df, int(r["n"])
+
+
 def vertex_summary(
     df: DataFrame, *cols: str, also: tuple[int, ...] = ()
 ) -> tuple[DataFrame, int, bool]:
@@ -83,10 +91,10 @@ def vertex_summary(
 EDGE_ROWS_PER_PARTITION = 250_000
 
 
-def iter_partitions(ne: int, cap: int = 2048) -> int:
+def iter_partitions(ne: int) -> int:
     """Partition count for an ``ne``-row edge relation in an
-    iterative kernel: one task per ~250k edge rows."""
-    return max(1, min(cap, (ne + EDGE_ROWS_PER_PARTITION - 1) // EDGE_ROWS_PER_PARTITION))
+    iterative kernel: one task per ~250k edge rows, at most 2048."""
+    return max(1, min(2048, (ne + EDGE_ROWS_PER_PARTITION - 1) // EDGE_ROWS_PER_PARTITION))
 
 
 def round_layout(rel: DataFrame, ne: int, nv: int) -> DataFrame:
@@ -228,15 +236,6 @@ def fixpoint(round_fn, state: DataFrame, max_rounds: int, after_chunk=None) -> D
     return state
 
 
-#: Last guard decision per kernel family — observability ONLY.  The
-#: bench harness emits these in its JSON ``meta`` so the driver's
-#: CPU-scaling probe can tell "serial because a single-task fast-path
-#: guard fired (by design at this SF)" from "serial because broken"
-#: (round-10 verdict task 2: ``suspect_cpus_ignored`` fired on a bench
-#: where every heavy kernel was legitimately below-guard).  Never read
-#: by any query path; carries no data, only the branch taken.
-FAST_PATH_DECISIONS: dict[str, bool] = {}
-
 #: Edge-row bound of every single-task graph kernel (~16 B/row ⇒
 #: ≤128 MB in one task); past it the kernel's distributed DataFrame
 #: loop runs.  Compared only in :func:`single_task`.
@@ -247,9 +246,32 @@ LOCAL_NE_MAX = 8_000_000
 LOCAL_STATE_MAX = 64_000_000
 
 
-def record_fast_path(family: str, fired: bool) -> None:
-    """Record which side of a scale guard a kernel invocation took."""
-    FAST_PATH_DECISIONS[family] = fired
+#: The record lists of the open :func:`recording` blocks.
+_RECORDINGS: list[list[tuple]] = []
+
+
+@contextmanager
+def recording():
+    """Collect the guard decision of every kernel call made inside the
+    block: yields a list that each guard appends ``(family, size,
+    fired)`` to — ``size`` the edge rows the guard was given (vertices
+    for the ``dense`` family; None when the caller skipped its count),
+    ``fired`` True when the single-task path ran.
+    Observability only: no query path reads it, and outside a block
+    nothing is kept, so a long-lived process accumulates nothing."""
+    records: list[tuple] = []
+    _RECORDINGS.append(records)
+    try:
+        yield records
+    finally:
+        _RECORDINGS.remove(records)
+
+
+def record_fast_path(family: str, size: int | None, fired: bool) -> None:
+    """Record which side of a scale guard a kernel call took, in every
+    open :func:`recording` block."""
+    for records in _RECORDINGS:
+        records.append((family, size, fired))
 
 
 def single_task(
@@ -258,12 +280,13 @@ def single_task(
     """The scale guard of every single-task graph kernel: True when the
     caller's own condition ``eligible`` holds, its ``ne``-row edge table
     fits one task and its per-root state (``state_rows``, multi-root
-    kernels) fits :data:`LOCAL_STATE_MAX`.  Records the decision under
-    ``family``.  The bounds are read at call time, so patching this
-    module's constants moves every guard at once.  ``ne`` may be None
-    when ``eligible`` is False (the caller skips its count job)."""
+    kernels) fits :data:`LOCAL_STATE_MAX`.  Records the decision
+    (:func:`record_fast_path`) under ``family``.  The bounds are read
+    at call time, so patching this module's constants moves every
+    guard at once.  ``ne`` may be None when ``eligible`` is False (the
+    caller skips its count job)."""
     fired = eligible and ne <= LOCAL_NE_MAX and state_rows <= LOCAL_STATE_MAX
-    record_fast_path(family, fired)
+    record_fast_path(family, ne, fired)
     return fired
 
 

@@ -596,7 +596,9 @@ def q_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     fraction (≈ nprobe/n_cells of the corpus) replaces the n² cross
     join.  Cells adapt to the data where sign buckets can't; the
     recall-per-candidate A/B against ``ivf_ann_topk`` is
-    ``ivf_kmeans_recall`` + ``scripts/bench_simsearch_scale.py``."""
+    ``ivf_kmeans_recall`` (the disk-resident A/B driver
+    ``scripts/bench_simsearch_scale.py`` is in commit ``67a05b5`` and
+    earlier)."""
     emb = datasets.load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 100 == 0)
     out = simsearch.ivf_kmeans_topk(

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import pytest
 
+from graphdb_testing_spark.operators import util
 from graphdb_testing_spark.session import get_spark
 
 
@@ -20,6 +21,37 @@ def spark():
         extra_conf={"spark.driver.memory": "8g"},
     )
     yield s
+
+
+@pytest.fixture
+def fired():
+    """``fired(family)``: whether the latest guarded kernel call of
+    ``family`` in this test took its single-task path, read from a
+    ``util.recording()`` block open for the whole test."""
+    with util.recording() as records:
+        yield lambda family: [f for fam, _, f in records if fam == family][-1]
+
+
+@pytest.fixture
+def distributed(monkeypatch, fired):
+    """``distributed(family, run)``: ``run()`` on the distributed loop
+    of ``family`` with a broadcast state and with a shuffled one
+    (``BROADCAST_STATE_MAX_ROWS`` at its default and at 0); asserts
+    both answer alike and returns the answer.  The single-task guard
+    stays off for the rest of the test."""
+    bcast = util.BROADCAST_STATE_MAX_ROWS
+
+    def run_both(family, run):
+        monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
+        out = []
+        for rows in (bcast, 0):
+            monkeypatch.setattr(util, "BROADCAST_STATE_MAX_ROWS", rows)
+            out.append(run())
+            assert fired(family) is False
+        assert out[0] == out[1]
+        return out[0]
+
+    return run_both
 
 
 def edges_df(spark, pairs, weights=None):

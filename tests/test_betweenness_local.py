@@ -1,8 +1,9 @@
 """Parity tests for the guarded single-task Brandes fast path
 (round-11): the NumPy kernel must match the all-roots DataFrame sweep
 on the 6-dp-rounded output (the query's declared rounding) for vertex
-AND edge betweenness, on connected and multi-component fixtures,
-independent of input partitioning."""
+AND edge betweenness, on connected and multi-component fixtures, with
+a broadcast and with a shuffled sweep state, independent of input
+partitioning."""
 
 from __future__ import annotations
 
@@ -41,19 +42,15 @@ def _emap(df):
     return {(r["u"], r["v"]): r["bc"] for r in df.collect()}
 
 
-def test_vertex_bc_local_matches_dataframe_path(spark, sym_edges, monkeypatch):
+def test_vertex_bc_local_matches_dataframe_path(spark, sym_edges, distributed):
     fast = _vmap(bcmod.betweenness(sym_edges, ROOTS))
-    monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
-    slow = _vmap(bcmod.betweenness(sym_edges, ROOTS))
-    assert util.FAST_PATH_DECISIONS["betweenness"] is False
+    slow = distributed("betweenness", lambda: _vmap(bcmod.betweenness(sym_edges, ROOTS)))
     assert fast == slow
 
 
-def test_edge_bc_local_matches_dataframe_path(spark, sym_edges, monkeypatch):
+def test_edge_bc_local_matches_dataframe_path(spark, sym_edges, distributed):
     fast = _emap(bcmod.edge_betweenness(sym_edges, ROOTS))
-    monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
-    slow = _emap(bcmod.edge_betweenness(sym_edges, ROOTS))
-    assert util.FAST_PATH_DECISIONS["edge_betweenness"] is False
+    slow = distributed("edge_betweenness", lambda: _emap(bcmod.edge_betweenness(sym_edges, ROOTS)))
     assert fast == slow
 
 
@@ -63,10 +60,18 @@ def test_vertex_bc_deterministic_across_layouts(spark, sym_edges):
     assert a == b
 
 
-def test_root_absent_from_graph(spark, sym_edges, monkeypatch):
+def test_root_absent_from_graph(spark, sym_edges, monkeypatch, fired):
     roots = [0, 999_999]  # second root not a vertex
-    fast = _vmap(bcmod.betweenness(sym_edges, roots))
+
+    def both():
+        return (
+            _vmap(bcmod.betweenness(sym_edges, roots)),
+            _emap(bcmod.edge_betweenness(sym_edges, roots)),
+        )
+
+    fast = both()
     monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
-    slow = _vmap(bcmod.betweenness(sym_edges, roots))
-    assert util.FAST_PATH_DECISIONS["betweenness"] is False
+    slow = both()
+    assert fired("betweenness") is False
+    assert fired("edge_betweenness") is False
     assert fast == slow

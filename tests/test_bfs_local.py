@@ -45,20 +45,6 @@ def _rows(df):
     return {tuple(r) for r in df.collect()}
 
 
-def _distributed(monkeypatch, family, run):
-    """``run()`` on the distributed loop with a broadcast state and
-    with a shuffled one (``BROADCAST_STATE_MAX_ROWS`` at its default
-    and at 0); asserts both answer alike and returns the answer."""
-    monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
-    out = []
-    for bcast in (util.BROADCAST_STATE_MAX_ROWS, 0):
-        monkeypatch.setattr(util, "BROADCAST_STATE_MAX_ROWS", bcast)
-        out.append(run())
-        assert util.FAST_PATH_DECISIONS[family] is False
-    assert out[0] == out[1]
-    return out[0]
-
-
 def _bellman_ford(edges, source, rounds):
     """Plain-Python ``rounds`` relaxations from the round-start state,
     the schedule of the SQL oracle."""
@@ -75,10 +61,9 @@ def _bellman_ford(edges, source, rounds):
 @pytest.mark.parametrize(
     "source,rounds", [(0, 6), (0, 2), (205, 4), (99999, 3), (225, 6)]
 )
-def test_local_sssp_weighted_matches(spark, weighted_edges, monkeypatch, source, rounds):
+def test_local_sssp_weighted_matches(spark, weighted_edges, distributed, source, rounds):
     fast = _rows(bfsmod.sssp_weighted(weighted_edges, source, rounds=rounds))
-    slow = _distributed(
-        monkeypatch,
+    slow = distributed(
         "sssp_weighted",
         lambda: _rows(bfsmod.sssp_weighted(weighted_edges, source, rounds=rounds)),
     )
@@ -87,10 +72,9 @@ def test_local_sssp_weighted_matches(spark, weighted_edges, monkeypatch, source,
 
 
 @pytest.mark.parametrize("source,rounds", [(0, 6), (102, 3), (99999, 2)])
-def test_local_widest_path_matches(spark, weighted_edges, monkeypatch, source, rounds):
+def test_local_widest_path_matches(spark, weighted_edges, distributed, source, rounds):
     fast = _rows(bfsmod.widest_path(weighted_edges, source, rounds=rounds))
-    slow = _distributed(
-        monkeypatch,
+    slow = distributed(
         "widest_path",
         lambda: _rows(bfsmod.widest_path(weighted_edges, source, rounds=rounds)),
     )
@@ -100,11 +84,11 @@ def test_local_widest_path_matches(spark, weighted_edges, monkeypatch, source, r
 
 
 @pytest.mark.parametrize("source,rounds", [(0, 6), (0, 1), (205, 4), (99999, 2)])
-def test_local_two_shortest_matches(spark, weighted_edges, monkeypatch, source, rounds):
+def test_local_two_shortest_matches(spark, weighted_edges, monkeypatch, source, rounds, fired):
     fast = _rows(bfsmod.two_shortest(weighted_edges, source, rounds=rounds))
     monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
     slow = _rows(bfsmod.two_shortest(weighted_edges, source, rounds=rounds))
-    assert util.FAST_PATH_DECISIONS["two_shortest"] is False
+    assert fired("two_shortest") is False
     assert fast == slow
 
 
@@ -114,10 +98,9 @@ def test_local_two_shortest_matches(spark, weighted_edges, monkeypatch, source, 
     # loop must stay on long ids
     [([0, 102, 215], 32), ([0], 2), ([99999, 3], 8), ([0, 2**31 + 7], 8)],
 )
-def test_local_multi_source_bfs_matches(spark, weighted_edges, monkeypatch, roots, depth):
+def test_local_multi_source_bfs_matches(spark, weighted_edges, distributed, roots, depth):
     fast = _rows(bfsmod.multi_source_bfs(weighted_edges, roots, max_depth=depth))
-    slow = _distributed(
-        monkeypatch,
+    slow = distributed(
         "multi_source_bfs",
         lambda: _rows(bfsmod.multi_source_bfs(weighted_edges, roots, max_depth=depth)),
     )

@@ -36,7 +36,7 @@ def weighted_edges(spark):
 
 
 @pytest.mark.parametrize("levels", [1, 3, 10])
-def test_local_agglomeration_matches(spark, weighted_edges, monkeypatch, levels):
+def test_local_agglomeration_matches(spark, weighted_edges, monkeypatch, levels, fired):
     fast = {
         (r["id"], r["community"])
         for r in cmod.community_agglomeration(
@@ -50,7 +50,7 @@ def test_local_agglomeration_matches(spark, weighted_edges, monkeypatch, levels)
             weighted_edges, max_levels=levels, min_score_filter=False
         ).collect()
     }
-    assert util.FAST_PATH_DECISIONS["community_agglomeration"] is False
+    assert fired("community_agglomeration") is False
     assert fast == slow
     assert len(fast) == 80
 

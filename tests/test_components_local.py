@@ -31,7 +31,7 @@ def multi_component_edges(spark):
     return spark.createDataFrame(rows, "src long, dst long").localCheckpoint()
 
 
-def test_local_cc_matches_dataframe_path(spark, multi_component_edges, monkeypatch):
+def test_local_cc_matches_dataframe_path(spark, multi_component_edges, monkeypatch, fired):
     fast = {
         (r["id"], r["label"])
         for r in compmod.connected_components(multi_component_edges).collect()
@@ -41,7 +41,7 @@ def test_local_cc_matches_dataframe_path(spark, multi_component_edges, monkeypat
         (r["id"], r["label"])
         for r in compmod.connected_components(multi_component_edges).collect()
     }
-    assert util.FAST_PATH_DECISIONS["components"] is False
+    assert fired("components") is False
     assert fast == slow
     labels = {lab for _, lab in fast}
     assert labels == {0, 200, 400, 600}
@@ -52,7 +52,7 @@ def test_local_cc_empty(spark):
     assert compmod.connected_components(empty).count() == 0
 
 
-def test_local_bfs_matches_dataframe_path(spark, multi_component_edges, monkeypatch):
+def test_local_bfs_matches_dataframe_path(spark, multi_component_edges, monkeypatch, fired):
     fast = {
         (r["id"], r["dist"])
         for r in bfsmod.bfs(multi_component_edges, 600).collect()
@@ -62,14 +62,14 @@ def test_local_bfs_matches_dataframe_path(spark, multi_component_edges, monkeypa
         (r["id"], r["dist"])
         for r in bfsmod.bfs(multi_component_edges, 600).collect()
     }
-    assert util.FAST_PATH_DECISIONS["bfs"] is False
+    assert fired("bfs") is False
     assert fast == slow
     # chain end is 40 hops away; islands unreachable (absent)
     assert (640, 40) in fast
     assert len(fast) == 41
 
 
-def test_local_bfs_max_depth_and_missing_source(spark, multi_component_edges, monkeypatch):
+def test_local_bfs_max_depth_and_missing_source(spark, multi_component_edges, monkeypatch, fired):
     fast = {
         (r["id"], r["dist"])
         for r in bfsmod.bfs(multi_component_edges, 600, max_depth=3).collect()
@@ -79,7 +79,7 @@ def test_local_bfs_max_depth_and_missing_source(spark, multi_component_edges, mo
         (r["id"], r["dist"])
         for r in bfsmod.bfs(multi_component_edges, 600, max_depth=3).collect()
     }
-    assert util.FAST_PATH_DECISIONS["bfs"] is False
+    assert fired("bfs") is False
     assert fast == slow
     assert max(d for _, d in fast) == 3
     monkeypatch.undo()
@@ -87,11 +87,13 @@ def test_local_bfs_max_depth_and_missing_source(spark, multi_component_edges, mo
     for guard in (util.LOCAL_NE_MAX, 0):
         monkeypatch.setattr(util, "LOCAL_NE_MAX", guard)
         seed_only = bfsmod.bfs(multi_component_edges, 99999).collect()
-        assert util.FAST_PATH_DECISIONS["bfs"] is (guard > 0)
+        assert fired("bfs") is (guard > 0)
         assert [(r["id"], r["dist"]) for r in seed_only] == [(99999, 0)]
 
 
-def test_distributed_cc_without_jump_runs_many_chunks(spark, multi_component_edges, monkeypatch):
+def test_distributed_cc_without_jump_runs_many_chunks(
+    spark, multi_component_edges, monkeypatch, fired
+):
     """No pointer jump: the 40-hop chain needs ~40 semi-naive rounds,
     i.e. ten 4-round chunks, each ending with vertices still active."""
     fast = {
@@ -105,35 +107,35 @@ def test_distributed_cc_without_jump_runs_many_chunks(spark, multi_component_edg
             multi_component_edges, pointer_jump=False
         ).collect()
     }
-    assert util.FAST_PATH_DECISIONS["components"] is False
+    assert fired("components") is False
     assert fast == slow
 
 
-def test_distributed_bfs_max_depth_mid_chunk(spark, multi_component_edges, monkeypatch):
+def test_distributed_bfs_max_depth_mid_chunk(spark, multi_component_edges, monkeypatch, fired):
     fast = {
         (r["id"], r["dist"])
         for r in bfsmod.bfs(multi_component_edges, 600, max_depth=6).collect()
     }
     monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
     slow = bfsmod.bfs(multi_component_edges, 600, max_depth=6)
-    assert util.FAST_PATH_DECISIONS["bfs"] is False
+    assert fired("bfs") is False
     assert slow.schema.simpleString() == "struct<id:bigint,dist:int>"
     assert fast == {(r["id"], r["dist"]) for r in slow.collect()}
     assert len(fast) == 7 and (606, 6) in fast
 
 
-def test_distributed_bfs_source_past_int32(spark, multi_component_edges, monkeypatch):
+def test_distributed_bfs_source_past_int32(spark, multi_component_edges, monkeypatch, fired):
     """Every graph id fits int32 but the source does not: the loop must
     stay on long ids and answer like the single-task path."""
     source = 2**31 + 7
     fast = [(r["id"], r["dist"]) for r in bfsmod.bfs(multi_component_edges, source).collect()]
     monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
     slow = [(r["id"], r["dist"]) for r in bfsmod.bfs(multi_component_edges, source).collect()]
-    assert util.FAST_PATH_DECISIONS["bfs"] is False
+    assert fired("bfs") is False
     assert fast == slow == [(source, 0)]
 
 
-def test_shuffled_state_loops_match_single_task(spark, multi_component_edges, monkeypatch):
+def test_shuffled_state_loops_match_single_task(spark, multi_component_edges, monkeypatch, fired):
     """Forcing the broadcast threshold to 0 runs the one semi-naive
     loop of CC and of BFS with a shuffled state, which must answer like
     the single-task path: CC with and without pointer jumping (the
@@ -155,9 +157,25 @@ def test_shuffled_state_loops_match_single_task(spark, multi_component_edges, mo
     monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
     monkeypatch.setattr(util, "BROADCAST_STATE_MAX_ROWS", 0)
     assert cc() == want_cc
-    assert util.FAST_PATH_DECISIONS["components"] is False
+    assert fired("components") is False
     assert cc(pointer_jump=False) == want_cc
     assert levels(600, max_depth=6) == want_bfs
-    assert util.FAST_PATH_DECISIONS["bfs"] is False
+    assert fired("bfs") is False
     assert levels(99999) == {(99999, 0)}
     assert levels(2**31 + 7) == {(2**31 + 7, 0)}
+
+
+def test_guard_records_every_call(spark, multi_component_edges, monkeypatch):
+    """One kernel called at two sizes across the guard bound shows both
+    decisions, each with its edge count, in one ``recording()`` block;
+    outside a block no record is kept."""
+    chain = multi_component_edges.where(F.col("src") >= 600)
+    n_chain, n_all = chain.count(), multi_component_edges.count()
+    monkeypatch.setattr(util, "LOCAL_NE_MAX", n_chain)
+    with util.recording() as records:
+        compmod.connected_components(chain).collect()
+        compmod.connected_components(multi_component_edges).collect()
+    assert records == [("components", n_chain, True), ("components", n_all, False)]
+    compmod.connected_components(chain).collect()
+    assert records == [("components", n_chain, True), ("components", n_all, False)]
+    assert not util._RECORDINGS

@@ -157,7 +157,7 @@ def test_personalized_pagerank_unreachable_is_zero(spark, path_graph):
 
 @pytest.mark.parametrize("ne_max", [util.LOCAL_NE_MAX, 0])
 def test_weighted_pagerank_uniform_weights_match_unweighted(
-    spark, bridged_cliques, ne_max, monkeypatch
+    spark, bridged_cliques, ne_max, monkeypatch, fired
 ):
     """w ≡ 1 is plain PageRank on both sides of the guard: the
     single-task kernel and the shared distributed loop."""
@@ -166,7 +166,7 @@ def test_weighted_pagerank_uniform_weights_match_unweighted(
     monkeypatch.setattr(util, "LOCAL_NE_MAX", ne_max)
     pr_u = {r.id: r.pr for r in pagerank(bridged_cliques, num_iter=8).collect()}
     pr_w = {r.id: r.pr for r in weighted_pagerank(bridged_cliques, num_iter=8).collect()}
-    assert util.FAST_PATH_DECISIONS["weighted_pagerank"] is (ne_max > 0)
+    assert fired("weighted_pagerank") is (ne_max > 0)
     assert set(pr_u) == set(pr_w)
     for v in pr_u:
         assert abs(pr_u[v] - pr_w[v]) < 1e-12

@@ -32,24 +32,24 @@ def _r6(df):
 
 
 @pytest.mark.parametrize("num_iter", [3, 5, None])
-def test_local_matches_dataframe_path(spark, sym_edges, num_iter, monkeypatch):
+def test_local_matches_dataframe_path(spark, sym_edges, num_iter, monkeypatch, fired):
     fast = _r6(prmod.pagerank(sym_edges, num_iter=num_iter))
     monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
     slow = _r6(prmod.pagerank(sym_edges, num_iter=num_iter))
-    assert util.FAST_PATH_DECISIONS["pagerank"] is False
+    assert fired("pagerank") is False
     assert fast == slow
 
 
-def test_local_warm_start_matches(spark, sym_edges, monkeypatch):
+def test_local_warm_start_matches(spark, sym_edges, monkeypatch, fired):
     seed = prmod.pagerank(sym_edges, num_iter=4)
     fast = _r6(prmod.pagerank(sym_edges, init_ranks=seed, num_iter=3))
     monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
     slow = _r6(prmod.pagerank(sym_edges, init_ranks=seed, num_iter=3))
-    assert util.FAST_PATH_DECISIONS["pagerank"] is False
+    assert fired("pagerank") is False
     assert fast == slow
 
 
-def test_narrow_warm_start_joins_on_int_ids(spark, sym_edges, monkeypatch):
+def test_narrow_warm_start_joins_on_int_ids(spark, sym_edges, monkeypatch, fired):
     """On the narrow-id path the warm ranks join the int degree table on
     int keys: the join condition casts neither side's id."""
     seed = prmod.pagerank(sym_edges, num_iter=4)
@@ -65,7 +65,7 @@ def test_narrow_warm_start_joins_on_int_ids(spark, sym_edges, monkeypatch):
     monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
     monkeypatch.setattr(cls, "localCheckpoint", spy)
     out = prmod.pagerank(sym_edges, init_ranks=seed, num_iter=3)
-    assert util.FAST_PATH_DECISIONS["pagerank"] is False
+    assert fired("pagerank") is False
     assert out.schema["id"].dataType.simpleString() == "bigint"
     assert joins and not any("cast(" in l for l in joins), joins
     monkeypatch.undo()
@@ -74,7 +74,7 @@ def test_narrow_warm_start_joins_on_int_ids(spark, sym_edges, monkeypatch):
 
 
 @pytest.mark.parametrize("stale_id", [2**31 + 5, 2**32 + 5])
-def test_narrow_warm_start_skips_ids_past_int32(spark, sym_edges, stale_id, monkeypatch):
+def test_narrow_warm_start_skips_ids_past_int32(spark, sym_edges, stale_id, monkeypatch, fired):
     """A warm rank for an id past int32 (a vertex deleted since) matches
     no vertex of a narrow graph: the int cast must neither fail nor wrap
     it onto a real vertex (2**32 + 5 wraps to vertex 5)."""
@@ -83,7 +83,7 @@ def test_narrow_warm_start_skips_ids_past_int32(spark, sym_edges, stale_id, monk
     monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
     want = _r6(prmod.pagerank(sym_edges, init_ranks=seed, num_iter=3))
     assert _r6(prmod.pagerank(sym_edges, init_ranks=stale, num_iter=3)) == want
-    assert util.FAST_PATH_DECISIONS["pagerank"] is False
+    assert fired("pagerank") is False
 
 
 def test_local_is_deterministic_across_layouts(spark, sym_edges):
@@ -113,25 +113,25 @@ def sym_weighted_edges(spark):
 
 
 @pytest.mark.parametrize("num_iter", [1, 5])
-def test_local_weighted_matches(spark, sym_weighted_edges, monkeypatch, num_iter):
+def test_local_weighted_matches(spark, sym_weighted_edges, monkeypatch, num_iter, fired):
     fast = _r6(prmod.weighted_pagerank(sym_weighted_edges, num_iter=num_iter))
     monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
     slow = _r6(prmod.weighted_pagerank(sym_weighted_edges, num_iter=num_iter))
-    assert util.FAST_PATH_DECISIONS["weighted_pagerank"] is False
+    assert fired("weighted_pagerank") is False
     assert fast == slow
 
 
 @pytest.mark.parametrize(
     "seeds", [[0, 1, 2], [5], [0, 99999], [0, 2**32 + 5], []]
 )
-def test_local_personalized_matches(spark, sym_weighted_edges, monkeypatch, seeds):
+def test_local_personalized_matches(spark, sym_weighted_edges, monkeypatch, seeds, fired):
     """Seeds outside the graph take no reset mass; one past int32 must
     neither fail nor wrap onto vertex 5 on the narrow-id loop; no seeds
     rank every vertex 0."""
     fast = _r6(prmod.personalized_pagerank(sym_weighted_edges, seeds, num_iter=5))
     monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
     slow = _r6(prmod.personalized_pagerank(sym_weighted_edges, seeds, num_iter=5))
-    assert util.FAST_PATH_DECISIONS["personalized_pagerank"] is False
+    assert fired("personalized_pagerank") is False
     assert fast == slow
     assert seeds or set(fast.values()) == {0.0}
 
@@ -144,7 +144,7 @@ def test_local_weighted_deterministic_across_layouts(spark, sym_weighted_edges):
 
 
 @pytest.mark.parametrize("forced", [False, True])
-def test_warm_start_rejects_null_and_nan_ranks(spark, sym_edges, monkeypatch, forced):
+def test_warm_start_rejects_null_and_nan_ranks(spark, sym_edges, monkeypatch, forced, fired):
     """A warm rank row of a graph vertex with a NULL or NaN pr is
     rejected on both sides of the guard (the distributed loop would
     spread NaN to every vertex); such a row for an id outside the graph
@@ -163,6 +163,6 @@ def test_warm_start_rejects_null_and_nan_ranks(spark, sym_edges, monkeypatch, fo
             warm_run(good[1:] + [(good[0][0], bad)]).collect()
         # the driver raises ValueError; the single task raises it inside
         assert isinstance(err.value, ValueError) or f"ValueError: {msg}" in str(err.value)
-        assert util.FAST_PATH_DECISIONS["pagerank"] is not forced
+        assert fired("pagerank") is not forced
     stale = [(99999, float("nan")), (99998, None)]
     assert _r6(warm_run(good + stale)) == _r6(warm_run(good))

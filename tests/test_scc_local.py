@@ -11,7 +11,6 @@ import pytest
 
 from graphdb_testing_spark.operators import scc as sccmod
 from graphdb_testing_spark.operators import triangles as trimod
-from graphdb_testing_spark.operators import util
 
 
 @pytest.fixture(scope="module")
@@ -35,21 +34,15 @@ def directed_edges(spark):
     return spark.createDataFrame(rows, "src long, dst long").localCheckpoint()
 
 
-def test_local_scc_matches_dataframe_path(spark, directed_edges, monkeypatch):
-    fast = {
-        (r["id"], r["scc_id"])
-        for r in sccmod.strongly_connected_components(directed_edges).collect()
-    }
-    monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
-    # the distributed loop with a broadcast and with a shuffled state
-    for bcast in (util.BROADCAST_STATE_MAX_ROWS, 0):
-        monkeypatch.setattr(util, "BROADCAST_STATE_MAX_ROWS", bcast)
-        slow = {
+def test_local_scc_matches_dataframe_path(spark, directed_edges, distributed):
+    def run():
+        return {
             (r["id"], r["scc_id"])
             for r in sccmod.strongly_connected_components(directed_edges).collect()
         }
-        assert util.FAST_PATH_DECISIONS["strongly_connected_components"] is False
-        assert fast == slow
+
+    fast = run()
+    assert fast == distributed("strongly_connected_components", run)
     # the three cycles + the 2-cycle are components; DAG tail singletons
     labels = {}
     for i, s in fast:

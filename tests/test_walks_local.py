@@ -39,16 +39,16 @@ def _rows(df):
 
 
 @pytest.mark.parametrize("length,every", [(3, 50), (5, 25)])
-def test_local_random_walks_match(spark, walk_edges, monkeypatch, length, every):
+def test_local_random_walks_match(spark, walk_edges, monkeypatch, length, every, fired):
     fast = _rows(smod.random_walks(walk_edges, walk_length=length, start_every=every))
     monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
     slow = _rows(smod.random_walks(walk_edges, walk_length=length, start_every=every))
-    assert util.FAST_PATH_DECISIONS["random_walks"] is False
+    assert fired("random_walks") is False
     assert fast == slow
 
 
 @pytest.mark.parametrize("length,every", [(3, 50), (4, 30)])
-def test_local_weighted_walks_match(spark, walk_edges, monkeypatch, length, every):
+def test_local_weighted_walks_match(spark, walk_edges, monkeypatch, length, every, fired):
     fast = _rows(
         smod.weighted_random_walks(walk_edges, walk_length=length, start_every=every)
     )
@@ -56,12 +56,12 @@ def test_local_weighted_walks_match(spark, walk_edges, monkeypatch, length, ever
     slow = _rows(
         smod.weighted_random_walks(walk_edges, walk_length=length, start_every=every)
     )
-    assert util.FAST_PATH_DECISIONS["weighted_random_walks"] is False
+    assert fired("weighted_random_walks") is False
     assert fast == slow
 
 
 @pytest.mark.parametrize("length,every", [(3, 50), (5, 30)])
-def test_local_node2vec_walks_match(spark, walk_edges, monkeypatch, length, every):
+def test_local_node2vec_walks_match(spark, walk_edges, monkeypatch, length, every, fired):
     fast = _rows(
         smod.node2vec_walks(walk_edges, walk_length=length, start_every=every)
     )
@@ -69,5 +69,5 @@ def test_local_node2vec_walks_match(spark, walk_edges, monkeypatch, length, ever
     slow = _rows(
         smod.node2vec_walks(walk_edges, walk_length=length, start_every=every)
     )
-    assert util.FAST_PATH_DECISIONS["node2vec_walks"] is False
+    assert fired("node2vec_walks") is False
     assert fast == slow
