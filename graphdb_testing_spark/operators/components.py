@@ -8,8 +8,17 @@ number of distinct labels.  (Reference
 ``tests/sqlite/test.c:157-187``; BSP form
 ``tests/bagel/.../App.scala:208-220``.)
 
-Spark-first design
-------------------
+One semiring spec, two executors
+--------------------------------
+CC is the ``(min, + 0)`` semiring over the symmetric edges, seeded
+with ``label[v] = v`` and followed by a pointer jump.  Below the size
+guard (:func:`~graphdb_testing_spark.operators.util.single_task`) it
+runs in one task as the NumPy loop
+:func:`~graphdb_testing_spark.operators.util.np_fixpoint` on vertex
+positions, with the jump to closure after every round; above it, as
+the distributed rounds below.  Both are semi-naive and reach the same
+min-id labels.
+
 * One round = ``relation ⋈ labels`` on ``dst`` → ``groupBy(src).min``
   over the constant relation ``edges ∪ self-loops``; the self-loop row
   carries a vertex's own label, so the label state is referenced once
@@ -42,6 +51,7 @@ from .util import (
     fixpoint,
     map_single_task,
     np_edges,
+    np_fixpoint,
     self_loop_relation,
     semiring_round,
     single_task,
@@ -52,34 +62,34 @@ from .util import (
 
 def _local_components(e: DataFrame) -> DataFrame:
     """Single-Arrow-task min-label fixpoint over a bounded-size
-    symmetric edge table: NumPy min-scatter rounds + full pointer-jump
-    closure per round.  The fixpoint (label = component min id) is
-    structurally determined, so the output is bit-identical to the
-    DataFrame loop's — integer labels carry no float-order risk.
-    The edge table flows to the task through Spark; the driver never
-    holds edge data."""
+    symmetric edge table: the ``(min, + 0)`` rounds of
+    :func:`~graphdb_testing_spark.operators.util.np_fixpoint` on vertex
+    positions, with a full pointer-jump closure after each round.  The
+    fixpoint (label = component min id) is structurally determined, so
+    the output is bit-identical to the DataFrame loop's."""
 
     def run(batches):
         import numpy as np
         import pandas as pd
 
         ids, si, di = np_edges(batches)
-        lab = np.arange(ids.size, dtype=np.int64)
-        while True:
-            m = lab.copy()
-            np.minimum.at(m, si, lab[di])
-            np.minimum(m, lab, out=m)
-            while True:  # pointer-jump to closure
-                mm = m[m]
-                if np.array_equal(mm, m):
-                    break
-                m = mm
-            if np.array_equal(m, lab):
-                break
-            lab = m
+        lab = np_fixpoint(
+            si, di, np.arange(ids.size), lambda v, e: v, np.minimum, ids.size, after_round=_closure
+        )
         yield pd.DataFrame({"id": ids, "label": ids[lab]})
 
     return map_single_task(e, run, "id long, label long")
+
+
+def _closure(lab):
+    """Pointer-jump ``lab[v] := lab[lab[v]]`` to closure."""
+    import numpy as np
+
+    while True:
+        jumped = lab[lab]
+        if np.array_equal(jumped, lab):
+            return lab
+        lab = jumped
 
 
 def connected_components(edges: DataFrame, pointer_jump: bool = True) -> DataFrame:
@@ -110,13 +120,10 @@ def connected_components(edges: DataFrame, pointer_jump: bool = True) -> DataFra
     """
     ne = edges.count()
     if single_task("components", ne):
-        # guarded single-task fast path (round-10): the per-round cost
-        # at sf0.1 is stage scheduling + AQE re-planning for tiny
-        # shuffles, not compute.  The fixpoint is the same min-id
+        # single-task side: the per-round cost at sf0.1 is stage
+        # scheduling, not compute.  The fixpoint is the same min-id
         # labeling either way (the distributed loop's 100-round bound
-        # is a safety valve never reached on a graph small enough for
-        # this guard).  Parity-tested in tests/test_components_local.py;
-        # cluster-scale graphs take the unrolled loop below.
+        # is a safety valve never reached on a graph this small)
         return _local_components(edges.select("src", "dst"))
     id_type = edges.schema["src"].dataType.simpleString()
     ids, nv, key = vertex_ids(edges)

@@ -108,10 +108,6 @@ def _degree_relation(e: DataFrame, ne: int):
     row count per vertex, keyed like ``rel``."""
     ids, nv, key = vertex_ids(e)
     rel = self_loop_relation(e.select("src", "dst", F.lit(1).alias("wgt")), ids, key, ne, nv)
-    if not rel.is_cached:
-        # shuffled-state layout is a lazy coalesce: materialize it once
-        # so a derived edge table is not re-derived every chunk
-        rel = rel.localCheckpoint()
     deg = e.groupBy(F.col("src").cast(key).alias("id")).agg(F.count(F.lit(1)).alias("deg"))
     return rel, ids, nv, deg
 

@@ -55,9 +55,9 @@ Spark-first design (the distributed loop)
   ``iter_partitions(ne)`` tasks (~250k edge rows each): with a
   broadcast state it is hash-partitioned on ``src`` and persisted, so
   the ``groupBy(src)`` needs no exchange and a round is one narrow
-  stage; above the threshold it is a uniform coalesce.  Per-round cost
-  on small graphs is task scheduling, not compute, and the same sizing
-  formula yields thousands of tasks at 100 TB.
+  stage; above the threshold it is a coalesce, checkpointed once.
+  Per-round cost on small graphs is task scheduling, not compute, and
+  the same sizing formula yields thousands of tasks at 100 TB.
 * ``_UNROLL`` rounds compose into one lazy plan materialized by a
   single eager ``localCheckpoint`` (truncates lineage; driver job
   scheduling is the per-round floor, so fewer/bigger jobs win).
@@ -67,7 +67,8 @@ Spark-first design (the distributed loop)
   reference's epsilon rule).  The check is **folded into the chunk's
   last round**: the chunk-start state unions into that round's
   aggregation as zero-message rows carrying ``prd0``, so the delta is
-  a plain scan of the checkpointed output — no separate join job.
+  an observed sum in the chunk's checkpoint job — no separate join or
+  aggregate job.
 """
 
 from __future__ import annotations
@@ -301,8 +302,6 @@ def _pagerank(
     deg_b = state_hint(deg, nv)
 
     # constant relation: edges (+ weight) + wdeg-of-source
-    # (round_layout; a coalesce above the broadcast threshold is
-    # checkpointed once)
     e2 = round_layout(
         e.join(deg_b.withColumnRenamed("id", "src"), "src").select(
             "src", "dst", *e.columns[2:], F.col("degree").alias("deg_src")
@@ -310,8 +309,6 @@ def _pagerank(
         ne,
         nv,
     )
-    if not e2.is_cached:
-        e2 = e2.localCheckpoint()
     msg = F.col("prd") * F.col("wgt") if weighted else F.col("prd")
 
     # state: (id, prd, degree) with prd = pr / wdeg; degree rides
@@ -395,24 +392,25 @@ def _pagerank(
                     ).alias("prd"),
                     F.first("deg_src").alias("degree"),
                 )
-        state = state.localCheckpoint()  # one job: materialize k rounds
         done += k
         chunks += 1
         if checking:
-            # L1 delta in pr space: |pr - pr0| = |prd - prd0| * wdeg;
+            # L1 delta in pr space: |pr - pr0| = |prd - prd0| * wdeg,
+            # summed in the job that materializes the k rounds;
             # eps=1e-8 never fires in the first few dozen rounds, so
             # cold starts test every 2nd chunk (late stop is
             # conservative: extra rounds only tighten)
-            delta = state.agg(
-                F.sum(
-                    F.abs(F.col("prd") - F.col("prd0")) * F.col("degree")
-                ).alias("d")
-            ).collect()[0]["d"]
+            state, r = observed_checkpoint(
+                state,
+                F.sum(F.abs(F.col("prd") - F.col("prd0")) * F.col("degree")).alias("d"),
+            )
+            delta = r["d"]
             state = state.select("id", "prd", "degree")
             chunk_start.unpersist()
             if delta is not None and delta <= tol:
                 break
         else:
+            state = state.localCheckpoint()  # one job: materialize k rounds
             chunk_start.unpersist()
     out = state.select(
         F.col("id").cast(id_type).alias("id"),

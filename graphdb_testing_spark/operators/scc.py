@@ -8,8 +8,15 @@ The reference engine ships undirected components only
 completion of that kernel over the directed action/event relation a
 user of the reference would reach for next.
 
-Spark-first design
-------------------
+One semiring spec, two executors
+--------------------------------
+The forward coloring and the backward settle are both the
+``(min, + 0)`` semiring.  Below the size guard
+(:func:`operators.util.single_task`) the whole peel runs in one task
+and both propagations are :func:`operators.util.np_fixpoint`; above
+it they are :func:`operators.util.semiring_round` in
+:func:`operators.util.fixpoint`, as described below.
+
 * **Trim**: vertices with no in-edge or no out-edge inside the active
   subgraph are singleton SCCs; peeling them to (bounded) fixpoint is
   two semi-joins per round and removes the DAG tails that would
@@ -49,6 +56,7 @@ from .util import (
     fixpoint,
     map_single_task,
     np_edges,
+    np_fixpoint,
     self_loop_relation,
     semiring_round,
     single_task,
@@ -59,9 +67,9 @@ from .util import (
 
 def _local_scc(e: DataFrame, max_outer: int = 30) -> DataFrame:
     """Single-Arrow-task SCC over a bounded-size directed edge table:
-    trim + vectorized forward min-label fixpoint + backward settle
-    within each color class, peeling settled components per outer
-    round.
+    trim + forward min-label coloring + backward settle within each
+    color class (both :func:`operators.util.np_fixpoint`), peeling
+    settled components per outer round.
 
     The OUTPUT is algorithm-independent — ``scc_id(v) = min{u : u →* v
     ∧ v →* u}`` is a property of the graph, not of the peeling
@@ -85,6 +93,8 @@ def _local_scc(e: DataFrame, max_outer: int = 30) -> DataFrame:
         scc = np.full(n, -1, dtype=np.int64)
         alive = np.ones(n, dtype=bool)
         vidx = np.arange(n, dtype=np.int64)
+        top = np.iinfo(np.int64).max  # not yet colored / not settled
+        same = lambda v, e: v  # noqa: E731 - the (min, + 0) step
         outer = 0
         while alive.any():
             if outer >= max_outer:
@@ -112,23 +122,20 @@ def _local_scc(e: DataFrame, max_outer: int = 30) -> DataFrame:
                 break
             em = alive[si] & alive[di]
             es, ed = si[em], di[em]
-            # forward min-label fixpoint along edge direction
-            f = np.where(alive, vidx, np.iinfo(np.int64).max)
-            while True:
-                nf = f.copy()
-                np.minimum.at(nf, ed, f[es])
-                if np.array_equal(nf, f):
-                    break
-                f = nf
+            # forward coloring: min label along the edge direction
+            f = np_fixpoint(
+                ed, es, np.where(alive, vidx, top), same, np.minimum, n, active=alive
+            )
             # backward settle: v joins SCC(r) iff f[v] == r and v
-            # reaches r; the whole path shares the color, so reach
-            # within the class only
-            settled = alive & (f == vidx)
-            while True:
-                grow = settled[ed] & ~settled[es] & (f[es] == f[ed])
-                if not grow.any():
-                    break
-                settled[es[grow]] = True
+            # reaches r; the whole path shares the color, so the roots
+            # propagate against the edge direction within a class only
+            roots = alive & (f == vidx)
+            intra = f[es] == f[ed]
+            reach = np_fixpoint(
+                es[intra], ed[intra], np.where(roots, vidx, top), same, np.minimum, n,
+                active=roots,
+            )
+            settled = reach < top
             scc[settled] = f[settled]
             alive &= ~settled
         yield pd.DataFrame({"id": ids, "scc_id": ids[scc]})

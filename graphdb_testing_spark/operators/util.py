@@ -106,15 +106,15 @@ def round_layout(rel: DataFrame, ne: int, nv: int) -> DataFrame:
     (a localCheckpoint's LogicalRDD drops the partitioning, a cache
     keeps it), so the ``groupBy(src)`` needs no Exchange: a round is
     one narrow stage plus the state broadcast, one Spark job.  Above
-    the threshold the state shuffles anyway and the relation stays a
-    lazy ``coalesce`` to ~250k rows per task.  Callers ``unpersist()``
-    the result."""
+    the threshold the state shuffles anyway and the relation is
+    coalesced to ~250k rows per task and checkpointed.  Callers
+    ``unpersist()`` the result."""
     n = iter_partitions(ne)
     if not broadcasts(nv):
-        # lazy: rounds re-read the materialized inputs through a narrow
-        # union instead of paying an up-front second edge copy (measured
-        # 52.8 s -> 36.9 s for CC on a 16M-edge graph)
-        return rel.coalesce(n)
+        # materialized once: a lazy relation over a derived edge table
+        # (e.g. ``datasets.user_graph``) would re-derive it in every
+        # chunk job of the loop
+        return rel.coalesce(n).localCheckpoint()
     # ≥ 2 partitions: a one-partition repartition plans as
     # SinglePartition, which a cached scan reports as Unknown
     rel = rel.repartition(max(2, n), "src").persist()
@@ -306,7 +306,9 @@ def map_single_task(e: DataFrame, fn, schema: str) -> DataFrame:
     return e.localCheckpoint().coalesce(1).mapInPandas(fn, schema)
 
 
-def np_edges(batches, *cols: tuple[str, str], directed: bool = False) -> tuple:
+def np_edges(
+    batches, *cols: tuple[str, str], directed: bool = False, sources: tuple[int, ...] = ()
+) -> tuple:
     """Concatenate the pandas batches of an edge table into NumPy
     ``(ids, si, di, *extra)``: ``ids`` the sorted vertex ids, ``si`` /
     ``di`` the positions of each row's ``src`` / ``dst`` in ``ids``
@@ -316,7 +318,9 @@ def np_edges(batches, *cols: tuple[str, str], directed: bool = False) -> tuple:
     covers every vertex, so ``ids`` is the distinct ``src``.  A ``dst``
     outside it would make ``searchsorted`` scatter updates to the wrong
     vertex (or past the end), so it raises instead.  ``directed``
-    tables take ``ids`` from ``src ∪ dst`` with no check."""
+    tables take ``ids`` from ``src ∪ dst`` with no check.  ``sources``
+    (e.g. a BFS source without edges) join ``ids`` after the check, as
+    in :func:`self_loop_relation`."""
     import numpy as np
 
     names = ["src", "dst", *(c for c, _ in cols)]
@@ -330,7 +334,6 @@ def np_edges(batches, *cols: tuple[str, str], directed: bool = False) -> tuple:
         for part, t in zip(parts, types)
     )
     ids = np.unique(np.concatenate([src, dst]) if directed else src)
-    si = np.searchsorted(ids, src)
     di = np.searchsorted(ids, dst)
     if not directed and dst.size and not (
         (di < ids.size).all() and (ids[np.minimum(di, ids.size - 1)] == dst).all()
@@ -339,4 +342,39 @@ def np_edges(batches, *cols: tuple[str, str], directed: bool = False) -> tuple:
             "edge table is not symmetric: a dst vertex never appears as "
             "src — single-task graph kernels require the symmetrized relation"
         )
-    return (ids, si, di, *extra)
+    new = np.setdiff1d(np.asarray(sources, dtype=np.int64), ids)
+    if new.size:
+        ids = np.union1d(ids, new)
+        di = np.searchsorted(ids, dst)
+    return (ids, np.searchsorted(ids, src), di, *extra)
+
+
+def np_fixpoint(recv, send, x, times, plus, max_rounds, active=None, after_round=None):
+    """The NumPy twin of :func:`semiring_round` + :func:`fixpoint`:
+    rounds of ``x[recv] = plus(x[recv], times(x[send], e))`` over the
+    edge rows ``e`` whose sender is active, every round reading the
+    round-start ``x``, for at most ``max_rounds`` rounds or to the
+    fixpoint (a round that changes nothing).  ``plus`` is
+    ``np.minimum`` or ``np.maximum``; ``times(values, e)`` gets the
+    senders' values and the edge rows (an index array, or a full
+    slice while every vertex is active), so it can index an edge
+    weight.  ``active`` marks the first round's senders (None: all),
+    later rounds send from the vertices the previous round changed —
+    semi-naive, exact for a selective, idempotent ``plus``.
+    ``after_round`` maps each round's result (e.g. CC's pointer jump)
+    before the change test.  Returns the final ``x``."""
+    import numpy as np
+
+    for _ in range(max_rounds):
+        e = slice(None) if active is None else np.flatnonzero(active[send])
+        new = x.copy()
+        plus.at(new, recv[e], times(x[send[e]], e))
+        if after_round is not None:
+            new = after_round(new)
+        active = new != x
+        x = new
+        if not active.any():
+            break
+        if active.all():
+            active = None
+    return x

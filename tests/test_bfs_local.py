@@ -58,6 +58,20 @@ def _bellman_ford(edges, source, rounds):
     return set(dist.items())
 
 
+def _widest(edges, source, rounds, inf=1 << 60):
+    """Plain-Python ``rounds`` (max, min) relaxations from the
+    round-start state."""
+    cap = {source: inf}
+    for _ in range(rounds):
+        nxt = dict(cap)
+        for u, v, w in edges:
+            if u in cap:
+                c = min(cap[u], w)
+                nxt[v] = max(nxt.get(v, c), c)
+        cap = nxt
+    return set(cap.items())
+
+
 @pytest.mark.parametrize(
     "source,rounds", [(0, 6), (0, 2), (205, 4), (99999, 3), (225, 6)]
 )
@@ -79,6 +93,7 @@ def test_local_widest_path_matches(spark, weighted_edges, distributed, source, r
         lambda: _rows(bfsmod.widest_path(weighted_edges, source, rounds=rounds)),
     )
     assert fast == slow
+    assert fast == _widest(weighted_edges.collect(), source, rounds)
     if source == 99999:  # a source without edges keeps (source, inf)
         assert fast == {(99999, 1 << 60)}
 
