@@ -155,8 +155,9 @@ def _brandes_sweep(
     # constant relation, re-read every level of both sweeps:
     # right-size (~250k edge rows/task) and materialize once
     e = e.coalesce(iter_partitions(ne)).localCheckpoint()
-    # per-root state is bounded by nv rows per root; checkpointed
-    # state carries no Catalyst stats, so hint sizes explicitly
+    # per-root state is bounded by nv rows per root; a checkpointed
+    # state keeps its origin plan's size estimate (for a join, the
+    # product of its sides), so hint sizes explicitly
     nv = e.select("src").distinct().count()
     est = nv * len(roots)
 

@@ -39,8 +39,6 @@ forward.  Per-level sizes (``test.c:226-227``) come from
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -188,21 +186,15 @@ def _semiring_paths(
     ids, nv, key = vertex_ids(rel_edges, also=tuple(roots))
     ns = nv * len(roots) if rooted else nv
     rel = self_loop_relation(rel_edges, ids, key, ne, ns, sources=tuple(roots))
-    seeds = reduce(
-        DataFrame.unionAll,
-        [
-            spark.range(1).select(
-                *([F.lit(r).cast(key).alias("root")] if rooted else []),
-                F.lit(r).cast(key).alias("id"),
-                F.lit(init).cast(vtype).alias(col),
-                F.lit(True).alias("active"),
-            )
-            for r in roots
-        ],
+    keys = ("root", "id") if rooted else ("id",)
+    # seed rows as data: a literal id would fold into the first
+    # round's join condition, leaving it no equi-key (a nested-loop join)
+    seeds = spark.createDataFrame(
+        [(*([r] if rooted else []), r, init, True) for r in roots],
+        ", ".join([*(f"{k} {key}" for k in keys), f"{col} {vtype}", "active boolean"]),
     )
     by_edge = F.col("wgt") if weighted else F.lit(step)
     times = (lambda v: v + by_edge) if plus == "min" else (lambda v: F.least(v, by_edge))
-    keys = ("root", "id") if rooted else ("id",)
     state = fixpoint(
         lambda st: semiring_round(rel, st, ns, col, times, plus, keys), seeds, max_rounds
     )

@@ -137,7 +137,7 @@ def connected_components(edges: DataFrame, pointer_jump: bool = True) -> DataFra
         lambda st: semiring_round(rel, st, nv, "label", lambda v: v + 0),
         labels,
         100,
-        (lambda st: _pointer_jump(st.localCheckpoint(), nv)) if pointer_jump else None,
+        (lambda st, _: _pointer_jump(st.localCheckpoint(), nv)) if pointer_jump else None,
     )
     ids.unpersist()
     rel.unpersist()

@@ -50,7 +50,8 @@ def aggregate_messages(
     final aggregation.
 
     ``nv`` hints the vertex-state row count for join-strategy choice
-    (checkpointed state has no Catalyst stats): broadcast when small,
+    (a checkpointed state keeps its origin plan's size estimate, for a
+    join the product of its sides): broadcast when small,
     shuffle-hash otherwise — see :data:`util.BROADCAST_STATE_MAX_ROWS`.
 
     Scale shape: each vertex-attribute join is state-sized (O(nv)),

@@ -40,7 +40,7 @@ Spark-first design (the distributed loop)
   join + partially aggregated ``groupBy(src)`` that produces the next
   ``prd`` directly — no merge-back join against old state or the
   degree table.  One state reference per round ⇒ the unrolled lazy
-  plan grows **linearly** in the unroll factor.  The weight column and
+  plan grows **linearly** in the chunk length.  The weight column and
   its multiply are in the plan only for the weighted variant; the seed
   reset is a JVM ``isin`` on the aggregation key, not a join.
 * No left join is needed to re-instate message-less vertices: the
@@ -58,17 +58,18 @@ Spark-first design (the distributed loop)
   stage; above the threshold it is a coalesce, checkpointed once.
   Per-round cost on small graphs is task scheduling, not compute, and
   the same sizing formula yields thousands of tasks at 100 TB.
-* ``_UNROLL`` rounds compose into one lazy plan materialized by a
-  single eager ``localCheckpoint`` (truncates lineage; driver job
-  scheduling is the per-round floor, so fewer/bigger jobs win).
-* The L1 convergence delta is measured once per chunk against the
-  chunk's starting vector (k-round delta ≥ the reference's 1-round
-  delta, so stopping is conservative — never earlier than the
-  reference's epsilon rule).  The check is **folded into the chunk's
-  last round**: the chunk-start state unions into that round's
-  aggregation as zero-message rows carrying ``prd0``, so the delta is
-  an observed sum in the chunk's checkpoint job — no separate join or
-  aggregate job.
+* The rounds run in the one chunk loop of every fixpoint kernel,
+  :func:`~graphdb_testing_spark.operators.util.fixpoint`:
+  ``util.CHUNK_ROUNDS`` rounds compose into one lazy plan materialized
+  by a single eager ``localCheckpoint`` (truncates lineage).
+* Without ``num_iter`` the L1 convergence delta is tested at the end
+  of every chunk, cold or warm, against the chunk's starting vector
+  (k-round delta ≥ the reference's 1-round delta, so stopping is
+  conservative — never earlier than the reference's epsilon rule).
+  The loop's per-chunk hook puts the chunk-start ``prd0`` beside each
+  ``prd`` (:func:`_with_chunk_start`) and the delta is an observed sum
+  in the chunk's checkpoint job — no separate aggregate job.  With
+  ``num_iter`` there is no test: each chunk is only checkpointed.
 """
 
 from __future__ import annotations
@@ -77,8 +78,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .util import (
+    CHUNK_ROUNDS,
     INT32_MAX,
     INT32_MIN,
+    fixpoint,
     map_single_task,
     np_edges,
     observed_checkpoint,
@@ -87,11 +90,6 @@ from .util import (
     state_hint,
     vertex_summary,
 )
-
-#: Rounds per chunk of both loops (warm starts: at most 5).  One state
-#: broadcast per round; chunk cost is ~linear in it, so 10 mainly
-#: amortizes the delta checks.
-_UNROLL = 10
 
 
 def _local_pagerank(
@@ -106,15 +104,15 @@ def _local_pagerank(
 ) -> DataFrame:
     """Single-Arrow-task PageRank over a bounded-size symmetric edge
     table: NumPy gather + ``add.reduceat`` segment sums per round —
-    the same pre-divided-rank update, chunk schedule, and chunk-L1
-    convergence rule as the DataFrame loop, evaluated in one task, for
+    the same pre-divided-rank update and chunk-L1 convergence rule as
+    the DataFrame loop (tested every ``util.CHUNK_ROUNDS`` rounds
+    against the vector at the chunk start), evaluated in one task, for
     every variant (``seeds``: personalized reset; ``weighted``: ``e``
     carries ``wgt``).
 
     The edge table flows to the task through Spark (single-partition
     ``mapInPandas``); the driver never holds edge OR rank data.  Warm
-    starts (``init_ranks``) replicate the DataFrame path's shorter
-    unroll and every-chunk checking; the warm ranks ride into the task
+    starts (``init_ranks``) send their ranks into the task
     as extra rows on the edge relation, tagged by ``rank_row``, not as
     a driver collect (round-10 ADVICE: an nv-row ``collect()`` drove up
     to 8 M Python rows through the driver, a §5 regression vs the
@@ -141,17 +139,11 @@ def _local_pagerank(
                 F.col("pr").cast("double").alias("pr0"),
             )
         )
-        unroll = min(_UNROLL, 5)
-        check_every = 1
     else:
         inp = e
-        unroll = _UNROLL
-        check_every = 2
     has_init = init_ranks is not None
     total = num_iter if num_iter is not None else max_iter
     d = damping
-    tol_ = tol
-    chk = num_iter is None
 
     def run(batches):
         import numpy as np
@@ -201,23 +193,15 @@ def _local_pagerank(
             if np.isnan(pv[keep]).any():
                 raise ValueError("init_ranks holds a NULL or NaN pr for a graph vertex")
             pr0[np.searchsorted(ids, ip[keep])] = pv[keep]
-        prd = pr0 / deg
-        done = 0
-        chunks = 0
-        while done < total:
-            k = min(unroll, total - done)
-            checking = chk and (chunks + 1) % check_every == 0
-            prd0 = prd
-            for _ in range(k):
-                msg = prd[di] * w if weighted else prd[di]
-                msum = np.add.reduceat(msg, starts)
-                prd = (base + d * msum) / deg
-            done += k
-            chunks += 1
-            if checking:
-                delta = float(np.abs((prd - prd0) * deg).sum())
-                if delta <= tol_:
+        prd = prd0 = pr0 / deg
+        for i in range(1, total + 1):
+            msg = prd[di] * w if weighted else prd[di]
+            prd = (base + d * np.add.reduceat(msg, starts)) / deg
+            if i % CHUNK_ROUNDS == 0:
+                # the distributed side's stop test, at its chunk ends
+                if num_iter is None and np.abs((prd - prd0) * deg).sum() <= tol:
                     break
+                prd0 = prd
         yield pd.DataFrame({"id": ids, "pr": prd * deg})
 
     return map_single_task(inp, run, "id long, pr double")
@@ -253,11 +237,11 @@ def _pagerank(
         # latency-bound, not compute-bound.  A graph whose edge list
         # fits one task (≤ util.LOCAL_NE_MAX rows ≈ 128 MB) iterates with
         # NumPy segment sums inside one Arrow task instead: identical
-        # update formula, identical chunk/convergence schedule
+        # update formula, identical convergence test
         # (parity-tested to 6 dp oracle rounding in
         # tests/test_pagerank_local.py).  The guard runs BEFORE the
         # degree job — the fast path derives nv/degrees in-task.  Past
-        # the guard — every real cluster-scale graph — the unrolled
+        # the guard — every real cluster-scale graph — the chunked
         # DataFrame loop below runs.
         return _local_pagerank(
             e, damping, tol, max_iter, num_iter, init_ranks, seeds, weighted
@@ -332,92 +316,58 @@ def _pagerank(
         )
         if r["bad"]:
             raise ValueError("init_ranks holds a NULL or NaN pr for a graph vertex")
-        unroll = min(_UNROLL, 5)
-        check_every = 1
     else:
         state = deg.select(
             "id", (share(1.0 / n) / F.col("degree")).alias("prd"), "degree"
         )
-        unroll = _UNROLL
-        check_every = 2
 
-    total = num_iter if num_iter is not None else max_iter
-    done = 0
-    chunks = 0
-    while done < total:
-        k = min(unroll, total - done)
-        chunk_start = state
-        checking = num_iter is None and (chunks + 1) % check_every == 0
-        for i in range(k):
-            # broadcast the O(nv) state so the big edge side never
-            # moves; the groupBy emits the next prd directly (deg_src
-            # is constant per group, so first() is exact)
-            rnd = (
-                e2.join(state_hint(state, nv), e2.dst == state.id)
-                .select(F.col("src").alias("id"), msg.alias("m"), "deg_src")
+    def rnd(state: DataFrame) -> DataFrame:
+        # broadcast the O(nv) state so the big edge side never moves;
+        # the groupBy emits the next prd directly (deg_src is constant
+        # per group, so first() is exact)
+        return (
+            e2.join(state_hint(state, nv), e2.dst == state.id)
+            .select(F.col("src").alias("id"), msg.alias("m"), "deg_src")
+            .groupBy("id")
+            .agg(
+                ((base + F.lit(damping) * F.sum("m")) / F.first("deg_src")).alias("prd"),
+                F.first("deg_src").alias("degree"),
             )
-            if checking and i == k - 1:
-                # fold the convergence check into the chunk's last
-                # round (round-3 verdict item 7): union the
-                # CHECKPOINTED chunk-start state as zero-message self
-                # rows carrying prd0, so the materialized chunk output
-                # holds (prd, prd0) side by side and the L1 delta is a
-                # plain nv-row scan — the separate per-check
-                # state⋈chunk_start join job is gone.  +nv rows into a
-                # ne-row shuffle ≈ degree⁻¹ overhead, once per chunk.
-                rnd = rnd.unionByName(
-                    chunk_start.select(
-                        "id",
-                        F.lit(None).cast("double").alias("m"),
-                        F.lit(None).cast(
-                            e2.schema["deg_src"].dataType
-                        ).alias("deg_src"),
-                        F.col("prd").alias("prd0"),
-                    ),
-                    allowMissingColumns=True,
-                )
-                state = rnd.groupBy("id").agg(
-                    (
-                        (base + F.lit(damping) * F.sum("m"))
-                        / F.first("deg_src", ignorenulls=True)
-                    ).alias("prd"),
-                    F.first("deg_src", ignorenulls=True).alias("degree"),
-                    F.first("prd0", ignorenulls=True).alias("prd0"),
-                )
-            else:
-                state = rnd.groupBy("id").agg(
-                    (
-                        (base + F.lit(damping) * F.sum("m"))
-                        / F.first("deg_src")
-                    ).alias("prd"),
-                    F.first("deg_src").alias("degree"),
-                )
-        done += k
-        chunks += 1
-        if checking:
-            # L1 delta in pr space: |pr - pr0| = |prd - prd0| * wdeg,
-            # summed in the job that materializes the k rounds;
-            # eps=1e-8 never fires in the first few dozen rounds, so
-            # cold starts test every 2nd chunk (late stop is
-            # conservative: extra rounds only tighten)
-            state, r = observed_checkpoint(
-                state,
-                F.sum(F.abs(F.col("prd") - F.col("prd0")) * F.col("degree")).alias("d"),
-            )
-            delta = r["d"]
-            state = state.select("id", "prd", "degree")
-            chunk_start.unpersist()
-            if delta is not None and delta <= tol:
-                break
-        else:
-            state = state.localCheckpoint()  # one job: materialize k rounds
-            chunk_start.unpersist()
+        )
+
+    if num_iter is not None:
+        state = fixpoint(rnd, state, num_iter, stop=None)
+    else:
+        # L1 delta in pr space: |pr - pr0| = |prd - prd0| * wdeg,
+        # summed in the job that checkpoints the chunk
+        state = fixpoint(
+            rnd,
+            state,
+            max_iter,
+            _with_chunk_start,
+            F.sum(F.abs(F.col("prd") - F.col("prd0")) * F.col("degree")),
+            lambda delta: delta <= tol,
+        )
     out = state.select(
         F.col("id").cast(id_type).alias("id"),
         (F.col("prd") * F.col("degree")).alias("pr"),
     )
     e2.unpersist()
     return out
+
+
+def _with_chunk_start(state: DataFrame, start: DataFrame) -> DataFrame:
+    """``state`` with each vertex's chunk-start ``prd`` beside it as
+    ``prd0`` (:func:`~graphdb_testing_spark.operators.util.fixpoint`'s
+    per-chunk hook): a union and one max per id, not a join — Spark
+    sizes a join as the product of its sides, and a chunk start derived
+    from the previous one would square that estimate every chunk."""
+    start = start.select("id", F.col("prd").alias("prd0"))
+    return (
+        state.unionByName(start, allowMissingColumns=True)
+        .groupBy("id")
+        .agg(*(F.max(c).alias(c) for c in ("prd", "degree", "prd0")))
+    )
 
 
 def pagerank(
@@ -440,9 +390,9 @@ def pagerank(
     pr)`` result (vertices absent there start at ``1/nv``): the power
     iteration's fixpoint is unique, so the answer is identical — only
     the rounds-to-converge shrink, which is the incremental-update
-    path the streaming workflow uses after small edge batches.  Warm
-    starts check the delta every chunk (convergence is expected
-    early) with a shorter unroll.  A warm row of a graph vertex whose
+    path the streaming workflow uses after small edge batches.  Cold
+    and warm starts alike test the delta at the end of every
+    ``util.CHUNK_ROUNDS``-round chunk.  A warm row of a graph vertex whose
     ``pr`` is NULL or NaN raises ``ValueError`` (NaN would reach every
     vertex within a few rounds).
     """

@@ -22,8 +22,9 @@ BROADCAST_STATE_MAX_ROWS = 100_000
 
 def state_hint(df: DataFrame, nv: int | None) -> DataFrame:
     """Join-strategy hint for a vertex-state DataFrame: broadcast when
-    known-small, shuffled hash join otherwise (checkpointed state has
-    no Catalyst stats, so AQE cannot make this call on its own)."""
+    known-small, shuffled hash join otherwise (a checkpointed state
+    keeps the size estimate of the plan it came from — for a join, the
+    product of its sides — so AQE cannot make this call on its own)."""
     if nv is None:
         return df  # size unknown and stats available — AQE decides
     if broadcasts(nv):
@@ -213,13 +214,25 @@ def semiring_round(
 CHUNK_ROUNDS = 4
 
 
-def fixpoint(round_fn, state: DataFrame, max_rounds: int, after_chunk=None) -> DataFrame:
+def fixpoint(
+    round_fn,
+    state: DataFrame,
+    max_rounds: int,
+    after_chunk=None,
+    metric=None,
+    stop=lambda n: n == 0,
+) -> DataFrame:
     """Run ``round_fn`` on ``state`` for at most ``max_rounds`` rounds,
     in chunks of :data:`CHUNK_ROUNDS`: unroll a chunk, apply
-    ``after_chunk`` (e.g. CC's pointer jump), checkpoint and count the
-    active rows in one job, drop the chunk's input, and stop once a
-    chunk leaves no vertex active (a fixpoint: the rest of the rounds
-    would change nothing)."""
+    ``after_chunk(state, chunk_start)`` (CC's pointer jump; PageRank
+    pairs each rank with its chunk-start rank), checkpoint it while
+    observing the aggregate ``metric`` over its rows in the same job,
+    drop the chunk's input, and stop once ``stop(value)`` holds.  The
+    default test is "no row active" (the count of ``active`` rows is
+    0: a fixpoint, the rest of the rounds would change nothing);
+    ``stop=None`` runs all ``max_rounds`` rounds and only checkpoints."""
+    if metric is None:
+        metric = F.count(F.when(F.col("active"), 1))
     done = 0
     while done < max_rounds:
         k = min(CHUNK_ROUNDS, max_rounds - done)
@@ -227,11 +240,15 @@ def fixpoint(round_fn, state: DataFrame, max_rounds: int, after_chunk=None) -> D
         for _ in range(k):
             state = round_fn(state)
         if after_chunk is not None:
-            state = after_chunk(state)
-        state, r = observed_checkpoint(state, F.count(F.when(F.col("active"), 1)).alias("n"))
+            state = after_chunk(state, chunk_start)
+        if stop is None:
+            state, finished = state.localCheckpoint(), False
+        else:
+            state, r = observed_checkpoint(state, metric.alias("m"))
+            finished = stop(r["m"])
         chunk_start.unpersist()
         done += k
-        if r["n"] == 0:
+        if finished:
             break
     return state
 

@@ -199,6 +199,33 @@ def test_multi_source_bfs_matches_single_source(spark, path_graph):
         assert per_root == single, r
 
 
+def test_first_path_round_joins_on_an_equi_key(spark, path_graph, distributed, monkeypatch):
+    """The path kernels' seed rows are data, not literals: a literal
+    seed id folds into the first round's join condition, which then has
+    no equi-key and plans as a nested-loop join in both state regimes."""
+    from graphdb_testing_spark.operators import bfs as bfs_mod
+
+    real = bfs_mod.semiring_round
+    plans, firsts = [], []
+
+    def spy(*args, **kwargs):
+        out = real(*args, **kwargs)
+        plans.append(out._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    def run():
+        plans.clear()
+        rows = sorted(bfs_mod.bfs(path_graph, 0).collect())
+        firsts.append(plans[0])
+        return rows
+
+    monkeypatch.setattr(bfs_mod, "semiring_round", spy)
+    assert distributed("bfs", run) == [(v, v) for v in range(5)]
+    assert len(firsts) == 2
+    for plan in firsts:
+        assert "NestedLoopJoin" not in plan and "HashJoin" in plan, plan
+
+
 def test_broadcast_regime_round_has_no_exchange(spark, bridged_cliques):
     """With a broadcast state, the semi-naive round relation is
     hash-partitioned on ``src`` and persisted, so an unrolled chunk of

@@ -32,21 +32,29 @@ def _r6(df):
 
 
 @pytest.mark.parametrize("num_iter", [3, 5, None])
-def test_local_matches_dataframe_path(spark, sym_edges, num_iter, monkeypatch, fired):
+def test_local_matches_dataframe_path(spark, sym_edges, num_iter, distributed):
     fast = _r6(prmod.pagerank(sym_edges, num_iter=num_iter))
-    monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
-    slow = _r6(prmod.pagerank(sym_edges, num_iter=num_iter))
-    assert fired("pagerank") is False
+    slow = distributed("pagerank", lambda: _r6(prmod.pagerank(sym_edges, num_iter=num_iter)))
     assert fast == slow
 
 
-def test_local_warm_start_matches(spark, sym_edges, monkeypatch, fired):
+def test_local_warm_start_matches(spark, sym_edges, distributed):
     seed = prmod.pagerank(sym_edges, num_iter=4)
     fast = _r6(prmod.pagerank(sym_edges, init_ranks=seed, num_iter=3))
-    monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
-    slow = _r6(prmod.pagerank(sym_edges, init_ranks=seed, num_iter=3))
-    assert fired("pagerank") is False
+    slow = distributed(
+        "pagerank", lambda: _r6(prmod.pagerank(sym_edges, init_ranks=seed, num_iter=3))
+    )
     assert fast == slow
+
+
+def test_local_warm_start_to_convergence_matches(spark, sym_edges, distributed):
+    """A warm start with no ``num_iter`` stops on the chunk L1 test on
+    both sides of the guard, in both state regimes, at the same answer."""
+    seed = prmod.pagerank(sym_edges, num_iter=4)
+    fast = _r6(prmod.pagerank(sym_edges, init_ranks=seed))
+    slow = distributed("pagerank", lambda: _r6(prmod.pagerank(sym_edges, init_ranks=seed)))
+    assert fast == slow
+    assert fast == _r6(prmod.pagerank(sym_edges))
 
 
 def test_narrow_warm_start_joins_on_int_ids(spark, sym_edges, monkeypatch, fired):
