@@ -92,7 +92,7 @@ def _closure(lab):
         lab = jumped
 
 
-def connected_components(edges: DataFrame, pointer_jump: bool = True) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """``(id, label)`` where ``label`` = min vertex id in the component.
 
     ``edges`` must be symmetric (every edge present in both
@@ -137,7 +137,7 @@ def connected_components(edges: DataFrame, pointer_jump: bool = True) -> DataFra
         lambda st: semiring_round(rel, st, nv, "label", lambda v: v + 0),
         labels,
         100,
-        (lambda st, _: _pointer_jump(st.localCheckpoint(), nv)) if pointer_jump else None,
+        lambda st, _: _pointer_jump(st.localCheckpoint(), nv),
     )
     ids.unpersist()
     rel.unpersist()

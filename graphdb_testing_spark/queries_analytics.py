@@ -2345,9 +2345,15 @@ def q_scc_condensation(spark: SparkSession, sf_dir: str) -> DataFrame:
     by bounded longest-path relaxation over the (acyclic by
     construction) contracted edge set; contraction is two label joins
     + distinct."""
-    from .operators.scc import strongly_connected_components
-
     from .hashutil import hash_mod
+    from .operators.scc import strongly_connected_components
+    from .operators.util import (
+        counted,
+        fixpoint,
+        self_loop_relation,
+        semiring_round,
+        vertex_summary,
+    )
 
     # keep 1/16 of the oriented edges: the full orientation is one
     # giant SCC; the thinned graph has a real multi-SCC condensation
@@ -2360,32 +2366,31 @@ def q_scc_condensation(spark: SparkSession, sf_dir: str) -> DataFrame:
     sccs = strongly_connected_components(dedges).localCheckpoint()
     sa = sccs.select(F.col("id").alias("src"), F.col("scc_id").alias("a"))
     sb = sccs.select(F.col("id").alias("dst"), F.col("scc_id").alias("b"))
-    cedges = (
+    cedges, ne = counted(
         dedges.join(sa, "src")
         .join(sb, "dst")
         .filter(F.col("a") != F.col("b"))
         .select("a", "b")
         .distinct()
-        .localCheckpoint()
     )
-    # longest-path levels: relax to fixpoint (DAG depth ≤ #SCCs)
-    lvl = sccs.select("scc_id").distinct().withColumn("lvl", F.lit(0)).localCheckpoint()
-    for _ in range(64):
-        relaxed = (
-            cedges.join(lvl.withColumnRenamed("scc_id", "a"), "a")
-            .select(F.col("b").alias("scc_id"), (F.col("lvl") + 1).alias("lvl"))
-            .unionAll(lvl)
-            .groupBy("scc_id")
-            .agg(F.max("lvl").alias("lvl"))
-            .localCheckpoint()
-        )
-        if (
-            relaxed.agg(F.sum("lvl")).collect()[0][0]
-            == lvl.agg(F.sum("lvl")).collect()[0][0]
-        ):
-            lvl = relaxed
-            break
-        lvl = relaxed
+    # longest-path levels: the (max, + 1) semiring over the contracted
+    # DAG (b receives from a), every SCC seeded at level 0, to the
+    # fixpoint (a DAG's depth is below its SCC count) or 64 rounds
+    ids, nv, _ = vertex_summary(sccs.select(F.col("scc_id").alias("id")).distinct())
+    rel = self_loop_relation(
+        cedges.select(F.col("b").alias("src"), F.col("a").alias("dst")),
+        ids,
+        ids.schema["id"].dataType.simpleString(),
+        ne,
+        nv,
+    )
+    state = fixpoint(
+        lambda st: semiring_round(rel, st, nv, "lvl", lambda v: v + 1, "max"),
+        ids.select("id", F.lit(0).alias("lvl"), F.lit(True).alias("active")),
+        64,
+    )
+    rel.unpersist()
+    lvl = state.select(F.col("id").alias("scc_id"), "lvl")
     sizes = sccs.groupBy("scc_id").agg(
         F.countDistinct("id").cast("long").alias("scc_size")
     )

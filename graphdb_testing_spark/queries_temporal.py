@@ -801,7 +801,6 @@ def q_earliest_arrival_6round(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint()
     st = spark_st
     for _ in range(6):
-        n_st = st.count()
         relaxed = (
             tinter.join(
                 st.select(F.col("id").alias("src"), "arr"), "src"

@@ -15,9 +15,12 @@ share one code path, which is the point of the design.
 
 Incremental algorithms (A4 triangles / A7 components): Spark state is
 immutable DataFrames, so the honest mapping is recompute-per-batch
-(SURVEY.md §2.5 A7 note); ``IncrementalComponents`` adds the
-insert-only fast path (new edges can only merge components — one
-min-label join pass over the delta instead of a full fixpoint).
+(SURVEY.md §2.5 A7 note); ``IncrementalComponents`` re-solves only
+what a batch can change.  A batch of inserts that all carry a positive
+weight can only merge components: the CC kernel runs on the batch's
+O(|batch|) representative label pairs (:func:`_merge_components`).
+Any other batch (a delete, or an insert of weight ≤ 0, which lowers or
+removes an edge) re-solves the components of its endpoints.
 """
 
 from __future__ import annotations
@@ -53,13 +56,15 @@ class BatchAlg:
 class IncrementalComponents(BatchAlg):
     """A7: streaming connected components.
 
-    Insert-only batches take the fast path — new edges joined to the
-    current labels, one min-propagation round merges the touched
-    components (plus pointer jumps to fixpoint only over the affected
-    label set).  Batches containing deletions take the
-    component-local repair path (:meth:`_repair_after_deletes`): only
-    the components containing batch endpoints are re-solved, the
-    Spark analog of the reference's spanning-forest repair
+    A batch whose actions are all inserts of weight > 0 only adds
+    edges, so it can only merge components: new endpoints enter as
+    ``id → id`` and :func:`_merge_components` runs the CC kernel on
+    the batch's representative label pairs.  Every other batch — any
+    delete, or any insert of weight ≤ 0, which ``apply_actions`` may
+    turn into a lowered or dropped edge — takes the component-local
+    repair path (:meth:`_repair_after_deletes`): only the components
+    containing batch endpoints are re-solved, the Spark analog of the
+    reference's spanning-forest repair
     (``src/alg/streaming_components.c:119-190``).
     """
 
@@ -73,13 +78,14 @@ class IncrementalComponents(BatchAlg):
         store.publish(self.name, self.labels)
 
     def _repair_after_deletes(self, edges: DataFrame, batch: DataFrame) -> DataFrame:
-        """Component-local repair for batches containing deletions.
+        """Component-local repair for batches that may remove edges.
 
         Reference (``tests/stinger/src/alg/streaming_components.c:119-190``)
         repairs only the component that lost an edge; everything else
-        keeps its label.  Spark mapping: deletes can only *split* the
-        components containing the deleted edges, and inserts can only
-        *merge* components containing batch endpoints — so every label
+        keeps its label.  Spark mapping: removing an edge (a delete, or
+        an insert whose weight brings it to ≤ 0) can only *split* the
+        components containing it, and adding one can only *merge*
+        components containing batch endpoints — so every label
         that can change belongs to a batch endpoint's old component.
         We therefore (1) collect the O(|batch|) set of affected old
         labels, (2) broadcast-semi-join the edge table down to edges
@@ -139,136 +145,54 @@ class IncrementalComponents(BatchAlg):
         return keep.unionByName(sub_labels).localCheckpoint()
 
     def after_batch(self, edges: DataFrame, batch: DataFrame, store: NamedResultStore) -> None:
-        has_delete = batch.filter(F.col("src") < 0).limit(1).count() > 0
+        # only an insert of positive weight is sure to leave an edge
+        # behind; anything else (a delete, an insert of weight <= 0
+        # that lowers or removes an edge) can split a component
+        repair = ~F.coalesce((F.col("src") >= 0) & (F.col("weight") > 0), F.lit(False))
         if self.labels is None:
             self.labels = connected_components(edges)
-        elif has_delete:
+        elif batch.filter(repair).limit(1).count() > 0:
             self.labels = self._repair_after_deletes(edges, batch)
         else:
-            # insert-only: union-merge via repeated min-label over the
-            # (small) delta edge set until stable
-            delta = batch.select(
-                F.col("src").alias("u"), F.col("dst").alias("v")
+            pairs = batch.select(F.col("src").alias("u"), F.col("dst").alias("v")).filter(
+                F.col("u") != F.col("v")
             )
-            delta = delta.unionAll(
-                delta.select(F.col("v").alias("u"), F.col("u").alias("v"))
-            ).filter(F.col("u") != F.col("v"))
-            labels = self.labels
             new_ids = (
-                delta.select(F.col("u").alias("id"))
+                pairs.select(F.col("u").alias("id"))
+                .unionAll(pairs.select(F.col("v").alias("id")))
                 .distinct()
-                .join(labels, "id", "left_anti")
-                .withColumn("label", F.col("id"))
+                .join(self.labels, "id", "left_anti")
             )
-            labels = labels.unionByName(new_ids).localCheckpoint()
-            # Scale discipline: the merge loop must never touch (let
-            # alone broadcast) the full O(nv) label table.  Only the
-            # delta's endpoints can trigger merges, and merging is a
-            # pure label-level operation — so restrict the loop to the
-            # labels of touched vertices (O(|delta|)), and apply ONE
-            # composed original-label → final-label remap to the full
-            # table afterwards.  At 1000 executors the big table is
-            # read twice (semi-join + final remap join), never
-            # collected or broadcast.
-            touched = delta.select(F.col("u").alias("id")).distinct()
-            sub = labels.join(touched, "id", "left_semi").localCheckpoint()
-            orig = sub  # id → pre-merge label, anchors the composed remap
-            at_fixpoint = False
-            for _ in range(20):
-                l_u = sub.withColumnRenamed("id", "u").withColumnRenamed(
-                    "label", "lu"
-                )
-                l_v = sub.withColumnRenamed("id", "v").withColumnRenamed(
-                    "label", "lv"
-                )
-                moves = (
-                    delta.join(F.broadcast(l_u), "u")
-                    .join(F.broadcast(l_v), "v")
-                    .filter(F.col("lu") != F.col("lv"))
-                )
-                if moves.limit(1).count() == 0:
-                    at_fixpoint = True
-                    break
-                # merge: everything labeled max(lu,lv) -> min(lu,lv)
-                remap = (
-                    moves.select(
-                        F.greatest("lu", "lv").alias("from_label"),
-                        F.least("lu", "lv").alias("to_label"),
-                    )
-                    .groupBy("from_label")
-                    .agg(F.min("to_label").alias("to_label"))
-                ).localCheckpoint()
-                # Pointer-jump the remap to transitive closure before
-                # applying it: a→b, b→c becomes a→c, c stays, so a
-                # chain of k merging components collapses in O(log k)
-                # outer rounds instead of one hop per round.  The remap
-                # table is O(|delta|) — the self-joins are broadcasts.
-                for _ in range(6):
-                    nxt = remap.withColumnRenamed(
-                        "from_label", "j_from"
-                    ).withColumnRenamed("to_label", "j_to")
-                    jumped = (
-                        remap.join(
-                            F.broadcast(nxt),
-                            remap.to_label == nxt.j_from,
-                            "left",
-                        )
-                        .select(
-                            "from_label",
-                            F.coalesce("j_to", "to_label").alias("to_label"),
-                        )
-                        .localCheckpoint()
-                    )
-                    changed = (
-                        jumped.subtract(remap).limit(1).count() > 0
-                    )
-                    remap = jumped
-                    if not changed:
-                        break
-                sub = (
-                    sub.join(
-                        F.broadcast(remap),
-                        sub.label == remap.from_label,
-                        "left",
-                    )
-                    .select(
-                        "id",
-                        F.coalesce("to_label", "label").alias("label"),
-                    )
-                    .localCheckpoint()
-                )
-            if not at_fixpoint:
-                # Safety net (ADVICE r2): a pathological batch that
-                # still has cross-label delta edges after 20 rounds
-                # means the composed remap below would be built on a
-                # non-fixpoint state — fall back to the always-correct
-                # full recompute rather than publish wrong labels.
-                self.labels = connected_components(edges)
-                store.publish(self.name, self.labels)
-                return
-            # Label-level remaps hit every vertex sharing a label
-            # identically, so (pre-merge label → post-merge label) is a
-            # well-defined function; the loop ran to fixpoint, so it
-            # has no chains.  |remap| ≤ |delta| — broadcastable by
-            # construction.
-            final_remap = (
-                orig.withColumnRenamed("label", "from_label")
-                .join(sub.withColumnRenamed("label", "to_label"), "id")
-                .select("from_label", "to_label")
-                .filter(F.col("from_label") != F.col("to_label"))
-                .distinct()
-            )
-            labels = (
-                labels.join(
-                    F.broadcast(final_remap),
-                    labels.label == final_remap.from_label,
-                    "left",
-                )
-                .select("id", F.coalesce("to_label", "label").alias("label"))
-                .localCheckpoint()
-            )
-            self.labels = labels
+            labels = self.labels.unionByName(
+                new_ids.withColumn("label", F.col("id"))
+            ).localCheckpoint()
+            self.labels = _merge_components(labels, pairs).localCheckpoint()
         store.publish(self.name, self.labels)
+
+
+def _merge_components(labels: DataFrame, pairs: DataFrame) -> DataFrame:
+    """``labels (id, label)`` after inserting the edges ``pairs (u, v)``,
+    whose endpoints must all be in ``labels``.  Inserts can only merge
+    components: each pair collapses to its representative label pair
+    ``(lu, lv)``, the CC kernel runs on that O(|pairs|)-row label
+    graph, and the table is relabelled through its result in one
+    broadcast join.  Labels stay the component's min vertex id."""
+    lu = labels.select(F.col("id").alias("u"), F.col("label").alias("lu"))
+    lv = labels.select(F.col("id").alias("v"), F.col("label").alias("lv"))
+    # checkpointed: the kernel reads its input twice (count, then rounds)
+    rep = (
+        pairs.join(lu, "u")
+        .join(lv, "v")
+        .filter(F.col("lu") != F.col("lv"))
+        .select(F.col("lu").alias("src"), F.col("lv").alias("dst"))
+        .localCheckpoint()
+    )
+    merged = connected_components(
+        rep.unionAll(rep.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    ).select(F.col("id").alias("label"), F.col("label").alias("merged"))
+    return labels.join(F.broadcast(merged), "label", "left").select(
+        "id", F.coalesce("merged", "label").alias("label")
+    )
 
 
 class IncrementalPageRank(BatchAlg):
@@ -1993,13 +1917,13 @@ def streaming_retention_decisions(
        table (new×old) and itself (new×new) — candidates verified by
        signature agreement ≥ ``min_agree`` (Broder estimator), the
        one-pass batch twin's exact semantics;
-    3. incremental component merge: new duplicate edges collapse to
-       REPRESENTATIVE edges through the current label table, the CC
-       kernel runs on that O(|new pairs|) rep graph only, and the
-       label table relabels through the result — min-label
-       invariant preserved, so a cluster's label IS its canonical
-       min doc id (the insert fast path of ``IncrementalComponents``,
-       specialized to an insert-only pair stream);
+    3. incremental component merge (:func:`_merge_components`, the
+       insert path of ``IncrementalComponents``): new duplicate edges
+       collapse to REPRESENTATIVE label pairs through the current
+       label table, the CC kernel runs on that O(|new pairs|) label
+       graph only, and the label table relabels through the result in
+       one broadcast join — min-label invariant preserved, so a
+       cluster's label IS its canonical min doc id;
     4. decisions for the batch's documents against the merged labels.
 
     Scale shape: the persisted state is (signature bands, labels) —
@@ -2015,7 +1939,6 @@ def streaming_retention_decisions(
     Replay parity with the batch twin is pytest-enforced.
     """
     from ..functions.dedup import minhash_signature_rows, sig_band_keys
-    from ..operators.components import connected_components
 
     state: dict = {"bands": None, "labels": None, "decisions": [], "batch_id": 0}
 
@@ -2060,29 +1983,7 @@ def streaming_retention_decisions(
             )
         )
         if not pairs.rdd.isEmpty():
-            # collapse new duplicate edges to representative edges and
-            # re-solve ONLY that tiny graph; relabel through the result
-            la = labels.select(F.col("id").alias("u"), F.col("label").alias("lu"))
-            lb = labels.select(F.col("id").alias("v"), F.col("label").alias("lv"))
-            rep = (
-                pairs.join(la, "u")
-                .join(lb, "v")
-                .filter(F.col("lu") != F.col("lv"))
-                .select(F.col("lu").alias("src"), F.col("lv").alias("dst"))
-            )
-            rep_sym = rep.unionAll(
-                rep.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-            if not rep_sym.rdd.isEmpty():
-                merged = connected_components(rep_sym).select(
-                    F.col("id").alias("label"), F.col("label").alias("_new")
-                )
-                labels = (
-                    labels.join(F.broadcast(merged), "label", "left")
-                    .select(
-                        "id", F.coalesce("_new", F.col("label")).alias("label")
-                    )
-                )
+            labels = _merge_components(labels, pairs)
         labels = labels.localCheckpoint()
         sizes = labels.groupBy("label").agg(F.count("*").alias("n"))
         decisions = (

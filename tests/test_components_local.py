@@ -94,21 +94,26 @@ def test_local_bfs_max_depth_and_missing_source(spark, multi_component_edges, mo
 def test_distributed_cc_without_jump_runs_many_chunks(
     spark, multi_component_edges, monkeypatch, fired
 ):
-    """No pointer jump: the 40-hop chain needs ~40 semi-naive rounds,
-    i.e. ten 4-round chunks, each ending with vertices still active."""
-    fast = {
-        (r["id"], r["label"])
-        for r in compmod.connected_components(multi_component_edges).collect()
-    }
+    """A loop that nothing shortcuts: forced BFS from 600 over the
+    40-hop chain runs ten 4-round chunks, each ending with vertices
+    still active, then one that leaves none, and answers like the
+    single-task path."""
+    fast = {(r["id"], r["dist"]) for r in bfsmod.bfs(multi_component_edges, 600).collect()}
+    active = []
+    observed = util.observed_checkpoint
+
+    def spy(df, *metrics):
+        df, r = observed(df, *metrics)
+        if "m" in r:
+            active.append(r["m"])
+        return df, r
+
+    monkeypatch.setattr(util, "observed_checkpoint", spy)
     monkeypatch.setattr(util, "LOCAL_NE_MAX", 0)
-    slow = {
-        (r["id"], r["label"])
-        for r in compmod.connected_components(
-            multi_component_edges, pointer_jump=False
-        ).collect()
-    }
-    assert fired("components") is False
+    slow = {(r["id"], r["dist"]) for r in bfsmod.bfs(multi_component_edges, 600).collect()}
+    assert fired("bfs") is False
     assert fast == slow
+    assert len(active) == 11 and min(active[:10]) > 0 and active[10] == 0
 
 
 def test_distributed_bfs_max_depth_mid_chunk(spark, multi_component_edges, monkeypatch, fired):
@@ -138,15 +143,13 @@ def test_distributed_bfs_source_past_int32(spark, multi_component_edges, monkeyp
 def test_shuffled_state_loops_match_single_task(spark, multi_component_edges, monkeypatch, fired):
     """Forcing the broadcast threshold to 0 runs the one semi-naive
     loop of CC and of BFS with a shuffled state, which must answer like
-    the single-task path: CC with and without pointer jumping (the
-    40-hop chain then stops on the active count after many chunks),
-    BFS with a 6-level cut inside 4-level checkpoints, a source without
-    edges and a source past int32."""
+    the single-task path: CC, BFS with a 6-level cut inside 4-level
+    checkpoints, a source without edges and a source past int32."""
 
-    def cc(**kw):
+    def cc():
         return {
             (r["id"], r["label"])
-            for r in compmod.connected_components(multi_component_edges, **kw).collect()
+            for r in compmod.connected_components(multi_component_edges).collect()
         }
 
     def levels(source, **kw):
@@ -158,7 +161,6 @@ def test_shuffled_state_loops_match_single_task(spark, multi_component_edges, mo
     monkeypatch.setattr(util, "BROADCAST_STATE_MAX_ROWS", 0)
     assert cc() == want_cc
     assert fired("components") is False
-    assert cc(pointer_jump=False) == want_cc
     assert levels(600, max_depth=6) == want_bfs
     assert fired("bfs") is False
     assert levels(99999) == {(99999, 0)}

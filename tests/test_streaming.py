@@ -4,13 +4,17 @@ structured streaming foreachBatch, windowed aggregation."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from graphdb_testing_spark.operators import util
 from graphdb_testing_spark.operators.components import component_count, connected_components
 from graphdb_testing_spark.operators.updates import apply_actions
 from graphdb_testing_spark.sources import rmat
 from graphdb_testing_spark.streaming.workflow import (
     ActionStreamWorkflow,
+    BatchAlg,
     IncrementalComponents,
     IncrementalTriangles,
     run_structured_stream,
@@ -128,9 +132,8 @@ def test_incremental_components_vertex_vanishes_on_full_delete(spark):
 
 def test_incremental_components_long_insert_chain_converges(spark):
     # 30 singleton-edge components chained into ONE by a single
-    # insert-only batch: one-hop-per-round merging would need ~30
-    # rounds (> the 20-round cap) — the pointer-jumped remap plus the
-    # non-fixpoint fallback (ADVICE r2) must still produce exact labels
+    # insert-only batch: the batch's 29 representative label pairs form
+    # a 30-label path, which the CC kernel must merge to one exact label
     base = _edges(
         spark,
         [(2 * i + d, 2 * i + 1 - d, 1) for i in range(30) for d in (0, 1)],
@@ -147,6 +150,74 @@ def test_incremental_components_long_insert_chain_converges(spark):
     assert {(r.id, r.label) for r in labels.collect()} == {
         (r.id, r.label) for r in full.collect()
     }
+
+
+@pytest.mark.parametrize(
+    "action, want",
+    [
+        # a weight-0 insert adds no edge: 2-3 is no bridge
+        ((0, 2, 3, 0), {1: 1, 2: 1, 3: 3, 4: 3}),
+        # a weight -1 insert drops the weight-1 edge 3-4 with its ends
+        ((0, 3, 4, -1), {1: 1, 2: 1}),
+    ],
+    ids=["weight0_bridge", "weight_minus1_removal"],
+)
+def test_incremental_components_nonpositive_insert_matches_recompute(spark, action, want):
+    base = _edges(spark, [(1, 2, 1), (2, 1, 1), (3, 4, 1), (4, 3, 1)])
+    wf = ActionStreamWorkflow(base, algs=[IncrementalComponents()])
+    wf.run(_actions(spark, [action]), batch_size=10)
+    got = {r.id: r.label for r in wf.store.get("components").collect()}
+    assert got == {r.id: r.label for r in connected_components(wf.edges).collect()} == want
+
+
+class _RecomputeCheck(BatchAlg):
+    """Asserts after every batch that the published components equal a
+    recompute on the merged edge table."""
+
+    def after_batch(self, edges, batch, store):
+        got = {(r.id, r.label) for r in store.get("components").collect()}
+        assert got == {(r.id, r.label) for r in connected_components(edges).collect()}
+
+
+_pair = st.tuples(st.integers(0, 7), st.integers(0, 7)).filter(lambda p: p[0] != p[1])
+# (delete?, u, v, weight) over ids 0..9: 8 and 9 are new vertices, and
+# u == v is a self-loop; half the batches insert positive weights only
+_action = st.tuples(
+    st.booleans(), st.integers(0, 9), st.integers(0, 9), st.sampled_from([-1, 0, 1, 2])
+)
+_insert = st.tuples(st.just(False), st.integers(0, 9), st.integers(0, 9), st.sampled_from([1, 2]))
+_batch = st.lists(_insert, min_size=1, max_size=3) | st.lists(_action, min_size=1, max_size=3)
+
+
+@pytest.mark.parametrize("ne_max", [util.LOCAL_NE_MAX, 0])
+@settings(
+    max_examples=6,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    base=st.lists(_pair, min_size=1, max_size=8),
+    batches=st.lists(_batch, min_size=1, max_size=2),
+)
+def test_incremental_components_random_batches_match_recompute(
+    spark, monkeypatch, ne_max, base, batches
+):
+    """Random batches mixing inserts of weight -1, 0, 1 and 2, deletes,
+    self-loops and new vertices, on both sides of the CC kernel's
+    single-task guard."""
+    monkeypatch.setattr(util, "LOCAL_NE_MAX", ne_max)
+    pairs = {(min(p), max(p)) for p in base}
+    edges = _edges(spark, [(u, v, 1) for p in pairs for u, v in (p, p[::-1])])
+    acts = _actions(
+        spark,
+        [
+            (3 * b + i, ~u, ~v, w) if delete else (3 * b + i, u, v, w)
+            for b, batch in enumerate(batches)
+            for i, (delete, u, v, w) in enumerate(batch)
+        ],
+    )
+    wf = ActionStreamWorkflow(edges, algs=[IncrementalComponents(), _RecomputeCheck()])
+    wf.run(acts, batch_size=3)
 
 
 def test_incremental_triangles_published_per_batch(spark, bowtie_graph):
