@@ -31,29 +31,39 @@ folded into the ``plus``.  Both semirings are selective and
 idempotent, so this gives the same values after exactly ``r`` rounds
 as relaxing from every vertex: the bounded kernels stay bit-identical
 to their fixed-unroll SQL oracles, and a round (or chunk) that changes
-nothing ends the loop early.  Sources keep their row even without
-edges, as the oracles' ``UNION ALL`` carries the previous round
-forward.  Per-level sizes (``test.c:226-227``) come from
-:func:`bfs_levels`.
+nothing ends the loop early.  Per-level sizes (``test.c:226-227``)
+come from :func:`bfs_levels`.
+
+The distributed side reads its set-up from the edge table's layout
+(:func:`~graphdb_testing_spark.operators.util.layout`), built once per
+DataFrame and shared with CC and PageRank: the edge count, the ids and
+``nv``, the int32 key, and the self-loop relation in edge direction —
+CC's relation, or its weighted twin for :func:`sssp_weighted` and
+:func:`widest_path`.  The relation holds no per-call row, so a source
+without edges is not in it: it keeps its seed row through a per-call
+union with the seeds missing from the final state, as the oracles'
+``UNION ALL`` carries the previous round forward.  The missing seeds
+are read from the chunk checkpoint jobs (an observed metric), not a
+job of their own.  A root outside the ids' range has no edge, so it
+never widens the int32 key.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .util import (
     counted,
     fixpoint,
     iter_partitions,
+    layout,
     map_single_task,
     np_edges,
     np_fixpoint,
-    self_loop_relation,
     semiring_round,
     single_task,
     state_hint,
-    vertex_ids,
 )
 
 
@@ -133,8 +143,9 @@ def _semiring_paths(
     ``(root, id)``: all roots advance in one state of at most
     |roots| × nv rows.  A root without edges keeps its row.
 
-    Counts ``edges`` and asks the ``family`` guard
-    (:func:`~graphdb_testing_spark.operators.util.single_task`), then
+    Asks the ``family`` guard
+    (:func:`~graphdb_testing_spark.operators.util.single_task`) with
+    the edge count of the layout, then
     runs the NumPy loop
     (:func:`~graphdb_testing_spark.operators.util.np_fixpoint`, one
     per root) in one task, or the semiring rounds
@@ -143,7 +154,8 @@ def _semiring_paths(
     ``([root,] id, col)``, ids as long."""
     weighted = step == "wgt"
     e = edges.select("src", "dst", *(["wgt"] if weighted else []))
-    ne = edges.count()
+    lay = layout(edges)
+    ne = lay.ne
     vtype = "long" if weighted else "int"
     cols = ["root", "id", col] if rooted else ["id", col]
     schema = ", ".join(f"{c} {vtype if c == col else 'long'}" for c in cols)
@@ -182,25 +194,40 @@ def _semiring_paths(
     spark = e.sparkSession
     if not roots:
         return spark.createDataFrame([], schema)
-    rel_edges = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), *e.columns[2:])
-    ids, nv, key = vertex_ids(rel_edges, also=tuple(roots))
+    nv, key = lay.nv, lay.key
     ns = nv * len(roots) if rooted else nv
-    rel = self_loop_relation(rel_edges, ids, key, ne, ns, sources=tuple(roots))
+    rel = lay.loops(ns, weighted)
     keys = ("root", "id") if rooted else ("id",)
+    # only a root in the ids' range can have edges (and fits the key)
+    inside = [r for r in roots if lay.covers(r)]
     # seed rows as data: a literal id would fold into the first
     # round's join condition, leaving it no equi-key (a nested-loop join)
     seeds = spark.createDataFrame(
-        [(*([r] if rooted else []), r, init, True) for r in roots],
+        [(*([r] if rooted else []), r, init, True) for r in inside],
         ", ".join([*(f"{k} {key}" for k in keys), f"{col} {vtype}", "active boolean"]),
     )
     by_edge = F.col("wgt") if weighted else F.lit(step)
     times = (lambda v: v + by_edge) if plus == "min" else (lambda v: F.least(v, by_edge))
+    own = F.col("root") == F.col("id") if rooted else F.col("id").isin(inside)
+    seen: list[Observation] = []
+
+    def watch(st: DataFrame, _) -> DataFrame:
+        # the roots whose own row is still in the state, observed in
+        # the chunk's checkpoint job
+        seen.append(Observation())
+        return st.observe(seen[-1], F.collect_set(F.when(own, F.col("id"))).alias("roots"))
+
     state = fixpoint(
-        lambda st: semiring_round(rel, st, ns, col, times, plus, keys), seeds, max_rounds
+        lambda st: semiring_round(rel, st, ns, col, times, plus, keys), seeds, max_rounds, watch
     )
-    rel.unpersist()
-    ids.unpersist()
-    return state.select(*(F.col(c).cast("long").alias(c) for c in cols[:-1]), col)
+    kept = set(seen[-1].get["roots"]) if seen else set(inside)
+    out = state.select(*(F.col(c).cast("long").alias(c) for c in cols[:-1]), col)
+    lost = [r for r in dict.fromkeys(roots) if r not in kept]
+    if lost:
+        out = out.unionByName(
+            spark.createDataFrame([(*([r] if rooted else []), r, init) for r in lost], schema)
+        )
+    return out
 
 
 def bfs(edges: DataFrame, source: int, max_depth: int = 100) -> DataFrame:

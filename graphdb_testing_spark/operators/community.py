@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .util import map_single_task, np_edges, single_task, state_hint
+from .util import fresh_checkpoint, map_single_task, np_edges, single_task, state_hint
 
 
 def _local_agglomeration(edges: DataFrame, max_levels: int) -> DataFrame:
@@ -132,20 +132,6 @@ def _score_edges(edges: DataFrame, nv: int | None = None) -> DataFrame:
     )
 
 
-def _checkpoint(df: DataFrame) -> DataFrame:
-    """``localCheckpoint`` a table the level loop carries (``cur``,
-    ``mapping``) and rebuild it from its RDD, so it keeps no size
-    estimate.  A checkpoint keeps its plan's estimate, and Spark sizes
-    a join as the product of its sides; each level joins ``cur`` with
-    tables derived from ``cur``, so a kept estimate compounds level
-    after level until planning multiplies numbers thousands of bits
-    long (ten levels on an 80-vertex graph: 658 s with the kept
-    estimates, 12.5 s without, 4-vCPU VM)."""
-    jdf = df.localCheckpoint()._jdf
-    fresh = jdf.sparkSession().createDataFrame(jdf.rdd(), jdf.schema())
-    return DataFrame(fresh, df.sparkSession)
-
-
 def community_agglomeration(
     edges: DataFrame, max_levels: int = 10, min_score_filter: bool = True
 ) -> DataFrame:
@@ -164,11 +150,11 @@ def community_agglomeration(
         # deterministic variant — see _local_agglomeration; the
         # mean-filter path and cluster-scale graphs run the loop below
         return _local_agglomeration(edges, max_levels)
-    mapping = _checkpoint(
+    mapping = fresh_checkpoint(
         edges.select(F.col("src").alias("id")).distinct().withColumn("community", F.col("id"))
     )
     nv = mapping.count()
-    cur = _checkpoint(edges.select("src", "dst", "wgt"))
+    cur = fresh_checkpoint(edges.select("src", "dst", "wgt"))
 
     for _ in range(max_levels):
         # only positive modularity gain contracts — the agglomeration
@@ -218,11 +204,11 @@ def community_agglomeration(
         # keep self-loops: they carry the merged community's internal
         # weight, preserving total volume across levels
         cur = apply_relabel(apply_relabel(cur, "src"), "dst")
-        cur = _checkpoint(cur.groupBy("src", "dst").agg(F.sum("wgt").alias("wgt")))
+        cur = fresh_checkpoint(cur.groupBy("src", "dst").agg(F.sum("wgt").alias("wgt")))
         r = relabel.withColumnRenamed("id", "community").withColumnRenamed(
             "new_id", "new_comm"
         )
-        mapping = _checkpoint(
+        mapping = fresh_checkpoint(
             mapping.join(state_hint(r, n_matches), "community", "left").select(
                 "id", F.coalesce("new_comm", "community").alias("community")
             )

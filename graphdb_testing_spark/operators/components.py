@@ -19,14 +19,23 @@ positions, with the jump to closure after every round; above it, as
 the distributed rounds below.  Both are semi-naive and reach the same
 min-id labels.
 
-* One round = ``relation ⋈ labels`` on ``dst`` → ``groupBy(src).min``
-  over the constant relation ``edges ∪ self-loops``; the self-loop row
-  carries a vertex's own label, so the label state is referenced once
-  per round (:func:`~graphdb_testing_spark.operators.util.semiring_round`
-  with ``min`` and ``+ 0``).
-  When the labels are broadcast, the relation is hash-partitioned on
-  ``src`` and persisted once, so a round is one narrow stage with no
-  exchange (:func:`~graphdb_testing_spark.operators.util.round_layout`).
+* The set-up comes from the edge table's layout
+  (:func:`~graphdb_testing_spark.operators.util.layout`), built once
+  per DataFrame and shared with BFS and PageRank: the edge count for
+  the guard, the checkpointed ids (the initial labels), ``nv``, the
+  int32 key, and the constant relation ``edges ∪ self-loops`` in edge
+  direction — the relation BFS relaxes too.  On the required symmetric
+  table the min-label fixpoint does not depend on the direction; both
+  executors propagate along it, so they agree on any closed table.
+  A second call on the same DataFrame starts at its first round.
+* One round = ``relation ⋈ labels`` on the sender → ``groupBy``
+  receiver ``.min``; the self-loop row carries a vertex's own label,
+  so the label state is referenced once per round
+  (:func:`~graphdb_testing_spark.operators.util.semiring_round` with
+  ``min`` and ``+ 0``).  When the labels are broadcast, the relation
+  is hash-partitioned on the receiver and persisted once, so a round
+  is one narrow stage with no exchange
+  (:func:`~graphdb_testing_spark.operators.util.round_layout`).
 * Semi-naive: the state carries an ``active`` flag (label dropped in
   the last round), a round keeps only self-loop rows and rows from
   active senders — the same integer fixpoint from fewer joined rows —
@@ -35,6 +44,10 @@ min-id labels.
   serves broadcast and shuffled labels alike.
 * Pointer-jumping (labels self-join) once per chunk halves the round
   count on high-diameter graphs, same as the reference's jump step.
+  It joins labels rebuilt without a size estimate
+  (:func:`~graphdb_testing_spark.operators.util.fresh_checkpoint`): a
+  self-join of a checkpoint that kept its estimate would square it
+  every chunk.
 * ``localCheckpoint`` every ``util.CHUNK_ROUNDS`` rounds truncates
   lineage, in the one chunk loop of every fixpoint kernel
   (:func:`~graphdb_testing_spark.operators.util.fixpoint`; the
@@ -49,14 +62,14 @@ from pyspark.sql import functions as F
 
 from .util import (
     fixpoint,
+    fresh_checkpoint,
+    layout,
     map_single_task,
     np_edges,
     np_fixpoint,
-    self_loop_relation,
     semiring_round,
     single_task,
     state_hint,
-    vertex_ids,
 )
 
 
@@ -64,7 +77,8 @@ def _local_components(e: DataFrame) -> DataFrame:
     """Single-Arrow-task min-label fixpoint over a bounded-size
     symmetric edge table: the ``(min, + 0)`` rounds of
     :func:`~graphdb_testing_spark.operators.util.np_fixpoint` on vertex
-    positions, with a full pointer-jump closure after each round.  The
+    positions, along the edge direction like the distributed rounds,
+    with a full pointer-jump closure after each round.  The
     fixpoint (label = component min id) is structurally determined, so
     the output is bit-identical to the DataFrame loop's."""
 
@@ -74,7 +88,7 @@ def _local_components(e: DataFrame) -> DataFrame:
 
         ids, si, di = np_edges(batches)
         lab = np_fixpoint(
-            si, di, np.arange(ids.size), lambda v, e: v, np.minimum, ids.size, after_round=_closure
+            di, si, np.arange(ids.size), lambda v, e: v, np.minimum, ids.size, after_round=_closure
         )
         yield pd.DataFrame({"id": ids, "label": ids[lab]})
 
@@ -118,17 +132,17 @@ def connected_components(edges: DataFrame) -> DataFrame:
     vertex ⇔ fixpoint.  Ids that all fit int32 run the loop on int
     keys; the output is cast back to the input type.
     """
-    ne = edges.count()
-    if single_task("components", ne):
+    lay = layout(edges)
+    if single_task("components", lay.ne):
         # single-task side: the per-round cost at sf0.1 is stage
         # scheduling, not compute.  The fixpoint is the same min-id
         # labeling either way (the distributed loop's 100-round bound
         # is a safety valve never reached on a graph this small)
         return _local_components(edges.select("src", "dst"))
     id_type = edges.schema["src"].dataType.simpleString()
-    ids, nv, key = vertex_ids(edges)
-    rel = self_loop_relation(edges.select("src", "dst"), ids, key, ne, nv)
-    labels = ids.select(
+    nv, key = lay.nv, lay.key
+    rel = lay.loops(nv)
+    labels = lay.degrees.select(
         F.col("id").cast(key).alias("id"),
         F.col("id").cast(key).alias("label"),
         F.lit(True).alias("active"),
@@ -137,10 +151,8 @@ def connected_components(edges: DataFrame) -> DataFrame:
         lambda st: semiring_round(rel, st, nv, "label", lambda v: v + 0),
         labels,
         100,
-        lambda st, _: _pointer_jump(st.localCheckpoint(), nv),
+        lambda st, _: _pointer_jump(fresh_checkpoint(st), nv),
     )
-    ids.unpersist()
-    rel.unpersist()
     return labels.select(
         F.col("id").cast(id_type).alias("id"),
         F.col("label").cast(id_type).alias("label"),

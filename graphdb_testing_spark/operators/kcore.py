@@ -9,8 +9,10 @@ Spark-first design: both distributed kernels run in the one chunk loop
 of every fixpoint kernel
 (:func:`~graphdb_testing_spark.operators.util.fixpoint`) over the
 constant relation ``edges ∪ self-loops``
-(:func:`~graphdb_testing_spark.operators.util.self_loop_relation`),
-whose self-loop row carries a vertex's own state into its round — the
+(:func:`~graphdb_testing_spark.operators.util.self_loop_relation`;
+its ids, ``nv``, key and initial degrees come from the edge table's
+layout, :func:`~graphdb_testing_spark.operators.util.layout`), whose
+self-loop row carries a vertex's own state into its round — the
 state is referenced once per round, so a chunk of
 ``util.CHUNK_ROUNDS`` rounds is one job, and the loop stops at the
 chunk that leaves no vertex active.  Every edge row counts toward the
@@ -26,12 +28,12 @@ from pyspark.sql import functions as F
 
 from .util import (
     fixpoint,
+    layout,
     map_single_task,
     np_edges,
     self_loop_relation,
     single_task,
     state_hint,
-    vertex_ids,
 )
 
 
@@ -100,16 +102,21 @@ def _local_core_numbers(e: DataFrame, max_rounds: int) -> DataFrame:
     return map_single_task(e, run, "id long, core int")
 
 
-def _degree_relation(e: DataFrame, ne: int):
-    """``(rel, ids, nv, deg)`` of a distributed k-core loop: ``rel`` the
-    self-loop relation of ``e`` with ``wgt`` 1 on every edge row and
-    NULL on the added self-loops, ``ids`` its checkpointed vertex ids
-    (the caller unpersists both), and ``deg`` the lazy ``(id, deg)``
-    row count per vertex, keyed like ``rel``."""
-    ids, nv, key = vertex_ids(e)
-    rel = self_loop_relation(e.select("src", "dst", F.lit(1).alias("wgt")), ids, key, ne, nv)
-    deg = e.groupBy(F.col("src").cast(key).alias("id")).agg(F.count(F.lit(1)).alias("deg"))
-    return rel, ids, nv, deg
+def _degree_relation(edges: DataFrame):
+    """``(rel, nv, deg)`` of a distributed k-core loop, its ids, ``nv``
+    and key from the edge table's layout
+    (:func:`~graphdb_testing_spark.operators.util.layout`): ``rel`` the
+    self-loop relation of ``edges`` with ``wgt`` 1 on every edge row and
+    NULL on the added self-loops (the caller unpersists it), and ``deg``
+    the layout's ``(id, deg)`` row count per vertex, keyed like
+    ``rel``."""
+    lay = layout(edges)
+    nv, key = lay.nv, lay.key
+    rel = self_loop_relation(
+        edges.select("src", "dst", F.lit(1).alias("wgt")), lay.degrees, key, lay.ne, nv
+    )
+    deg = lay.degrees.select(F.col("id").cast(key).alias("id"), F.col("degree").alias("deg"))
+    return rel, nv, deg
 
 
 def kcore_vertices(
@@ -130,13 +137,12 @@ def kcore_vertices(
     not end the peel removes a vertex, so ``nv`` rounds bound it.
     """
     e = edges.select("src", "dst")
-    ne = e.count()
-    if single_task("kcore_vertices", ne, k >= 1):
+    if single_task("kcore_vertices", layout(edges).ne, k >= 1):
         # guarded single-task fast path (round-10): each peel round at
         # sf0.1 costs stage scheduling + a checkpoint, not compute;
         # identical round schedule, cluster-scale graphs peel below
         return _local_kcore_vertices(e, k, max_rounds)
-    rel, ids, nv, deg = _degree_relation(e, ne)
+    rel, nv, deg = _degree_relation(edges)
 
     def peel(state: DataFrame) -> DataFrame:
         loop = F.col("wgt").isNull()
@@ -163,7 +169,6 @@ def kcore_vertices(
         nv if max_rounds is None else max_rounds,
     )
     rel.unpersist()
-    ids.unpersist()
     return state.where("alive").select(F.col("id").cast(edges.schema["src"].dataType).alias("id"))
 
 
@@ -192,13 +197,12 @@ def core_numbers(edges: DataFrame, max_rounds: int = 100) -> DataFrame:
     ``cs[i] ≥ i+1`` via a JVM-side higher-order ``filter``.
     """
     e = edges.select("src", "dst")
-    ne = e.count()
-    if single_task("core_numbers", ne):
+    if single_task("core_numbers", layout(edges).ne):
         # guarded single-task fast path (round-10): the sf0.1 fixpoint
         # is 25 h-index rounds of ~0.4s scheduling each; exact integer
         # state either way
         return _local_core_numbers(e, max_rounds)
-    rel, ids, nv, deg = _degree_relation(e, ne)
+    rel, nv, deg = _degree_relation(edges)
 
     def h_index(state: DataFrame) -> DataFrame:
         loop = F.col("wgt").isNull()
@@ -221,5 +225,4 @@ def core_numbers(edges: DataFrame, max_rounds: int = 100) -> DataFrame:
         max_rounds,
     )
     rel.unpersist()
-    ids.unpersist()
     return state.select(F.col("id").cast(edges.schema["src"].dataType).alias("id"), "core")

@@ -47,10 +47,19 @@ Spark-first design (the distributed loop)
   edge table is symmetric, so every vertex with degree ≥ 1 receives
   at least one message, and degree-0 vertices don't exist in the
   canonical edge relation.
-* When every id, degree and seed fits int32 (checked in the job that
-  materializes the degree table) the loop runs on int ids — half the
-  key bytes — and casts the output id back.
-* The edge relation is laid out by
+* The set-up comes from the edge table's layout
+  (:func:`~graphdb_testing_spark.operators.util.layout`), built once
+  per DataFrame and shared with CC and BFS: the edge count for the
+  guard, the checkpointed ``(id, degree)`` table (the initial state,
+  ``nv``, and the int32 test of ids and degrees in its one job), and
+  the rank relation ``(src, dst, deg_src)``, built on its first use and
+  kept: a second call on the same DataFrame starts at its first
+  round.  A seed outside int32 on an int32 graph is no vertex, so it matches
+  none; it does not widen the key.  :func:`weighted_pagerank`'s degree
+  is a weight sum, so it builds its own degree table and relation.
+* When every id and degree fits int32 the loop runs on int ids — half
+  the key bytes — and casts the output id back.
+* The rank relation is laid out by
   :func:`~graphdb_testing_spark.operators.util.round_layout` in
   ``iter_partitions(ne)`` tasks (~250k edge rows each): with a
   broadcast state it is hash-partitioned on ``src`` and persisted, so
@@ -84,6 +93,7 @@ from .util import (
     fixpoint,
     map_single_task,
     np_edges,
+    layout,
     observed_checkpoint,
     round_layout,
     single_task,
@@ -225,7 +235,8 @@ def _pagerank(
     weighted = weight_col is not None
     wgt = [F.col(weight_col).alias("wgt")] if weighted else []
     e = edges.select("src", "dst", *wgt)
-    ne = edges.count()
+    lay = layout(edges)
+    ne = lay.ne
     local = single_task(family, ne)
     if ne == 0:
         return e.select(F.col("src").alias("id"), F.lit(0.0).alias("pr")).limit(0)
@@ -246,53 +257,54 @@ def _pagerank(
         return _local_pagerank(
             e, damping, tol, max_iter, num_iter, init_ranks, seeds, weighted
         )
-    # narrow-id loop (round-11, guide §2.3 "narrower types"): when ids,
-    # seeds AND (unweighted) degrees fit int32 (checked in the job that
-    # materializes the degree table), the loop's (id, dst, deg_src)
-    # bytes halve; rank arithmetic is unchanged and the output id is
-    # cast back.  64-bit hash ids at 100 TB keep the long loop — the
-    # check IS the guard.
-    narrow_cols = ("id",) if weighted else ("id", "degree")
-    wdeg = F.sum("wgt").cast("double") if weighted else F.count("*")
-    deg, nv, narrow = vertex_summary(
-        e.groupBy(F.col("src").alias("id")).agg(wdeg.alias("degree")),
-        *narrow_cols,
-        also=tuple(seeds or ()),
-    )
     id_type = edges.schema["src"].dataType.simpleString()
-    if narrow:
-        as_int = lambda *cs: [F.col(c).cast("int").alias(c) for c in cs]  # noqa: E731
-        # a weighted degree stays double
-        deg = deg.select(*as_int(*narrow_cols), *deg.columns[len(narrow_cols):])
-        e = e.select(*as_int("src", "dst"), *e.columns[2:])
+    if weighted:
+        # the weight sum is not the layout's row count: the weighted
+        # variant keeps its own degree job and relation
+        deg, nv, narrow = vertex_summary(
+            e.groupBy(F.col("src").alias("id")).agg(F.sum("wgt").cast("double").alias("degree")),
+            "id",
+        )
+        key = "int" if narrow else id_type
+    else:
+        deg, nv, key = lay.degrees, lay.nv, lay.key
+    if key == "int":
+        # narrow-id loop (guide §2.3 "narrower types"): the loop's
+        # (id, dst, deg_src) bytes halve; rank arithmetic is unchanged
+        # and the output id is cast back.  A weighted degree stays double
+        deg = deg.select(
+            F.col("id").cast("int").alias("id"),
+            F.col("degree").cast("double" if weighted else "int").alias("degree"),
+        )
+        e = e.select(*(F.col(c).cast("int").alias(c) for c in ("src", "dst")), *e.columns[2:])
         if init_ranks is not None:
             # warm ids outside int32 match no vertex of a narrow graph;
             # drop them before the cast, which would fail or wrap
             init_ranks = init_ranks.where(
                 F.col("id").between(INT32_MIN, INT32_MAX)
-            ).select(*as_int("id"), "pr")
+            ).select(F.col("id").cast("int").alias("id"), "pr")
     if seeds is None:
         n = nv
         share = F.lit
     else:
-        # the seeds join the int32 check above, so this cast is exact
-        in_seed = F.col("id").isin(
-            [F.lit(s).cast("int" if narrow else "bigint") for s in seeds]
-        )
+        # a seed outside the ids' range is no vertex (and may not fit the key)
+        in_seed = F.col("id").isin([F.lit(s).cast(key) for s in seeds if lay.covers(s)])
         # max(.., 1): with no seed no vertex takes this share
         n = max(len(seeds), 1)
         share = lambda x: F.when(in_seed, F.lit(x)).otherwise(F.lit(0.0))  # noqa: E731
     base = share((1.0 - damping) / n)
-    deg_b = state_hint(deg, nv)
 
     # constant relation: edges (+ weight) + wdeg-of-source
-    e2 = round_layout(
-        e.join(deg_b.withColumnRenamed("id", "src"), "src").select(
-            "src", "dst", *e.columns[2:], F.col("degree").alias("deg_src")
-        ),
-        ne,
-        nv,
-    )
+    def ranks() -> DataFrame:
+        return round_layout(
+            e.join(state_hint(deg, nv).withColumnRenamed("id", "src"), "src").select(
+                "src", "dst", *e.columns[2:], F.col("degree").alias("deg_src")
+            ),
+            ne,
+            nv,
+        )
+
+    e2 = ranks() if weighted else lay.relation("ranks", nv, ranks)
     msg = F.col("prd") * F.col("wgt") if weighted else F.col("prd")
 
     # state: (id, prd, degree) with prd = pr / wdeg; degree rides
@@ -352,7 +364,8 @@ def _pagerank(
         F.col("id").cast(id_type).alias("id"),
         (F.col("prd") * F.col("degree")).alias("pr"),
     )
-    e2.unpersist()
+    if weighted:
+        e2.unpersist()
     return out
 
 

@@ -1,8 +1,36 @@
-"""Shared operator helpers."""
+"""Shared operator helpers: the scale guard, the graph layout, and the
+semiring round and chunk loop of every fixpoint kernel.
+
+The graph layout
+----------------
+The distributed CC, BFS, path, PageRank and k-core kernels start from
+the same set-up: the edge count (the guard's input), the vertex ids
+with their count and the int32 test, and a constant relation laid out
+for their rounds.
+:func:`layout` builds it once per edge table and keeps it for as long
+as the caller's DataFrame lives, so CC, BFS and PageRank over one
+table pay it once between them (GraphX's "index reuse", OSDI 2014 §4):
+
+* ``ne`` is counted when the layout is made; the single-task side of a
+  guard needs nothing else.
+* The ``(id, degree)`` table is one observed checkpoint: it gives the
+  ids, ``nv``, and the id and degree bounds of the int32 key test in
+  one job, on first use.
+* The relations (CC's and BFS's self-loop relation, its weighted twin,
+  PageRank's rank relation) are built on first use, one per variant
+  and state regime, and persisted until the DataFrame dies.
+
+The memo is keyed on the DataFrame object, never on its plan: a
+rewritten edge store or a new streaming batch is a new object and
+builds its own layout.
+"""
 
 from __future__ import annotations
 
+import gc
+import weakref
 from contextlib import contextmanager
+from functools import cached_property
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
@@ -59,6 +87,24 @@ def counted(df: DataFrame) -> tuple[DataFrame, int]:
     return df, int(r["n"])
 
 
+def fresh_checkpoint(df: DataFrame) -> DataFrame:
+    """``localCheckpoint`` ``df`` and rebuild it from its RDD, so it
+    keeps no size estimate.  A checkpoint keeps its plan's estimate, and
+    Spark sizes a join as the product of its sides: a loop that joins a
+    table with tables derived from it (CC's pointer jump, the community
+    levels) compounds the estimate every pass until planning multiplies
+    numbers thousands of bits long (ten community levels on an
+    80-vertex graph: 658 s with the kept estimates, 12.5 s without,
+    4-vCPU VM).  The rebuilt table scans the checkpoint's own rows (a
+    ``LogicalRDD`` has the checkpointed RDD of internal rows), with no
+    conversion to and from ``Row`` objects: that conversion's code
+    generation made a first CC call in a fresh process 2 s slower."""
+    jdf = df.localCheckpoint()._jdf
+    rows = jdf.queryExecution().analyzed().rdd()
+    fresh = jdf.sparkSession().internalCreateDataFrame(rows, jdf.schema(), False)
+    return DataFrame(fresh, df.sparkSession)
+
+
 def vertex_summary(
     df: DataFrame, *cols: str, also: tuple[int, ...] = ()
 ) -> tuple[DataFrame, int, bool]:
@@ -108,8 +154,8 @@ def round_layout(rel: DataFrame, ne: int, nv: int) -> DataFrame:
     keeps it), so the ``groupBy(src)`` needs no Exchange: a round is
     one narrow stage plus the state broadcast, one Spark job.  Above
     the threshold the state shuffles anyway and the relation is
-    coalesced to ~250k rows per task and checkpointed.  Callers
-    ``unpersist()`` the result."""
+    coalesced to ~250k rows per task and checkpointed.  Its owner
+    ``unpersist()``s the result (:class:`Layout`, for its relations)."""
     n = iter_partitions(ne)
     if not broadcasts(nv):
         # materialized once: a lazy relation over a derived edge table
@@ -125,38 +171,16 @@ def round_layout(rel: DataFrame, ne: int, nv: int) -> DataFrame:
     return rel
 
 
-def vertex_ids(edges: DataFrame, also: tuple[int, ...] = ()) -> tuple[DataFrame, int, str]:
-    """``(ids, nv, key_type)`` of a symmetric edge table: ``ids`` is its
-    checkpointed distinct ``src`` as ``id`` (a symmetric table's src
-    covers every vertex), and the checkpoint job itself also gives
-    ``nv`` and the int32 check (``also``, e.g. a source, included):
-    ``key_type`` is ``int`` when the loop can run on narrow ids."""
-    ids, nv, narrow = vertex_summary(
-        edges.select(F.col("src").alias("id")).distinct(), "id", also=also
-    )
-    return ids, nv, "int" if narrow else ids.schema["id"].dataType.simpleString()
-
-
 def self_loop_relation(
-    edges: DataFrame,
-    ids: DataFrame,
-    key: str,
-    ne: int,
-    nv: int,
-    sources: tuple[int, ...] = (),
+    edges: DataFrame, ids: DataFrame, key: str, ne: int, nv: int
 ) -> DataFrame:
     """The constant relation of the semiring fixpoint loops: ``edges``
     as ``(src, dst[, wgt])`` with ``src`` the receiving and ``dst`` the
-    sending vertex, plus one self-loop per vertex of ``ids`` and one
-    per ``sources`` vertex (so a source without edges keeps its row),
-    keyed by ``key`` (see :func:`vertex_ids`) and laid out by
-    :func:`round_layout` for an ``nv``-row state.  A weighted
-    relation's self-loops carry a NULL ``wgt``, which tells them apart
-    from a real ``(u, u)`` edge."""
-    spark = ids.sparkSession
+    sending vertex, plus one self-loop per vertex of ``ids`` (column
+    ``id``), keyed by ``key`` and laid out by :func:`round_layout` for
+    an ``nv``-row state.  A weighted relation's self-loops carry a NULL
+    ``wgt``, which tells them apart from a real ``(u, u)`` edge."""
     loops = ids.select(F.col("id").cast(key).alias("src"))
-    for s in sources:
-        loops = loops.unionAll(spark.range(1).select(F.lit(s).cast(key).alias("src")))
     cols = [F.col("src").cast(key).alias("src"), F.col("dst").cast(key).alias("dst")]
     loop_cols = ["src", F.col("src").alias("dst")]
     if "wgt" in edges.columns:
@@ -164,6 +188,130 @@ def self_loop_relation(
         loop_cols.append(F.lit(None).cast(edges.schema["wgt"].dataType).alias("wgt"))
     rel = edges.select(*cols).unionAll(loops.select(*loop_cols))
     return round_layout(rel, ne, nv)
+
+
+class Layout:
+    """The set-up of the distributed graph kernels over one edge table
+    (module docstring).  The table must be closed — every ``dst`` is
+    also a ``src``, as in a symmetric table — so the distinct ``src``
+    are all the vertices."""
+
+    def __init__(self, edges: DataFrame):
+        self.ne = edges.count()
+        # a projection, not the caller's object: the memo must not keep
+        # its own key alive
+        self._edges = edges.select("*")
+        self._relations: dict[tuple, DataFrame] = {}
+
+    @cached_property
+    def _summary(self) -> tuple[DataFrame, dict]:
+        return observed_checkpoint(
+            self._edges.groupBy(F.col("src").alias("id")).agg(
+                F.count(F.lit(1)).alias("degree")
+            ),
+            F.count(F.lit(1)).alias("nv"),
+            F.min("id").alias("lo"),
+            F.max("id").alias("hi"),
+            F.max("degree").alias("top"),
+        )
+
+    @property
+    def degrees(self) -> DataFrame:
+        """The checkpointed ``(id, degree)`` table, ids as in the edges
+        and ``degree`` the row count per ``src``."""
+        return self._summary[0]
+
+    @property
+    def nv(self) -> int:
+        return int(self._summary[1]["nv"])
+
+    def covers(self, v: int) -> bool:
+        """True when ``v`` lies in the ids' range (a vertex outside it
+        has no edge)."""
+        r = self._summary[1]
+        return self.nv > 0 and int(r["lo"]) <= v <= int(r["hi"])
+
+    @cached_property
+    def key(self) -> str:
+        """The id type of the kernels' loops: ``int`` when every id and
+        degree fits int32 (half the key bytes; callers cast their
+        output back), else the ids' own type."""
+        id_type = self.degrees.schema["id"].dataType.simpleString()
+        r = self._summary[1]
+        fits = id_type in ("bigint", "int") and self.nv > 0 and all(
+            INT32_MIN <= int(r[c]) <= INT32_MAX for c in ("lo", "hi", "top")
+        )
+        return "int" if fits else id_type
+
+    def relation(self, variant, ns: int, build) -> DataFrame:
+        """The ``variant`` relation for an ``ns``-row state: ``build()``
+        on first use in each state regime (:func:`round_layout` lays a
+        relation out differently on either side of
+        :data:`BROADCAST_STATE_MAX_ROWS`), then the same DataFrame."""
+        k = (variant, broadcasts(ns))
+        if k not in self._relations:
+            self._relations[k] = build()
+        return self._relations[k]
+
+    def loops(self, ns: int, weighted: bool = False) -> DataFrame:
+        """The :func:`self_loop_relation` of the edges in edge direction
+        (``dst`` receives from ``src``), with ``wgt`` when ``weighted``,
+        for an ``ns``-row state: CC's and the path kernels' rounds."""
+        e = self._edges
+
+        def build():
+            rel_edges = e.select(
+                F.col("dst").alias("src"),
+                F.col("src").alias("dst"),
+                *(["wgt"] if weighted else []),
+            )
+            return self_loop_relation(rel_edges, self.degrees, self.key, self.ne, ns)
+
+        return self.relation(("loops", weighted), ns, build)
+
+    def release(self) -> None:
+        """Unpersist the relations (the DataFrame died)."""
+        _release(self._relations.values())
+        self._relations = {}
+
+
+#: Layouts by the caller's edge DataFrame, by identity.
+_LAYOUTS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+#: Relations of dead layouts not yet unpersisted.
+_DEAD: list[DataFrame] = []
+_collecting = False
+
+
+def _gc_phase(phase: str, _info) -> None:
+    global _collecting
+    _collecting = phase == "start"
+
+
+gc.callbacks.append(_gc_phase)
+
+
+def _release(frames) -> None:
+    """Unpersist ``frames``, unless a cyclic GC pass is running: its
+    finalizers may interrupt a py4j call on this thread (py4j defers
+    its own finalizer calls for the same reason), so they wait for the
+    next :func:`layout` call."""
+    _DEAD.extend(frames)
+    if not _collecting:
+        while _DEAD:
+            _DEAD.pop().unpersist()
+
+
+def layout(edges: DataFrame) -> Layout:
+    """The :class:`Layout` of ``edges``: built on the first call for
+    this DataFrame object, then the same one; what it persisted is
+    unpersisted once the DataFrame is garbage."""
+    _release(())
+    lay = _LAYOUTS.get(edges)
+    if lay is None:
+        lay = _LAYOUTS[edges] = Layout(edges)
+        weakref.finalize(edges, lay.release).atexit = False
+    return lay
 
 
 def semiring_round(
@@ -336,8 +484,7 @@ def np_edges(
     outside it would make ``searchsorted`` scatter updates to the wrong
     vertex (or past the end), so it raises instead.  ``directed``
     tables take ``ids`` from ``src ∪ dst`` with no check.  ``sources``
-    (e.g. a BFS source without edges) join ``ids`` after the check, as
-    in :func:`self_loop_relation`."""
+    (e.g. a BFS source without edges) join ``ids`` after the check."""
     import numpy as np
 
     names = ["src", "dst", *(c for c, _ in cols)]

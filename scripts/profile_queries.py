@@ -9,6 +9,9 @@ Spark jobs and tasks the query ran (build plus a final ``count()``).
 Each query runs under its own job group; its jobs come from the status
 tracker, its tasks are the completed tasks of its stages, each stage
 counted once (a stage an earlier query ran shows up again as skipped).
+Spark keeps a bounded number of job and stage infos; one it has
+already evicted is skipped, and the line and the record count them
+(``evicted``).
 Used to profile the heavier analytics (betweenness, community, core
 numbers) that bench.py does not time per-round, and — with ``--json``
 — to record the quiet-host serial times of the sweep's heaviest
@@ -71,9 +74,12 @@ def main() -> int:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         jobs = tracker.getJobIdsForGroup(f"profile-{name}")
-        stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds} - counted
+        job_infos = [tracker.getJobInfo(j) for j in jobs]
+        stages = {s for info in job_infos if info is not None for s in info.stageIds} - counted
         counted |= stages
-        tasks = sum(tracker.getStageInfo(s).numCompletedTasks for s in stages)
+        stage_infos = [tracker.getStageInfo(s) for s in stages]
+        tasks = sum(info.numCompletedTasks for info in stage_infos if info is not None)
+        evicted = job_infos.count(None) + stage_infos.count(None)
         records.append(
             {
                 "query": name,
@@ -81,10 +87,14 @@ def main() -> int:
                 "rows": n,
                 "jobs": len(jobs),
                 "tasks": tasks,
+                "evicted": evicted,
                 "load1": round(os.getloadavg()[0], 1),
             }
         )
-        print(f"{name}: {dt:.2f}s rows={n} jobs={len(jobs)} tasks={tasks}", flush=True)
+        print(
+            f"{name}: {dt:.2f}s rows={n} jobs={len(jobs)} tasks={tasks} evicted={evicted}",
+            flush=True,
+        )
     if json_out:
         with open(json_out, "w") as f:
             json.dump(

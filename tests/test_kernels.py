@@ -226,6 +226,22 @@ def test_first_path_round_joins_on_an_equi_key(spark, path_graph, distributed, m
         assert "NestedLoopJoin" not in plan and "HashJoin" in plan, plan
 
 
+def _round_plan(edges, seeds, rounds, times):
+    """The executed plan and rows of ``rounds`` semiring rounds from the
+    ``(id, v, active)`` rows ``seeds`` over the self-loop relation of
+    ``edges``' layout with a broadcast state."""
+    from graphdb_testing_spark.operators.util import layout, semiring_round
+
+    lay = layout(edges)
+    rel = lay.loops(lay.nv)
+    assert rel.is_cached and lay.key == "int"
+    state = seeds(lay)
+    for _ in range(rounds):
+        state = semiring_round(rel, state, lay.nv, "v", times)
+    plan = state._jdf.queryExecution().executedPlan().toString()
+    return plan, {(r.id, r.v) for r in state.collect()}
+
+
 def test_broadcast_regime_round_has_no_exchange(spark, bridged_cliques):
     """With a broadcast state, the semi-naive round relation is
     hash-partitioned on ``src`` and persisted, so an unrolled chunk of
@@ -234,27 +250,28 @@ def test_broadcast_regime_round_has_no_exchange(spark, bridged_cliques):
     plan and runs once)."""
     from pyspark.sql import functions as F
 
-    from graphdb_testing_spark.operators.util import (
-        self_loop_relation,
-        semiring_round,
-        vertex_ids,
-    )
+    def labels(lay):
+        return lay.degrees.select(
+            F.col("id").cast(lay.key).alias("id"),
+            F.col("id").cast(lay.key).alias("v"),
+            F.lit(True).alias("active"),
+        )
 
-    ids, nv, key = vertex_ids(bridged_cliques)
-    rel = self_loop_relation(
-        bridged_cliques.select("src", "dst"), ids, key, bridged_cliques.count(), nv
-    )
-    assert rel.is_cached and key == "int"
-    state = ids.select(
-        F.col("id").cast(key).alias("id"),
-        F.col("id").cast(key).alias("label"),
-        F.lit(True).alias("active"),
-    )
-    for _ in range(3):  # vertex 7 is 3 hops from 0
-        state = semiring_round(rel, state, nv, "label", lambda v: v + 0)
-    plan = state._jdf.queryExecution().executedPlan().toString()
+    # vertex 7 is 3 hops from 0
+    plan, rows = _round_plan(bridged_cliques, labels, 3, lambda v: v + 0)
     assert "InMemoryTableScan" in plan and "BroadcastExchange" in plan, plan
     assert "ENSURE_REQUIREMENTS" not in plan, plan
-    assert {(r.id, r.label) for r in state.collect()} == {(v, 0) for v in range(8)}
-    rel.unpersist()
-    ids.unpersist()
+    assert rows == {(v, 0) for v in range(8)}
+
+
+def test_broadcast_regime_bfs_round_has_no_exchange(spark, bridged_cliques):
+    """BFS's twin: its seed rows are data and its relation is CC's, so
+    its rounds plan no Exchange besides the state broadcasts either."""
+
+    def seeds(lay):
+        return spark.createDataFrame([(0, 0, True)], f"id {lay.key}, v int, active boolean")
+
+    plan, rows = _round_plan(bridged_cliques, seeds, 3, lambda v: v + 1)
+    assert "InMemoryTableScan" in plan and "BroadcastExchange" in plan, plan
+    assert "ENSURE_REQUIREMENTS" not in plan, plan
+    assert rows == {(0, 0), (1, 1), (2, 1), (3, 1), (4, 2), (5, 3), (6, 3), (7, 3)}
